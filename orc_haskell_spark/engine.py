@@ -462,10 +462,11 @@ def encode_parquet(spark, path: str, columns: list[str] | None = None,
     ``encode_table`` pays a double conversion the query itself never
     needs: the JVM parquet scan materializes columnar pages into
     InternalRows, ArrowEvalPython re-columnarizes them, and every
-    payload byte crosses the JVM->Python socket. Here the JVM only
-    distributes (file, row_group) split rows — sources.parquet_splits_df,
-    footers read in parallel, pure-metadata shuffle — and pyarrow reads
-    the pages directly into Arrow inside the encoding worker. Zero
+    payload byte crosses the JVM->Python socket. Here the splits are
+    (file, row_group) metadata planned by sources.plan_splits — on the
+    driver, LPT-packed by bytes, one task per bucket, so the job is a
+    single stage whose only Python process is the encoding worker — and
+    pyarrow reads the pages directly into Arrow inside that worker. Zero
     payload crossing, zero row materialization.
 
     Scale notes (100 TB / 1000 executors): splits are row groups, the
@@ -479,10 +480,8 @@ def encode_parquet(spark, path: str, columns: list[str] | None = None,
     """
     from . import sources
 
-    splits = sources.parquet_splits_df(spark, path, ranges=ranges,
-                                       num_partitions=num_partitions,
-                                       files=files)
-    return splits.mapInArrow(
+    plan = sources.plan_splits(spark, path, ranges, num_partitions, files)
+    return plan.map_in_arrow(
         _scan_encode_fn(columns, stripe_rows, stripe_bytes, config,
                         batch_rows, drop_positions=drop_positions,
                         drop_values=drop_values, residual=residual),
@@ -621,14 +620,14 @@ def decode_parquet_to_dir(spark, enc_path: str, out_path: str,
     """
     from . import sources
 
-    splits = sources.parquet_splits_df(spark, enc_path,
-                                       num_partitions=num_partitions)
+    plan = sources.plan_splits(spark, enc_path,
+                               num_partitions=num_partitions)
     sources.guard_export_plan(out_path, {
         "enc_path": enc_path, "columns": columns,
         "prune_ranges": [list(r) for r in prune_ranges or []],
         "compression": compression,
         "num_partitions": num_partitions})
-    return splits.mapInArrow(
+    return plan.map_in_arrow(
         _decode_sink_fn(out_path, columns, compression, prune_ranges),
         DECODE_SUMMARY_DDL)
 

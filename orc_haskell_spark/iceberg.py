@@ -23,7 +23,7 @@ Scale shape: the manifest LIST (one row per manifest, ~KB) is driver
 IO; MANIFESTS fan out to a Spark stage beyond a threshold exactly like
 ``orcfile/planner.py`` does for ORC tails, so planning is never
 O(data-files) serial driver work. Data files are untouched at plan
-time; the surviving file list feeds ``sources.parquet_splits_df`` and
+time; the surviving file list feeds ``sources.plan_splits`` and
 from there every existing scan/encode path.
 
 Row-level deletes (v2) are fully supported on the READ path:
@@ -603,7 +603,7 @@ def plan_scan(table_path: str, snapshot_id: int | None = None,
     Driver reads the manifest LIST (one Avro row per manifest); the
     per-manifest entry reads fan out to a Spark stage when the snapshot
     has >= DISTRIBUTED_MANIFESTS_MIN manifests and a session is given —
-    the same two-mode planning as sources.parquet_splits_df, so a
+    the same two-mode planning as sources.plan_splits, so a
     million-file table never serializes planning on the driver.
 
     Delete files are NEVER pruned by the data predicate (a position

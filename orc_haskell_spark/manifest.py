@@ -335,63 +335,98 @@ def encode_parquet_to_dir(spark, in_path: str, out_path: str,
     """Fused resumable encode job: parquet table -> encoded-stripe files
     + manifest, with ZERO payload bytes crossing the JVM boundary.
 
-    Resume unit is the SPLIT (file, row_group): a re-run anti-joins the
-    split list against the manifest and encodes only what's missing —
-    finer-grained and cheaper than encode_to_dir's hash-partition
-    resume (no row shuffle at all), at the cost of keeping the input
-    layout instead of re-partitioning by key. The manifest write is the
-    commit point; see _fused_sink_fn for the orphan-safety argument.
+    Resume unit is the SPLIT (file, row_group): the driver reads the
+    committed manifest with pyarrow, and ``sources.plan_splits`` drops
+    the splits it already holds BEFORE LPT packing, so a resume is
+    balanced over what is left — finer-grained and cheaper than
+    encode_to_dir's hash-partition resume (no row shuffle at all), at
+    the cost of keeping the input layout instead of re-partitioning by
+    key. A fresh write (in driver planning mode) is ONE Spark job: the
+    sink's mapInArrow plus the manifest write, which is the commit
+    point (see _fused_sink_fn for the orphan-safety argument); a resume
+    with nothing left runs no job at all.
 
-    Returns {splits_total, splits_done_before, splits_encoded}.
+    Returns {splits_total, splits_done_before, splits_encoded} and the
+    driver wall seconds of the three phases: ``plan_s`` (manifest read,
+    config check, split planning), ``encode_s`` (the Spark job) and
+    ``commit_s`` (re-reading the committed manifest for the count).
     """
+    import time
+
+    import pyarrow.compute as pc
     from pyspark.sql import functions as F
 
     from . import sources
 
-    all_splits = sources.parquet_splits_df(spark, in_path,
-                                           num_partitions=num_partitions,
-                                           files=files, ranges=ranges)
-    all_splits.persist()
-    splits = all_splits
+    t0 = time.perf_counter()
     cfg_hash = _config_hash(config, stripe_rows, drop_positions,
                             drop_values, residual)
-    try:
-        m = read_fused_manifest(spark, out_path)
+    done = set()
+    m = _fused_manifest_table(out_path, ["file", "rg", "config_hash"])
+    if m is not None:
         # a resume must not silently mix layouts: stripes from an
         # earlier run with a DIFFERENT config/stripe_rows are already
         # ledgered, so re-encoding under the new config would leave
         # both visible to readers. Refuse loudly instead.
-        other = m.filter(
-            ~F.col("config_hash").eqNullSafe(cfg_hash)).count()
+        other = m.num_rows - m.filter(
+            pc.field("config_hash") == cfg_hash).num_rows
         if other:
             raise ValueError(
                 f"{out_path!r} holds {other} manifest rows encoded "
                 f"under a different config/stripe_rows; resume with "
                 f"the original settings or use a fresh out_path")
-        done_df = m.select("file", "rg").distinct()
-        done_n = done_df.count()
-    except ValueError:
-        raise
-    except Exception:
-        done_df, done_n = None, 0
-    total = splits.count()
-    if done_df is not None:
-        splits = splits.join(F.broadcast(done_df), ["file", "rg"],
-                             "left_anti")
-    mdf = splits.mapInArrow(
-        _fused_sink_fn(out_path, stripe_rows, stripe_bytes, config,
-                       batch_rows, drop_positions=drop_positions,
-                       drop_values=drop_values, residual=residual),
-        FUSED_MANIFEST_DDL)
-    new_manifest = (mdf.withColumn("source", F.lit(source))
-                    .withColumn("config_hash", F.lit(cfg_hash)))
-    new_manifest.write.mode("append") \
-        .parquet(os.path.join(out_path, "manifest"))
-    after = read_fused_manifest(spark, out_path) \
-        .select("file", "rg").distinct().count()
-    all_splits.unpersist()
-    return {"splits_total": total, "splits_done_before": done_n,
-            "splits_encoded": after - done_n}
+        done = _split_set(m)
+    plan = sources.plan_splits(spark, in_path, ranges, num_partitions,
+                               files, skip=done)
+    total = plan.total
+    t1 = time.perf_counter()
+    if plan.remaining != 0:
+        mdf = plan.map_in_arrow(
+            _fused_sink_fn(out_path, stripe_rows, stripe_bytes, config,
+                           batch_rows, drop_positions=drop_positions,
+                           drop_values=drop_values, residual=residual),
+            FUSED_MANIFEST_DDL)
+        mdf.withColumn("source", F.lit(source)) \
+            .withColumn("config_hash", F.lit(cfg_hash)) \
+            .write.mode("append").parquet(os.path.join(out_path, "manifest"))
+    t2 = time.perf_counter()
+    after = _fused_manifest_table(out_path, ["file", "rg"])
+    n_after = len(_split_set(after)) if after is not None else 0
+    t3 = time.perf_counter()
+    return {"splits_total": total, "splits_done_before": len(done),
+            "splits_encoded": n_after - len(done),
+            "plan_s": round(t1 - t0, 3), "encode_s": round(t2 - t1, 3),
+            "commit_s": round(t3 - t2, 3)}
+
+
+def _fused_manifest_table(path: str, columns: list[str]):
+    """``columns`` of the committed fused manifest under ``path``, read
+    with pyarrow on the driver (no Spark job), or None when no manifest
+    directory exists yet — the ONLY state that means "nothing
+    committed". An unreadable or corrupt manifest raises naming the
+    directory: treating it as empty would re-encode, or vacuum,
+    everything."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    import pyarrow.fs as pafs
+
+    from . import sources
+
+    fs, local = sources._resolve_fs(path)
+    mdir = f"{local.rstrip('/')}/manifest"
+    if fs.get_file_info(mdir).type == pafs.FileType.NotFound:
+        return None
+    try:
+        d = ds.dataset(mdir, format="parquet", filesystem=fs)
+        return d.to_table(columns=columns) if d.files else None
+    except (OSError, pa.ArrowException) as e:
+        raise ValueError(
+            f"unreadable fused manifest {mdir!r}: {e}; repair or remove "
+            f"it (removing re-encodes every split)") from e
+
+
+def _split_set(m) -> set[tuple]:
+    return set(zip(m.column("file").to_pylist(), m.column("rg").to_pylist()))
 
 
 def read_fused_manifest(spark, path: str):
@@ -437,16 +472,14 @@ def vacuum_fused(spark, path: str) -> dict:
     same filesystem abstraction the writers use, so URI-addressed
     datasets (s3://...) vacuum too. A dataset with no manifest at all
     (run died before the first commit) is ALL orphans and is swept
-    clean. Returns {kept, removed}."""
+    clean; an unreadable one raises instead of sweeping committed
+    parts. Returns {kept, removed}."""
     import pyarrow.fs as pafs
 
     from . import sources
 
-    try:
-        mkeys = {r.task_key for r in read_fused_manifest(spark, path)
-                 .select("task_key").distinct().collect()}
-    except Exception:
-        mkeys = set()
+    m = _fused_manifest_table(path, ["task_key"])
+    mkeys = set(m.column("task_key").to_pylist()) if m is not None else set()
     fs, local = sources._resolve_fs(path)
     stripes_dir = f"{local.rstrip('/')}/stripes"
     try:

@@ -1,5 +1,5 @@
 """Distributed / threaded ORC split planning — the ORC twin of
-``sources.parquet_splits_df``.
+``sources.plan_splits``.
 
 The reference's stripe directory is pure tail metadata
 (reference: src/Orc/Schema/Types.hs:79-90 — StripeInformation lives in
@@ -118,20 +118,10 @@ def orc_splits_threaded(files: list[str], ranges=None,
 
 
 def _lpt_partitioned(spark, splits: list[tuple], n: int):
-    """LPT byte-balanced pre-partitioned DataFrame of split rows —
-    identical packing to the parquet planner (biggest stripe to the
-    least-loaded task; web-corpus stripes vary wildly in size)."""
-    import heapq
-
-    n_slices = min(n, len(splits))
-    order = sorted(splits, key=lambda r: -r[2])
-    heap = [(0, k) for k in range(n_slices)]
-    buckets: list[list] = [[] for _ in range(n_slices)]
-    for row in order:
-        load, k = heapq.heappop(heap)
-        buckets[k].append(row)
-        heapq.heappush(heap, (load + max(row[2], 1), k))
-    rdd = spark.sparkContext.parallelize(buckets, n_slices) \
+    """LPT byte-balanced pre-partitioned DataFrame of split rows — the
+    parquet planner's packing (``sources.lpt_buckets``)."""
+    buckets = sources.lpt_buckets(splits, n)
+    rdd = spark.sparkContext.parallelize(buckets, len(buckets)) \
         .flatMap(lambda b: b)
     return spark.createDataFrame(rdd, SPLIT_DDL)
 

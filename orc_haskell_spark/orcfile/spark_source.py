@@ -197,8 +197,8 @@ def parquet_to_orc(spark: SparkSession, in_path: str, out_dir: str,
     """
     from orc_haskell_spark import sources
 
-    splits = sources.parquet_splits_df(spark, in_path,
-                                       num_partitions=num_partitions)
+    plan = sources.plan_splits(spark, in_path,
+                               num_partitions=num_partitions)
     sources.guard_export_plan(out_dir, {
         "in_path": in_path, "columns": columns,
         "compression": compression, "stripe_rows": stripe_rows,
@@ -254,4 +254,4 @@ def parquet_to_orc(spark: SparkSession, in_path: str, out_dir: str,
              pa.array([raw_bytes], pa.int64())],
             names=["file", "n_splits", "rows", "orc_bytes", "raw_bytes"])
 
-    return splits.mapInArrow(convert, PARQUET_TO_ORC_DDL)
+    return plan.map_in_arrow(convert, PARQUET_TO_ORC_DDL)

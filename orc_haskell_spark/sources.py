@@ -50,7 +50,7 @@ def list_parquet_files(path: str) -> list[str]:
     """Recursive .parquet listing under ``path`` (a file, a directory,
     or a pyarrow-fs URI like s3://...). Listing is metadata-only and
     cheap even for very large tables; the expensive part — reading each
-    file's footer — is distributed by ``parquet_splits_df``."""
+    file's footer — is distributed by ``plan_splits``."""
     import pyarrow.fs as pafs
 
     fs, base = _resolve_fs(path)
@@ -121,23 +121,25 @@ def _file_splits(f: str, ranges) -> list[tuple]:
             and _keep_rg(md.row_group(rg), names, ranges)]
 
 
-def _splits_fn(ranges):
-    """mapInArrow fn: file-name rows -> one split row per row group."""
+def _split_batch(rows: list[tuple]):
+    """Arrow batch of (file, rg, nbytes, nrows) split rows (SPLIT_DDL)."""
     import pyarrow as pa
 
-    schema = pa.schema([("file", pa.string()), ("rg", pa.int32()),
-                        ("nbytes", pa.int64()), ("nrows", pa.int64())])
+    types = [pa.string(), pa.int32(), pa.int64(), pa.int64()]
+    return pa.RecordBatch.from_arrays(
+        [pa.array([r[i] for r in rows], t) for i, t in enumerate(types)],
+        names=["file", "rg", "nbytes", "nrows"])
+
+
+def _splits_fn(ranges):
+    """mapInArrow fn: file-name rows -> one split row per row group."""
 
     def fn(batches):
         for b in batches:
             for f in b.column("file").to_pylist():
                 rows = _file_splits(f, ranges)
                 if rows:
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array([r[i] for r in rows], t)
-                         for i, t in enumerate([pa.string(), pa.int32(),
-                                                pa.int64(), pa.int64()])],
-                        schema=schema)
+                    yield _split_batch(rows)
 
     return fn
 
@@ -149,37 +151,84 @@ DRIVER_SPLITS_MAX_FILES = 1024
 PLANNER_VERSION = "lpt-v2"
 
 
-def parquet_splits_df(spark: SparkSession, path: str,
-                      ranges=None, num_partitions: int | None = None,
-                      files: list[str] | None = None) -> DataFrame:
-    """DataFrame of parquet row-group splits (file, rg, nbytes, nrows),
-    balanced across ``num_partitions`` tasks.
+def lpt_buckets(splits: list[tuple], n: int) -> list[list]:
+    """LPT bin-packing on split BYTES (row[2]; longest-processing-time:
+    biggest split to the least-loaded of ``min(n, len(splits))``
+    buckets). Round-robin balances counts, but web-corpus row groups
+    vary wildly in size — one task with the fat groups would straggle
+    the whole job."""
+    import heapq
 
-    Two planning modes, picked by file count (Spark's own scan plans
-    splits on the driver too — the point is keeping DATA off the
-    driver, not metadata):
+    n_slices = min(n, len(splits))
+    heap = [(0, k) for k in range(n_slices)]
+    buckets: list[list] = [[] for _ in range(n_slices)]
+    for row in sorted(splits, key=lambda r: -r[2]):
+        load, k = heapq.heappop(heap)
+        buckets[k].append(row)
+        heapq.heappush(heap, (load + max(row[2], 1), k))
+    return buckets
 
-    - <= DRIVER_SPLITS_MAX_FILES files: footers read on the driver
-      (threaded — footer reads are IO waits) and the split list
-      parallelized pre-partitioned round-robin. ONE Spark stage for the
-      whole downstream scan job: no metadata shuffle, no extra stage
-      scheduling — the fixed overhead that dominates small jobs.
-    - beyond that (the 100 TB shape: millions of files): only file
-      NAMES touch the driver; footers are read in parallel tasks and
-      split rows shuffled as pure metadata (bytes per row, not data).
 
-    ``ranges`` prunes row groups on parquet column statistics before
-    any data IO — the Python-scan analog of Catalyst filter pushdown.
+def _bucket_fn(fn, buckets):
+    """Wrap a mapInArrow fn over split rows so it runs over
+    ``spark.range`` ids instead: task k builds bucket k's split batch
+    from the broadcast ``buckets`` itself, so the sink's own worker is
+    the only Python process in the stage."""
 
-    ``path`` may also be a CATALOG TABLE NAME (e.g. an Iceberg table):
-    the file list then comes from the table's current snapshot via
-    Spark's inputFiles(), so the fused scan composes with catalog
-    tables without any engine change — the north rule's input shape.
+    def run(batches):
+        rows = [r for b in batches for k in b.column(0).to_pylist()
+                for r in buckets.value[k]]
+        return fn(iter([_split_batch(rows)] if rows else []))
 
-    ``files`` bypasses listing entirely with an explicit file set — the
-    hook `iceberg.py` uses after snapshot selection + partition/bounds
-    pruning against the table's own metadata (no catalog jar needed).
-    """
+    return run
+
+
+def _pass(batches):
+    return batches
+
+
+class SplitPlan:
+    """The (file, rg, nbytes, nrows) splits of one scan and where they
+    run. Driver mode: ``buckets[k]`` is task k's LPT share. Distributed
+    mode: ``df`` holds the split rows left to run, produced by
+    footer-reading tasks, and ``all_df`` every planned split.
+    ``total`` counts the planned splits before ``skip`` removed any."""
+
+    def __init__(self, spark, buckets=None, total=0, df=None, all_df=None):
+        self.spark, self.buckets, self.df = spark, buckets, df
+        self._total, self._all = total, all_df
+
+    @property
+    def total(self) -> int:
+        """Planned split count; distributed mode counts with a job."""
+        return self._total if self._all is None else self._all.count()
+
+    @property
+    def remaining(self) -> int | None:
+        """Splits left to run (None in distributed mode: not on the
+        driver)."""
+        if self.buckets is None:
+            return None
+        return sum(len(b) for b in self.buckets)
+
+    def map_in_arrow(self, fn, ddl: str) -> DataFrame:
+        """``fn`` (a mapInArrow fn over split-row batches) run once per
+        task over that task's splits. Driver mode is ONE stage with no
+        Python-RDD or metadata hop: ``spark.range(0, n, 1, n)`` gives
+        task k id k, and the bucket plan travels by broadcast, once per
+        executor."""
+        if self.buckets is None:
+            return self.df.mapInArrow(fn, ddl)
+        n = len(self.buckets)
+        buckets = self.spark.sparkContext.broadcast(self.buckets)
+        return self.spark.range(0, n, 1, max(n, 1)) \
+            .mapInArrow(_bucket_fn(fn, buckets), ddl)
+
+
+def _list_input(spark: SparkSession, path: str,
+                files: list[str] | None) -> list[str]:
+    """Sorted parquet files to plan: ``files`` as given, else a catalog
+    table's snapshot files, else a listing of the path."""
     if files is not None:
         files = sorted(files)
     elif "/" not in path and "\\" not in path:
@@ -202,6 +251,44 @@ def parquet_splits_df(spark: SparkSession, path: str,
         files = list_parquet_files(path)
     if not files:
         raise ValueError(f"no parquet files under {path!r}")
+    return files
+
+
+def plan_splits(spark: SparkSession, path: str, ranges=None,
+                num_partitions: int | None = None,
+                files: list[str] | None = None,
+                skip: frozenset | set = frozenset()) -> SplitPlan:
+    """Plan the parquet row-group splits of ``path`` for a fused scan:
+    the one planner every fused sink runs through (``SplitPlan
+    .map_in_arrow``) and ``parquet_splits_df`` shows as a DataFrame.
+
+    Two planning modes, picked by file count (Spark's own scan plans
+    splits on the driver too — the point is keeping DATA off the
+    driver, not metadata):
+
+    - <= DRIVER_SPLITS_MAX_FILES files: footers read on the driver
+      (threaded — footer reads are IO waits), the splits in ``skip``
+      ((file, rg) pairs already done, e.g. by a resumed sink) removed,
+      and the rest LPT-packed by bytes into ``num_partitions`` buckets,
+      so a resume is balanced over what is left.
+    - beyond that (the 100 TB shape: millions of files): only file
+      NAMES touch the driver; footers are read in parallel tasks, split
+      rows round-robin repartitioned as pure metadata (bytes per row,
+      not data) and ``skip`` anti-joined out.
+
+    ``ranges`` prunes row groups on parquet column statistics before
+    any data IO — the Python-scan analog of Catalyst filter pushdown.
+
+    ``path`` may also be a CATALOG TABLE NAME (e.g. an Iceberg table):
+    the file list then comes from the table's current snapshot via
+    Spark's inputFiles(), so the fused scan composes with catalog
+    tables without any engine change — the north rule's input shape.
+
+    ``files`` bypasses listing entirely with an explicit file set — the
+    hook `iceberg.py` uses after snapshot selection + partition/bounds
+    pruning against the table's own metadata (no catalog jar needed).
+    """
+    files = _list_input(spark, path, files)
     n = num_partitions or spark.sparkContext.defaultParallelism * 2
 
     if len(files) <= DRIVER_SPLITS_MAX_FILES:
@@ -210,34 +297,38 @@ def parquet_splits_df(spark: SparkSession, path: str,
         with ThreadPoolExecutor(min(16, len(files))) as pool:
             per_file = pool.map(lambda f: _file_splits(f, ranges), files)
         splits = [row for rows in per_file for row in rows]
-        if not splits:
-            return spark.createDataFrame([], SPLIT_DDL)
-        n_slices = min(n, len(splits))
-        # LPT bin-packing on row-group BYTES (longest-processing-time:
-        # biggest split to the least-loaded task). Round-robin balances
-        # counts, but web-corpus row groups vary wildly in size — one
-        # task with the fat groups would straggle the whole job. One
-        # bucket per RDD slice, flatMap keeps the placement (narrow).
-        import heapq
-
-        order = sorted(splits, key=lambda r: -r[2])
-        heap = [(0, k) for k in range(n_slices)]
-        buckets: list[list] = [[] for _ in range(n_slices)]
-        for row in order:
-            load, k = heapq.heappop(heap)
-            buckets[k].append(row)
-            heapq.heappush(heap, (load + max(row[2], 1), k))
-        rdd = spark.sparkContext.parallelize(buckets, n_slices) \
-            .flatMap(lambda b: b)
-        return spark.createDataFrame(rdd, SPLIT_DDL)
+        todo = [r for r in splits if (r[0], r[1]) not in skip]
+        return SplitPlan(spark, lpt_buckets(todo, n), len(splits))
 
     meta_tasks = min(len(files), n)
     fdf = spark.createDataFrame([(f,) for f in files], "file string") \
         .repartition(meta_tasks)
-    splits = fdf.mapInArrow(_splits_fn(ranges), SPLIT_DDL)
     # round-robin rebalance: row groups of one big file must spread
     # across tasks, not stay on the footer-reader's partition
-    return splits.repartition(n)
+    df = fdf.mapInArrow(_splits_fn(ranges), SPLIT_DDL).repartition(n)
+    todo = df
+    if skip:
+        from pyspark.sql import functions as F
+
+        done = spark.createDataFrame(sorted(skip), "file string, rg int")
+        todo = df.join(F.broadcast(done), ["file", "rg"], "left_anti")
+    return SplitPlan(spark, df=todo, all_df=df)
+
+
+def parquet_splits_df(spark: SparkSession, path: str,
+                      ranges=None, num_partitions: int | None = None,
+                      files: list[str] | None = None) -> DataFrame:
+    """DataFrame of parquet row-group splits (file, rg, nbytes, nrows)
+    as ``plan_splits`` places them: in driver mode partition k holds
+    exactly LPT bucket k; in distributed mode the rows are round-robin
+    repartitioned over ``num_partitions``. Fused sinks do not go
+    through this DataFrame — they run ``plan_splits(...).map_in_arrow``
+    — so it is for inspecting a plan and for callers that need splits
+    as rows."""
+    plan = plan_splits(spark, path, ranges, num_partitions, files)
+    if plan.df is not None:
+        return plan.df
+    return plan.map_in_arrow(_pass, SPLIT_DDL)
 
 
 def task_output(out_path: str, subdir: str | None, key: str,

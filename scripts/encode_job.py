@@ -24,7 +24,9 @@ Modes:
   manifest.encode_to_dir — re-layouts the table, hash-resumable
 - --fused: zero-crossing Python-side scan+encode via
   manifest.encode_parquet_to_dir — keeps input layout, (file,row_group)
-  resumable; Iceberg snapshots feed it through the pruned file list
+  resumable; Iceberg snapshots feed it through the pruned file list.
+  Its summary line adds the driver wall seconds of the plan, encode
+  and commit phases (plan_s, encode_s, commit_s)
 
 --commit-iceberg additionally commits the output stripes dir as an
 append snapshot of an Iceberg table (idempotent per part file), giving

@@ -44,6 +44,10 @@ def test_encode_job_cli_iceberg_fused_with_commit(tmp_path):
         capture_output=True, text=True, timeout=300, env=env, cwd=REPO)
     assert r.returncode == 0, r.stderr[-3000:]
     assert "iceberg snapshot planned:" in r.stdout
+    summary = [ln for ln in r.stdout.splitlines()
+               if ln.startswith("summary:")][-1]
+    assert all(f"'{k}':" in summary
+               for k in ("plan_s", "encode_s", "commit_s"))
     assert "iceberg commit:" in r.stdout
     # committed output is a readable Iceberg table of encoded stripes
     files = iceberg.plan_files(ice_out)

@@ -327,6 +327,116 @@ def test_fused_sink_partial_resume(spark, tmp_path):
     _assert_same_rows(src, dec, "url")
 
 
+def test_fused_sink_resume_rebalances_remaining_splits(spark, tmp_path):
+    """A resume packs only the splits still missing: with the manifest
+    rows of two of four tasks' splits deleted, the re-encode spreads
+    over four byte-balanced tasks instead of re-running the two emptied
+    task buckets, and the dataset still decodes to the source."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    n = 16 * 500
+    src = str(tmp_path / "src.parquet")
+    pq.write_table(pa.table({
+        "x": pa.array(range(n), pa.int64()),
+        "s": pa.array([f"row-{i:08d}" for i in range(n)])}),
+        src, row_group_size=500)
+    out = str(tmp_path / "enc")
+    manifest.encode_parquet_to_dir(spark, src, out, stripe_rows=250,
+                                   num_partitions=4)
+    mdir = tmp_path / "enc" / "manifest"
+    m = pq.read_table(str(mdir))
+    keys = sorted(set(m.column("task_key").to_pylist()))
+    assert len(keys) == 4
+    kept = pa.array(keys[:2])
+    shutil.rmtree(mdir)
+    mdir.mkdir()
+    pq.write_table(m.filter(pc.is_in(m.column("task_key"), kept)),
+                   str(mdir / "part-00000-kept.parquet"))
+
+    r = manifest.encode_parquet_to_dir(spark, src, out, stripe_rows=250,
+                                       num_partitions=4)
+    remaining = r["splits_total"] - r["splits_done_before"]
+    assert remaining == 8 and r["splits_encoded"] == remaining
+    m2 = pq.read_table(str(mdir))
+    new = m2.filter(pc.invert(pc.is_in(m2.column("task_key"), kept)))
+    md = pq.ParquetFile(src).metadata
+    loads: dict = {}
+    for key, rg in set(zip(new.column("task_key").to_pylist(),
+                           new.column("rg").to_pylist())):
+        loads[key] = loads.get(key, 0) + md.row_group(rg).total_byte_size
+    assert len(loads) == min(remaining, 4)
+    assert max(loads.values()) < min(loads.values()) * 1.5
+
+    dec = engine.decode_table(manifest.read_fused_encoded(spark, out),
+                              spark.read.parquet(src).schema)
+    _assert_same_rows(spark.read.parquet(src), dec, "x")
+
+
+def test_fused_sink_refuses_corrupt_manifest(spark, tmp_path):
+    """Only a MISSING manifest directory means a fresh write: an
+    unreadable manifest part raises naming the directory instead of
+    being read as "nothing done" (which would re-encode everything),
+    commits no new stripe part, and stops vacuum from sweeping the
+    committed parts as orphans."""
+    df = gen.pages_df(spark, 1000, num_partitions=2)
+    src = str(tmp_path / "pq")
+    df.write.parquet(src)
+    out = str(tmp_path / "enc")
+    manifest.encode_parquet_to_dir(spark, src, out, stripe_rows=500,
+                                   num_partitions=2)
+    stripes = tmp_path / "enc" / "stripes"
+    parts = sorted(p.name for p in stripes.glob("part-*.parquet"))
+    assert parts
+    (tmp_path / "enc" / "manifest" / "part-99999-corrupt.parquet") \
+        .write_bytes(b"not a parquet file")
+    with pytest.raises(ValueError, match="unreadable fused manifest"):
+        manifest.encode_parquet_to_dir(spark, src, out, stripe_rows=500,
+                                       num_partitions=4)
+    with pytest.raises(ValueError, match="unreadable fused manifest"):
+        manifest.vacuum_fused(spark, out)
+    assert sorted(p.name for p in stripes.glob("part-*.parquet")) == parts
+
+
+def test_fused_sink_job_budget(spark, tmp_path):
+    """A fresh fused write is ONE Spark job (sink mapInArrow + manifest
+    write: no split count, no manifest probe or re-count), and a resume
+    with nothing left to encode launches none."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = str(tmp_path / "src.parquet")
+    pq.write_table(pa.table({"x": pa.array(range(2000), pa.int64())}),
+                   src, row_group_size=500)
+    out = str(tmp_path / "enc")
+    sc = spark.sparkContext
+
+    def jobs(group, run):
+        sc.setJobGroup(group, group)
+        try:
+            res = run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return res, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def write():
+        return manifest.encode_parquet_to_dir(spark, src, out,
+                                              stripe_rows=250,
+                                              num_partitions=2)
+
+    fresh, n_fresh = jobs("fused-fresh", write)
+    assert n_fresh == 1
+    assert fresh["splits_encoded"] == fresh["splits_total"] == 4
+    assert all(fresh[k] >= 0 for k in ("plan_s", "encode_s", "commit_s"))
+    noop, n_noop = jobs("fused-noop", write)
+    assert n_noop == 0
+    assert noop["splits_done_before"] == 4 and noop["splits_encoded"] == 0
+
+
 def test_decode_parquet_to_dir_transcode(spark, tmp_path):
     """Fused decode export: encoded stripes -> plain parquet written by
     the workers; output equals the source; column projection and

@@ -102,8 +102,9 @@ def test_decode_preserves_partition_count(spark):
 
 def test_fused_encode_single_stage_no_exchange(spark, tmp_path):
     """Driver-planned fused encode: the whole scan+encode job is ONE
-    narrow stage — no Exchange anywhere in the plan (split metadata is
-    pre-partitioned via parallelize, payload never enters the JVM)."""
+    narrow stage — no Exchange anywhere in the plan (each spark.range
+    task builds its own split batch from the broadcast plan, payload
+    never enters the JVM)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -115,8 +116,10 @@ def test_fused_encode_single_stage_no_exchange(spark, tmp_path):
     plan = _plan(enc)
     assert "Exchange" not in plan
     assert enc.rdd.getNumPartitions() == 4
-    # and the scan feeding it is split metadata only, not table rows
-    assert "Scan ExistingRDD" in plan or "ExistingRDD" in plan
+    # and the scan feeding it is task ids only, not table rows, and no
+    # Python-RDD split stage sits in front of the encoding worker
+    assert "Range" in plan
+    assert "Scan parquet" not in plan and "ExistingRDD" not in plan
 
 
 def test_unsalted_encode_key_uses_hash_not_range(spark):

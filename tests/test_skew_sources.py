@@ -169,6 +169,20 @@ def test_parquet_splits_distributed_planning_matches_driver(
     assert dec.count() == 600
     assert dec.agg(F.sum("x")).collect()[0][0] == sum(range(0, 600))
 
+    # the fused sink plans, encodes and resumes in distributed mode too
+    from orc_haskell_spark import manifest
+
+    out = str(tmp_path / "enc")
+    r1 = manifest.encode_parquet_to_dir(spark, str(d), out,
+                                        num_partitions=3)
+    assert r1["splits_encoded"] == r1["splits_total"] == 18
+    r2 = manifest.encode_parquet_to_dir(spark, str(d), out,
+                                        num_partitions=3)
+    assert r2["splits_done_before"] == 18 and r2["splits_encoded"] == 0
+    dec = engine.decode_table(manifest.read_fused_encoded(spark, out),
+                              schema)
+    assert dec.count() == 600
+
 
 def test_split_planning_byte_balanced(spark, tmp_path):
     """Driver-mode split planning packs by BYTES (LPT), not counts: a
@@ -192,6 +206,15 @@ def test_split_planning_byte_balanced(spark, tmp_path):
     loads = sorted(r.b for r in per_part)
     assert len(loads) == 4
     # each task gets exactly one fat group: max/min byte load ~ 1
+    assert loads[-1] < loads[0] * 1.5
+
+    # the fused sinks receive the same placement directly (no splits
+    # DataFrame in between): encoded raw bytes per task are balanced too
+    enc = engine.encode_parquet(spark, str(d), num_partitions=4)
+    per_task = enc.groupBy("part_id").agg(
+        F.sum("raw_bytes").alias("b")).collect()
+    loads = sorted(r.b for r in per_task)
+    assert len(loads) == 4
     assert loads[-1] < loads[0] * 1.5
 
 
