@@ -90,19 +90,40 @@ def compress(data: bytes, codec: str, level: int | None = None) -> bytes:
     return bytes(out)
 
 
-def decompress(buf: bytes, codec: str) -> bytes:
+def decompress(buf: bytes | memoryview, codec: str):
+    """Inverse of ``compress``. ``buf`` may be a memoryview slice of a
+    stripe payload: chunks decompress straight out of it, a one-chunk
+    stream is returned as its codec's output (or, stored raw, as a
+    slice of ``buf``), and a multi-chunk stream is decompressed into one
+    buffer sized from the chunk headers."""
     if codec == "none":
         return buf
-    out = bytearray()
     view = memoryview(buf)
-    pos = 0
-    while pos < len(buf):
+    chunks = []
+    pos = total = 0
+    while pos < len(view):
+        if pos + 8 > len(view):
+            raise ValueError("block stream truncated")
         head, raw_len = struct.unpack_from("<II", view, pos)
         pos += 8
-        plen, original = head >> 1, head & 1
-        payload = bytes(view[pos: pos + plen])
-        if len(payload) != plen:
+        plen = head >> 1
+        if pos + plen > len(view):
             raise ValueError("block stream truncated")
+        chunks.append((view[pos: pos + plen], raw_len, head & 1))
         pos += plen
-        out += payload if original else _decompress_chunk(payload, raw_len, codec)
-    return bytes(out)
+        total += raw_len
+
+    def chunk_bytes(payload, raw_len, original):
+        return payload if original else _decompress_chunk(payload, raw_len,
+                                                          codec)
+
+    if len(chunks) == 1:
+        return chunk_bytes(*chunks[0])
+    out = bytearray(total)
+    pos = 0
+    for c in chunks:
+        part = chunk_bytes(*c)
+        out[pos: pos + len(part)] = part
+        pos += len(part)
+    del out[pos:]  # headers over-stated the size: keep what was decoded
+    return out

@@ -227,24 +227,18 @@ def _fused_sink_fn(out_path: str, stripe_rows: int, stripe_bytes: int,
     """
 
     def fn(batches):
-        import hashlib
-
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         from . import sources, stripe as stripe_mod
         from .engine import (ENCODED_ARROW_SCHEMA, _rechunk,
-                             _spark_safe_batch, clamp_worker_threads)
+                             clamp_worker_threads)
 
         clamp_worker_threads()
-        splits = []
-        for b in batches:
-            splits.extend(zip(b.column("file").to_pylist(),
-                              b.column("rg").to_pylist()))
+        splits = sources.split_list(batches)
         if not splits:
             return
-        key = hashlib.sha256(
-            json.dumps(sorted(splits)).encode()).hexdigest()[:24]
+        key = sources.task_key(splits)
         fs, staging, final = sources.task_output(out_path, "stripes", key)
 
         # stripe rows carry (task_key, file, rg) so readers can filter
@@ -434,17 +428,62 @@ def read_fused_manifest(spark, path: str):
 
 
 def read_fused_encoded(spark, path: str):
-    """Committed encoded stripes: stripe rows whose (task_key, file, rg)
-    appears in the manifest — the ledger filter, at the same SPLIT
-    granularity resume uses, that makes orphaned / half-committed /
-    superseded part files invisible."""
+    """Committed encoded stripes (``engine.ENCODED_DDL`` columns): stripe
+    rows whose (task_key, file, rg) appears in the manifest — the ledger
+    filter, at the same SPLIT granularity resume uses, that makes
+    orphaned / half-committed / superseded part files invisible.
+
+    The ledger is read with pyarrow on the driver (no Spark job). When
+    every ledgered task_key hashes back from its own manifest splits
+    (``sources.task_key``), each committed part file provably holds
+    committed splits only, so the result is a bare parquet scan of those
+    files — ``engine.decode_table`` then fuses the read. Spark lists
+    more than ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+    (32) explicit paths with a listing job. Otherwise (manifest rows
+    lost for part of a task's splits, a split that wrote no stripe, a
+    committed part gone missing) the stripes directory is broadcast
+    semi-joined against the ledger, which is exact. A missing or
+    unreadable manifest raises ValueError naming it."""
     from pyspark.sql import functions as F
 
+    m = _fused_manifest_table(path, ["task_key", "file", "rg"])
+    if m is None:
+        raise ValueError(
+            f"no fused manifest under {path!r}: nothing committed there "
+            f"(missing or empty manifest/ directory)")
+    parts = _whole_task_parts(path, m)
+    if parts is not None:
+        return spark.read.schema(engine.ENCODED_DDL).parquet(*parts)
     stripes = spark.read.parquet(os.path.join(path, "stripes"))
     keys = read_fused_manifest(spark, path) \
         .select("task_key", "file", "rg").distinct()
     return stripes.join(F.broadcast(keys), ["task_key", "file", "rg"],
                         "left_semi").drop("task_key", "file", "rg")
+
+
+def _whole_task_parts(path: str, m) -> list[str] | None:
+    """The committed part files of manifest table ``m`` if every
+    task_key's ledgered (file, rg) set hashes back to the key and its
+    part file exists, else None."""
+    import pyarrow.fs as pafs
+
+    from . import sources
+
+    by_key: dict[str, set] = {}
+    for key, f, rg in zip(m.column("task_key").to_pylist(),
+                          m.column("file").to_pylist(),
+                          m.column("rg").to_pylist()):
+        by_key.setdefault(key, set()).add((f, rg))
+    if not by_key or any(sources.task_key(s) != key
+                         for key, s in by_key.items()):
+        return None
+    stripes = f"{path.rstrip('/')}/stripes"
+    names = [f"part-{key}.parquet" for key in sorted(by_key)]
+    fs, local = sources._resolve_fs(stripes)
+    if any(i.type != pafs.FileType.File
+           for i in fs.get_file_info([f"{local}/{n}" for n in names])):
+        return None
+    return [f"{stripes}/{n}" for n in names]
 
 
 def fused_metrics(spark, path: str):

@@ -331,6 +331,24 @@ def parquet_splits_df(spark: SparkSession, path: str,
     return plan.map_in_arrow(_pass, SPLIT_DDL)
 
 
+def split_list(batches) -> list[tuple]:
+    """The (file, rg) pairs of a task's split-row batches, in order."""
+    return [s for b in batches for s in zip(b.column("file").to_pylist(),
+                                             b.column("rg").to_pylist())]
+
+
+def task_key(splits) -> str:
+    """A task's part-file key: the hash of its sorted (file, rg) split
+    set. A re-run of the same split set writes the same name, and a
+    reader holding a key's ledgered splits can recompute it to prove
+    the part file holds nothing else."""
+    import hashlib
+    import json
+
+    return hashlib.sha256(
+        json.dumps(sorted(splits)).encode()).hexdigest()[:24]
+
+
 def task_output(out_path: str, subdir: str | None, key: str,
                 ext: str = ".parquet"):
     """(fs, staging_path, final_path) for one task's rename-on-commit

@@ -857,7 +857,7 @@ def decode_stripe(footer: dict, payload: bytes | memoryview,
                     f"truncated stripe payload: stream {col['name']}/"
                     f"{e['k']} needs bytes [{e['o']}, {e['o'] + e['l']}) "
                     f"but payload has {len(view)}")
-            raw = bytes(view[e["o"]: e["o"] + e["l"]])
+            raw = view[e["o"]: e["o"] + e["l"]]
             streams[e["k"]] = block.decompress(raw, e["c"]) if e["c"] != "none" else raw
         field = schema.field(col["name"])
         arrays.append(decode_column(col["meta"], streams, field.type))

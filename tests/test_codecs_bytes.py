@@ -155,6 +155,22 @@ def test_block_roundtrip(codec):
         assert block.decompress(out, codec) == raw
 
 
+def test_block_decompress_memoryview_slice_and_truncation():
+    """A stream decompresses from a memoryview slice of a larger payload
+    (the stripe decoder passes slices, not copies), single- and
+    multi-chunk alike; a chunk or header cut short raises ValueError
+    instead of returning short output."""
+    raw = b"compress me " * 200000  # several 1 MiB chunks
+    for data in (raw, raw[:1000]):
+        out = block.compress(data, "zstd")
+        padded = memoryview(b"pad" + out + b"tail")
+        assert block.decompress(padded[3: 3 + len(out)], "zstd") == data
+    out = block.compress(raw, "zstd")
+    for cut in (len(out) - 1, 8 + 1, 5):
+        with pytest.raises(ValueError, match="block stream truncated"):
+            block.decompress(out[:cut], "zstd")
+
+
 def test_block_incompressible_escape():
     raw = RNG.integers(0, 256, size=block.CHUNK + 100, dtype=np.uint8).tobytes()
     out = block.compress(raw, "zlib")

@@ -7,6 +7,8 @@ mid-file; at cluster scale that's the manifest table).
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from orc_haskell_spark import engine, gen, manifest
@@ -401,6 +403,18 @@ def test_fused_sink_refuses_corrupt_manifest(spark, tmp_path):
     assert sorted(p.name for p in stripes.glob("part-*.parquet")) == parts
 
 
+def _jobs(spark, group, run):
+    """(run(), number of Spark jobs it launched) via a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        res = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return res, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_fused_sink_job_budget(spark, tmp_path):
     """A fresh fused write is ONE Spark job (sink mapInArrow + manifest
     write: no split count, no manifest probe or re-count), and a resume
@@ -412,29 +426,239 @@ def test_fused_sink_job_budget(spark, tmp_path):
     pq.write_table(pa.table({"x": pa.array(range(2000), pa.int64())}),
                    src, row_group_size=500)
     out = str(tmp_path / "enc")
-    sc = spark.sparkContext
-
-    def jobs(group, run):
-        sc.setJobGroup(group, group)
-        try:
-            res = run()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return res, len(sc.statusTracker().getJobIdsForGroup(group))
 
     def write():
         return manifest.encode_parquet_to_dir(spark, src, out,
                                               stripe_rows=250,
                                               num_partitions=2)
 
-    fresh, n_fresh = jobs("fused-fresh", write)
+    fresh, n_fresh = _jobs(spark, "fused-fresh", write)
     assert n_fresh == 1
     assert fresh["splits_encoded"] == fresh["splits_total"] == 4
     assert all(fresh[k] >= 0 for k in ("plan_s", "encode_s", "commit_s"))
-    noop, n_noop = jobs("fused-noop", write)
+    noop, n_noop = _jobs(spark, "fused-noop", write)
     assert n_noop == 0
     assert noop["splits_done_before"] == 4 and noop["splits_encoded"] == 0
+
+
+def _physical_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _sorted_arrow(df, key):
+    t = df.toArrow()
+    return t.sort_by(key).combine_chunks()
+
+
+def _typed_source(path, n=6000, row_group_size=1500):
+    """Parquet source with int, nullable timestamp, nullable string and
+    double columns, several row groups."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    base = dt.datetime(1965, 3, 1)
+    pq.write_table(pa.table({
+        "k": pa.array(range(n), pa.int64()),
+        "ts": pa.array([None if i % 7 == 0 else
+                        base + dt.timedelta(seconds=37 * i, microseconds=i)
+                        for i in range(n)], pa.timestamp("us")),
+        "s": pa.array([None if i % 5 == 0 else f"s{i % 97}-{i}"
+                       for i in range(n)]),
+        "f": pa.array([i / 7 for i in range(n)], pa.float64())}),
+        path, row_group_size=row_group_size)
+
+
+def _assert_fused_equals_general(enc, schema, key, columns=None):
+    """decode_table over a bare encoded scan fuses (no parquet scan in
+    the plan) and gives rows bit-identical to the general mapInArrow
+    path, forced with a no-op filter."""
+    from pyspark.sql import functions as F
+
+    assert engine._encoded_scan_files(enc) is not None
+    fused = engine.decode_table(enc, schema, columns)
+    general = engine.decode_table(enc.filter(F.lit(True)), schema, columns)
+    assert "Scan parquet" not in _physical_plan(fused)
+    assert "Scan parquet" in _physical_plan(general)
+    assert fused.schema == general.schema
+    assert fused.columns == (columns or [f.name for f in schema])
+    a, b = _sorted_arrow(fused, key), _sorted_arrow(general, key)
+    assert a.num_rows == b.num_rows > 0
+    assert a.equals(b)
+    return a
+
+
+def test_fused_decode_matches_general_spark_written(spark, tmp_path):
+    """encode_parquet output written by Spark (several stripes per
+    parquet row group) decodes through the fused path bit-identically
+    to the general path and to the source, with and without a
+    byte-level projection in the caller's column order."""
+    import pyarrow.parquet as pq
+
+    src = str(tmp_path / "src.parquet")
+    _typed_source(src)
+    enc_dir = str(tmp_path / "enc")
+    engine.encode_parquet(spark, src, stripe_rows=400, num_partitions=2) \
+        .write.option("compression", "uncompressed").parquet(enc_dir)
+    parts = sorted((tmp_path / "enc").glob("part-*.parquet"))
+    md = pq.ParquetFile(str(parts[0])).metadata
+    assert md.num_row_groups == 1 and md.row_group(0).num_rows > 1
+
+    enc = spark.read.parquet(enc_dir)
+    source = spark.read.parquet(src)
+    full = _assert_fused_equals_general(enc, source.schema, "k")
+    assert full.equals(_sorted_arrow(source, "k"))
+    proj = _assert_fused_equals_general(enc, source.schema, "k",
+                                        columns=["ts", "k"])
+    assert proj.equals(_sorted_arrow(source.select("ts", "k"), "k"))
+
+
+def _fused_dir(spark, tmp_path, n=2000, stripe_rows=250):
+    src = str(tmp_path / "src.parquet")
+    _typed_source(src, n, row_group_size=500)
+    out = str(tmp_path / "fused")
+    manifest.encode_parquet_to_dir(spark, src, out, stripe_rows=stripe_rows,
+                                   num_partitions=2)
+    return src, out
+
+
+def _plant_orphan(tmp_path):
+    """Copy a committed stripe part under an unledgered task_key."""
+    import pyarrow.parquet as pq
+
+    stripes = tmp_path / "fused" / "stripes"
+    t = pq.read_table(str(sorted(stripes.glob("part-*.parquet"))[0]))
+    t = t.set_column(t.schema.get_field_index("task_key"), "task_key",
+                     [["deadbeef"] * t.num_rows])
+    pq.write_table(t, str(stripes / "part-deadbeef.parquet"))
+
+
+def test_fused_decode_matches_general_fused_sink(spark, tmp_path):
+    """read_fused_encoded over a complete ledger is a bare scan of the
+    committed parts: its columns are ENCODED_DDL's, decode fuses, the
+    rows match the general path and the source, and an orphan part is
+    invisible on both paths."""
+    src, out = _fused_dir(spark, tmp_path)
+    _plant_orphan(tmp_path)
+    enc = manifest.read_fused_encoded(spark, out)
+    assert enc.columns == ["part_id", "stripe_id", "n_rows", "n_cols",
+                           "raw_bytes", "enc_bytes", "footer", "data"]
+    assert not any("deadbeef" in f for f in enc.inputFiles())
+    source = spark.read.parquet(src)
+    full = _assert_fused_equals_general(enc, source.schema, "k")
+    assert full.equals(_sorted_arrow(source, "k"))
+    _assert_fused_equals_general(enc, source.schema, "k",
+                                 columns=["s", "k"])
+
+
+def test_read_fused_encoded_partial_ledger_falls_back(spark, tmp_path):
+    """Manifest rows lost for part of a task's splits (the partial
+    resume shape): the task key no longer hashes back from the ledger,
+    so read_fused_encoded keeps the exact semi-join — before and after
+    the resume — and an orphan part stays invisible."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    src, out = _fused_dir(spark, tmp_path)
+    mdir = tmp_path / "fused" / "manifest"
+    m = pq.read_table(str(mdir))
+    key = m.column("task_key")[0].as_py()
+    rgs = sorted(set(m.filter(pc.equal(m.column("task_key"), key))
+                     .column("rg").to_pylist()))
+    assert len(rgs) >= 2
+    keep = pc.invert(pc.and_(pc.equal(m.column("task_key"), key),
+                             pc.equal(m.column("rg"), rgs[0])))
+    shutil.rmtree(mdir)
+    mdir.mkdir()
+    pq.write_table(m.filter(keep), str(mdir / "part-00000-kept.parquet"))
+    _plant_orphan(tmp_path)
+    source = spark.read.parquet(src)
+
+    enc = manifest.read_fused_encoded(spark, out)
+    assert engine._encoded_scan_files(enc) is None  # semi-join kept
+    assert engine.decode_table(enc, source.schema).count() \
+        == source.count() - 250 * 2  # rg rgs[0]: two 250-row stripes
+
+    r = manifest.encode_parquet_to_dir(spark, src, out, stripe_rows=250,
+                                       num_partitions=2)
+    assert r["splits_encoded"] == 1
+    enc = manifest.read_fused_encoded(spark, out)
+    assert engine._encoded_scan_files(enc) is None
+    dec = engine.decode_table(enc, source.schema)
+    assert _sorted_arrow(dec, "k").equals(_sorted_arrow(source, "k"))
+
+
+def test_prune_stripes_keeps_general_decode(spark, tmp_path):
+    """prune_stripes output is a filter, not a bare scan: decode keeps
+    the mapInArrow path and only the surviving stripes decode."""
+    from pyspark.sql import functions as F
+
+    src, out = _fused_dir(spark, tmp_path)
+    source = spark.read.parquet(src)
+    enc = manifest.read_fused_encoded(spark, out)
+    pruned = engine.prune_stripes(enc, "k", lo=1000, hi=1249)
+    assert engine._encoded_scan_files(pruned) is None
+    dec = engine.decode_table(pruned, source.schema)
+    assert "Scan parquet" in _physical_plan(dec)
+    assert pruned.count() == 1
+    assert _sorted_arrow(dec, "k").equals(_sorted_arrow(
+        source.filter(F.col("k").between(1000, 1249)), "k"))
+
+
+def test_read_fused_encoded_ledger_errors(spark, tmp_path):
+    """A corrupt manifest part raises the writer's "unreadable fused
+    manifest" ValueError when read_fused_encoded is called, and a
+    missing manifest raises a ValueError naming the directory."""
+    import shutil
+
+    _, out = _fused_dir(spark, tmp_path, n=1000, stripe_rows=500)
+    mdir = tmp_path / "fused" / "manifest"
+    (mdir / "part-99999-corrupt.parquet").write_bytes(b"not parquet")
+    with pytest.raises(ValueError, match="unreadable fused manifest"):
+        manifest.read_fused_encoded(spark, out)
+    shutil.rmtree(mdir)
+    with pytest.raises(ValueError, match=re.escape(
+            f"no fused manifest under {out!r}")):
+        manifest.read_fused_encoded(spark, out)
+
+
+def test_fused_read_job_budget(spark, tmp_path):
+    """decode_table(read_fused_encoded(...)) to the noop sink is ONE
+    Spark job: no ledger semi-join, no JVM parquet scan — Range feeds
+    the decoding mapInArrow, with min(defaultParallelism, splits)
+    partitions."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    dp = spark.sparkContext.defaultParallelism
+    for n_stripes in (2 * dp, 2):
+        src = str(tmp_path / f"src{n_stripes}.parquet")
+        pq.write_table(pa.table({"x": pa.array(range(250 * n_stripes),
+                                               pa.int64())}),
+                       src, row_group_size=250)
+        out = str(tmp_path / f"enc{n_stripes}")
+        manifest.encode_parquet_to_dir(spark, src, out, stripe_rows=250,
+                                       num_partitions=2)
+        schema = spark.read.parquet(src).schema
+
+        def read():
+            dec = engine.decode_table(
+                manifest.read_fused_encoded(spark, out), schema)
+            dec.write.format("noop").mode("overwrite").save()
+            return dec
+
+        dec, n_jobs = _jobs(spark, f"fused-read-{n_stripes}", read)
+        assert n_jobs == 1
+        plan = _physical_plan(dec)
+        assert "Range" in plan and "MapInArrow" in plan
+        assert plan.index("Range") > plan.index("MapInArrow")  # child
+        for node in ("Scan parquet", "BroadcastExchange", "Exchange"):
+            assert node not in plan
+        assert dec.rdd.getNumPartitions() == min(dp, n_stripes)
+        assert dec.count() == 250 * n_stripes
 
 
 def test_decode_parquet_to_dir_transcode(spark, tmp_path):
