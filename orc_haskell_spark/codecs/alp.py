@@ -14,6 +14,12 @@ reconstruction differs in even one bit becomes an exception, which
 makes the codec lossless by construction (NaN payloads, -0.0, inf and
 denormals all take the exception path).
 
+The hot loops run in C (codecs/alp_kernel.c) with the numpy code here
+as their twin, used under ORC_HS_NO_NATIVE=1 or when the build fails:
+the (e, f) pair search (``alp_choose_pair``), the encode transform and
+the ALP-RD split. Each twin gives the same bytes and raises the same
+errors.
+
 Deviation from the paper: the pair is chosen once per stripe from a
 strided sample (the paper re-picks per 1024-value vector); column-
 uniform scales — the common case this codec targets — lose nothing,
@@ -72,23 +78,15 @@ _DEC_F = np.array([F10[f] for _, f in _PAIRS])
 _DEC_E = np.array([IF10[e] for e, _ in _PAIRS])
 
 
-def choose_pair(vals: np.ndarray) -> tuple[int, int] | None:
-    """Pick the (e, f) pair minimizing estimated encoded bytes on a
-    strided sample; None when fewer than half the sampled values are
-    exactly representable under every pair (ALP is hopeless there and
-    the full-column transform isn't worth running).
+def _pair_stats(s64: np.ndarray, bits_native: np.ndarray,
+                width: int):
+    """numpy twin of the C ``alp_choose_pair`` scan: per candidate pair,
+    (n_good, hi, lo) over the sample, hi/lo over good values only.
 
     All 190 candidate pairs are evaluated in one (pairs × sample)
     broadcast; the reconstruction uses the same two-multiply order as
     ``decode`` so goodness here predicts goodness there.
     """
-    if vals.size == 0:
-        return None
-    step = max(1, vals.size // _SAMPLE)
-    s = np.ascontiguousarray(vals[::step][:_SAMPLE])
-    width = s.dtype.itemsize
-    s64 = s.astype(np.float64) if width == 4 else s
-    bits_native = _native_bits(s)
     with np.errstate(invalid="ignore", over="ignore"):
         d = s64[None, :] * _ENC_FAC[:, None]
         in_range = np.isfinite(d) & (np.abs(d) < float(2 ** 62))
@@ -102,16 +100,58 @@ def choose_pair(vals: np.ndarray) -> tuple[int, int] | None:
     n_good = good.sum(axis=1)
     hi = np.where(good, ints, np.int64(-(2 ** 62))).max(axis=1)
     lo = np.where(good, ints, np.int64(2 ** 62)).min(axis=1)
+    return n_good, hi, lo
+
+
+def _pick_pair(n_good: np.ndarray, hi: np.ndarray, lo: np.ndarray,
+               n: int, width: int) -> tuple[int, int] | None:
+    """The cost model shared by both scans: estimated bytes per pair,
+    first minimum wins (like ``np.argmin``)."""
     span = np.maximum((hi - lo).astype(np.float64), 1.0)
+    # float log2, not integer bit length: they differ for spans >= 2^48
     bits = np.floor(np.log2(span)) + 1.0
     exc_cost = width + 4  # raw value + u32 position
-    cost = s.size * bits / 8 + (s.size - n_good) * exc_cost
-    cost[n_good < s.size // 2] = np.inf
+    cost = n * bits / 8 + (n - n_good) * exc_cost
+    cost[n_good < n // 2] = np.inf
     # sub-ULP grids (e.g. e=16 over random mantissas) roundtrip "losslessly"
     # at ~native width — refuse any pair that can't beat the raw layout
-    cost[cost >= s.size * width] = np.inf
+    cost[cost >= n * width] = np.inf
     k = int(np.argmin(cost))
     return _PAIRS[k] if np.isfinite(cost[k]) else None
+
+
+def choose_pair(vals: np.ndarray) -> tuple[int, int] | None:
+    """Pick the (e, f) pair minimizing estimated encoded bytes on a
+    strided sample; None when fewer than half the sampled values are
+    exactly representable under every pair (ALP is hopeless there and
+    the full-column transform isn't worth running).
+
+    The scan runs in C (``alp_choose_pair``, which also abandons a pair
+    once half the sample has failed) with ``_pair_stats`` as its numpy
+    twin; both feed the same ``_pick_pair``.
+    """
+    if vals.size == 0:
+        return None
+    step = max(1, vals.size // _SAMPLE)
+    s = np.ascontiguousarray(vals[::step][:_SAMPLE])
+    width = s.dtype.itemsize
+    s64 = s.astype(np.float64) if width == 4 else s
+    lib = native.load()
+    # the kernel reads native-order f4/f8 only
+    if lib is None or s.dtype not in (np.float32, np.float64):
+        n_good, hi, lo = _pair_stats(s64, _native_bits(s), width)
+    else:
+        n_good = np.empty(len(_PAIRS), np.int64)
+        hi = np.empty(len(_PAIRS), np.int64)
+        lo = np.empty(len(_PAIRS), np.int64)
+        lib.alp_choose_pair(
+            native.ptr(s64, ctypes.c_double), s.ctypes.data,
+            width, s.size, native.ptr(_ENC_FAC, ctypes.c_double),
+            native.ptr(_DEC_F, ctypes.c_double),
+            native.ptr(_DEC_E, ctypes.c_double), len(_PAIRS),
+            native.ptr(n_good, ctypes.c_int64),
+            native.ptr(lo, ctypes.c_int64), native.ptr(hi, ctypes.c_int64))
+    return _pick_pair(n_good, hi, lo, s.size, width)
 
 
 def encode(vals: np.ndarray, pair: tuple[int, int] | None = None):
@@ -250,10 +290,16 @@ def rd_encode(vals: np.ndarray, plan=None):
     return r, dict_left, codes, right, exc_pos, left[~good]
 
 
+def _bad_rd_codes(n_bad: int, dn: int) -> ValueError:
+    return ValueError(f"corrupt ALP-RD stripe: {n_bad} dictionary code(s) "
+                      f"outside the {dn}-entry left dictionary")
+
+
 def rd_decode(codes: np.ndarray, right: np.ndarray, r: int,
               dict_left: np.ndarray, exc_pos: np.ndarray,
               exc_buf: bytes | np.ndarray, dtype: np.dtype) -> np.ndarray:
-    """Reassemble (dict[code] << r) | right, scatter left exceptions."""
+    """Reassemble (dict[code] << r) | right, scatter left exceptions.
+    A code outside the dictionary raises ValueError on both paths."""
     dtype = np.dtype(dtype)
     lib = native.load()
     if lib is not None and codes.size:
@@ -261,10 +307,13 @@ def rd_decode(codes: np.ndarray, right: np.ndarray, r: int,
         codes = np.ascontiguousarray(codes, np.uint64)
         right = np.ascontiguousarray(right, np.uint64)
         bits = np.empty(codes.size, np.uint64)
-        lib.alp_rd_decode(native.ptr(codes, ctypes.c_uint64),
-                          native.ptr(right, ctypes.c_uint64), int(r),
-                          native.ptr(dl, ctypes.c_uint16), dl.size,
-                          codes.size, native.ptr(bits, ctypes.c_uint64))
+        n_bad = lib.alp_rd_decode(native.ptr(codes, ctypes.c_uint64),
+                                  native.ptr(right, ctypes.c_uint64), int(r),
+                                  native.ptr(dl, ctypes.c_uint16), dl.size,
+                                  codes.size,
+                                  native.ptr(bits, ctypes.c_uint64))
+        if n_bad:
+            raise _bad_rd_codes(n_bad, dl.size)
         if len(exc_pos):
             p = exc_pos.astype(np.int64)
             excl = np.frombuffer(exc_buf, np.uint16,
@@ -273,8 +322,11 @@ def rd_decode(codes: np.ndarray, right: np.ndarray, r: int,
         if dtype.itemsize == 4:
             return bits.astype(np.uint32).view(np.float32)
         return bits.view(np.float64)
-    left = np.asarray(dict_left, np.uint16)[codes.astype(np.int64)] \
-        .astype(np.uint64)
+    dl = np.asarray(dict_left, np.uint16)
+    n_bad = int(np.count_nonzero(codes >= dl.size))
+    if n_bad:
+        raise _bad_rd_codes(n_bad, dl.size)
+    left = dl[codes.astype(np.int64)].astype(np.uint64)
     if len(exc_pos):
         left[exc_pos.astype(np.int64)] = np.frombuffer(
             exc_buf, np.uint16, count=len(exc_pos)).astype(np.uint64)

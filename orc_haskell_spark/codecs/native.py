@@ -9,15 +9,17 @@ compiles race benignly (each builds to a temp name, os.replace is
 atomic, last one wins with identical bytes).
 
 If anything fails — no compiler, sandboxed exec, exotic platform — the
-numpy implementations in fsst.py take over unchanged; correctness never
-depends on this module (ORC_HS_NO_NATIVE=1 forces the fallback, used by
-tests to cover both paths).
+numpy implementations in fsst.py take over unchanged, after one
+"orc_haskell_spark.native" WARNING per process that names the failed
+step; correctness never depends on this module (ORC_HS_NO_NATIVE=1
+forces the fallback quietly, used by tests to cover both paths).
 """
 
 from __future__ import annotations
 
 import ctypes
 import hashlib
+import logging
 import os
 import subprocess
 import sys
@@ -43,6 +45,7 @@ def _read_sources() -> list[bytes]:
     return out
 _lib: ctypes.CDLL | None = None
 _tried = False
+_log = logging.getLogger("orc_haskell_spark.native")
 
 
 def _cache_dir() -> str:
@@ -84,7 +87,9 @@ def _compile(sources: list[bytes], out_path: str) -> None:
 
 
 def load() -> ctypes.CDLL | None:
-    """The kernels library, or None (-> numpy fallback). Cached."""
+    """The kernels library, or None (-> numpy fallback). Cached; a
+    failure logs one WARNING naming the step (compile, dlopen or symbol
+    setup)."""
     global _lib, _tried
     if _tried:
         return _lib
@@ -92,7 +97,10 @@ def load() -> ctypes.CDLL | None:
     if os.environ.get("ORC_HS_NO_NATIVE") == "1":
         return None
     if sys.byteorder != "little":  # kernels assume LE loads
+        _log.warning("native kernels disabled on a big-endian host; "
+                     "using the numpy fallbacks")
         return None
+    step = "compile"
     try:
         sources = _read_sources()
         h = hashlib.sha256()
@@ -101,7 +109,9 @@ def load() -> ctypes.CDLL | None:
         so = os.path.join(_cache_dir(), f"kernels_{h.hexdigest()[:16]}.so")
         if not os.path.exists(so):
             _compile(sources, so)
+        step = "dlopen"
         lib = ctypes.CDLL(so)
+        step = "symbol setup"
         u8p = ctypes.POINTER(ctypes.c_uint8)
         lib.fsst_compress.restype = ctypes.c_long
         lib.fsst_compress.argtypes = [
@@ -178,10 +188,16 @@ def load() -> ctypes.CDLL | None:
         lib.alp_rd_encode_f4.argtypes = [
             ctypes.POINTER(ctypes.c_float), ctypes.c_long, ctypes.c_int,
             u16p, ctypes.c_int, u64p, u64p, u64p, u16p]
-        lib.alp_rd_decode.restype = None
+        lib.alp_rd_decode.restype = ctypes.c_long
         lib.alp_rd_decode.argtypes = [
             u64p, u64p, ctypes.c_int, u16p, ctypes.c_long, ctypes.c_long,
             u64p]
+        lib.alp_choose_pair.restype = None
+        lib.alp_choose_pair.argtypes = [
+            ctypes.POINTER(ctypes.c_double), ctypes.c_void_p, ctypes.c_int,
+            ctypes.c_long, ctypes.POINTER(ctypes.c_double),
+            ctypes.POINTER(ctypes.c_double), ctypes.POINTER(ctypes.c_double),
+            ctypes.c_long, i64p, i64p, i64p]
         i64p = ctypes.POINTER(ctypes.c_int64)
         lib.html_extract_batch.restype = ctypes.c_long
         lib.html_extract_batch.argtypes = [
@@ -191,7 +207,9 @@ def load() -> ctypes.CDLL | None:
             i64p, i64p, i64p, u8p,
             ctypes.c_long, ctypes.c_long]
         _lib = lib
-    except Exception:
+    except Exception as e:
+        _log.warning("native kernels unavailable (%s failed: %s: %s); "
+                     "using the numpy fallbacks", step, type(e).__name__, e)
         _lib = None
     return _lib
 

@@ -65,12 +65,11 @@ def _part_expr(partition_key, num_partitions: int):
 
 
 def completed_parts(spark, path: str) -> set[int]:
-    mpath = os.path.join(path, "manifest")
-    try:
-        rows = spark.read.parquet(mpath).select("part_id").distinct().collect()
-        return {r.part_id for r in rows}
-    except Exception:
-        return set()
+    """part_ids in the manifest under ``path``, read with pyarrow on the
+    driver: empty when no manifest exists yet, ValueError naming the
+    directory when it is unreadable (never "nothing done")."""
+    m = _fused_manifest_table(path, ["part_id"])
+    return set() if m is None else set(m.column("part_id").to_pylist())
 
 
 def encode_to_dir(df, path: str, partition_key="url", num_partitions: int = 32,

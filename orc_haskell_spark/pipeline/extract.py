@@ -390,7 +390,15 @@ def _native_parse_batch(srcs: list[str]):
     lib = native.load()
     if lib is None or not hasattr(lib, "html_extract_batch"):
         return None
-    bts = [s.encode("utf-8") for s in srcs]
+    # a lone surrogate has no UTF-8 form: such a document goes to the
+    # kernel empty and is flagged for the per-document Python fallback
+    bts, unencodable = [], []
+    for d, s in enumerate(srcs):
+        try:
+            bts.append(s.encode("utf-8"))
+        except UnicodeEncodeError:
+            bts.append(b"")
+            unencodable.append(d)
     off = np.zeros(len(bts) + 1, np.int64)
     off[1:] = np.cumsum([len(b) for b in bts])
     nb = int(off[-1])
@@ -425,6 +433,7 @@ def _native_parse_batch(srcs: list[str]):
             native.ptr(doc_best, i64), native.ptr(doc_fallback, u8),
             max_chunks, max_conts)
         if rc == 0:
+            doc_fallback[unencodable] = 1
             return (buf, chunk_a, chunk_b, chunk_flags, cont_c0,
                     cont_c1, doc_chunk_end, doc_best, doc_fallback)
         if max_chunks >= cap_chunks and max_conts >= cap_conts:

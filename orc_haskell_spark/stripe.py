@@ -171,7 +171,10 @@ def _encode_values(arr: pa.Array, cfg: dict, cache: dict | None = None,
             fcodec, arts = selector.choose_float_codec(
                 vals, cfg.get("compression", "none"),
                 cfg.get("compression_level"), return_artifacts=True)
-            if cache is not None:
+            # a stripe below the trial floor gets "raw" unmeasured:
+            # caching that would pin raw for the rest of the task
+            if (cache is not None
+                    and vals.nbytes >= selector.FLOAT_BSS_MIN_BYTES):
                 cache[fkey] = fcodec
         if fcodec == "alp_rd":
             enc = arts.get("alp_rd") or alp.rd_encode(vals)

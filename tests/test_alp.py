@@ -292,6 +292,39 @@ def test_forced_rd_on_incompressible_column_falls_back_to_raw():
     assert np.array_equal(_bits(np.asarray(dec)), _bits(noise))
 
 
+
+def test_rd_corrupt_codes_raise_on_both_paths():
+    """A code outside the left dictionary is a corrupt stripe: the C
+    decoder must raise like the numpy twin, never decode dict[0]."""
+    rng = np.random.default_rng(16)
+    vals = 1.0 + rng.uniform(0.0, 1e-3, 8_000)  # one left part
+    cfg = dict(stripe.DEFAULT_CONFIG, float_codec="alp_rd",
+               compression="none")
+    meta, streams = stripe.encode_column("x", pa.array(vals), cfg)
+    assert meta["codec"] == "alp_rd" and len(meta["dict"]) < 8
+    streams = dict(streams, RD_CODES=b"\xff" * len(streams["RD_CODES"]))
+    with pytest.raises(ValueError, match="ALP-RD"):
+        stripe.decode_column(meta, streams, pa.float64())
+    with pytest.raises(ValueError, match="ALP-RD"):
+        _numpy_twin(stripe.decode_column, meta, streams, pa.float64())
+
+
+def test_tiny_first_stripe_does_not_pin_float_codec():
+    """A first stripe below the selector's trial floor encodes raw
+    unmeasured; that verdict must not be cached for the task."""
+    rng = np.random.default_rng(17)
+    cache: dict = {}
+    small = pa.record_batch({"p": pa.array(
+        np.round(rng.uniform(0, 100, 100), 2))})
+    big = pa.record_batch({"p": pa.array(
+        np.round(rng.uniform(0, 10_000, 65_536), 2))})
+    f_small, _ = stripe.encode_stripe(small, stripe.DEFAULT_CONFIG, cache)
+    assert f_small["columns"][0]["meta"]["codec"] == "raw"
+    f_big, payload = stripe.encode_stripe(big, stripe.DEFAULT_CONFIG, cache)
+    assert f_big["columns"][0]["meta"]["codec"] == "alp"
+    assert stripe.decode_stripe(f_big, payload).equals(big)
+
+
 # ------------------------------------------------- C kernel ↔ numpy twin
 
 
@@ -364,3 +397,88 @@ def test_property_rd_c_numpy_identity(xs, dtype):
                           c_enc[4], c_enc[5].tobytes(), dtype)
     assert np.array_equal(_bits(c_dec), _bits(np_dec))
     assert np.array_equal(_bits(c_dec), _bits(vals))
+
+
+def _numpy_twin(fn, *args):
+    """Run ``fn`` with the C kernels swapped out (the numpy twins)."""
+    from orc_haskell_spark.codecs import native
+
+    saved = (native._lib, native._tried)
+    try:
+        native._lib, native._tried = None, True
+        return fn(*args)
+    finally:
+        native._lib, native._tried = saved
+
+
+def _assert_pair_parity(vals: np.ndarray):
+    from orc_haskell_spark.codecs import native
+
+    if native.load() is None:
+        pytest.skip("no C compiler")
+    assert alp.choose_pair(vals) == _numpy_twin(alp.choose_pair, vals)
+
+
+_PAIR_SPECIALS = [np.nan, np.inf, -np.inf, -0.0, 0.0, 5e-324, 1e-310,
+                  1e-45, 2.0 ** 62, -(2.0 ** 62), 4.7e17, 9.3e18, 1e300]
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.lists(
+    st.one_of(
+        st.integers(-10**6, 10**6).map(lambda i: i / 100.0),    # prices
+        st.integers(-10**9, 10**9).map(lambda i: i / 10**5),    # other scale
+        st.integers(-2**63, 2**63).map(float),                  # huge ints
+        st.floats(1e15, 1e19),          # |x| * 10^e crosses 2^62
+        st.floats(width=64, allow_nan=True, allow_infinity=True),
+        st.sampled_from(_PAIR_SPECIALS)),
+    max_size=600),
+    st.sampled_from([np.float32, np.float64]))
+def test_property_choose_pair_c_numpy_identity(xs, dtype):
+    """alp_choose_pair (C scan, early abandon) picks the same (e, f) as
+    the numpy broadcast, or None on both — NaN, infinities, -0.0,
+    denormals, out-of-range products and mixed scales included."""
+    with np.errstate(over="ignore"):
+        _assert_pair_parity(np.array(xs, dtype=dtype))
+
+
+@pytest.mark.parametrize("dtype", [np.float32, np.float64])
+@pytest.mark.parametrize("case", [
+    "empty", "one", "one_nan", "n2049", "all_exceptions", "mixed_scale",
+    "noise", "huge"])
+def test_choose_pair_c_numpy_identity_edges(case, dtype):
+    rng = np.random.default_rng(21)
+    vals = {
+        "empty": lambda: np.array([]),
+        "one": lambda: np.array([12.34]),
+        "one_nan": lambda: np.array([np.nan]),
+        "n2049": lambda: rng.integers(0, 10**5, 2049) / 100,
+        "all_exceptions": lambda: np.full(3000, np.nan),
+        "mixed_scale": lambda: np.concatenate(
+            [rng.integers(0, 10**4, 1500) / 10,
+             rng.integers(0, 10**8, 1500) / 10**6]),
+        "noise": lambda: rng.normal(size=5000),
+        "huge": lambda: rng.integers(2**55, 2**62, 4000).astype(np.float64),
+    }[case]()
+    _assert_pair_parity(vals.astype(dtype))
+
+
+def test_choose_pair_pins_lineitem_shaped_columns():
+    """Exact pairs on TPC-H-shaped doubles, on both paths."""
+    rng = np.random.default_rng(22)
+    n = 60_000
+    quantity = rng.integers(1, 51, n).astype(np.float64)
+    partkey = rng.integers(1, 20_001, n)
+    retail = (90_000 + (partkey // 10) % 20_001
+              + 100 * (partkey % 1000)) / 100
+    cols = {
+        "quantity": quantity,
+        "extendedprice": np.round(quantity * retail, 2),
+        "discount": rng.integers(0, 11, n) / 100,
+        "tax": rng.integers(0, 9, n) / 100,
+    }
+    want = {"quantity": (0, 0), "extendedprice": (14, 12),
+            "discount": (2, 0), "tax": (2, 0)}
+    assert {k: alp.choose_pair(v) for k, v in cols.items()} == want
+    assert {k: _numpy_twin(alp.choose_pair, v)
+            for k, v in cols.items()} == want

@@ -242,6 +242,39 @@ def test_fsst_native_and_numpy_interchangeable():
     assert len(pay_c) <= len(pay_np)
 
 
+
+def test_native_load_failure_warns_once(monkeypatch, tmp_path, caplog):
+    """A failed kernel build logs ONE warning naming the failed step
+    (numpy then runs every kernel); ORC_HS_NO_NATIVE=1 logs nothing."""
+    import logging
+
+    from orc_haskell_spark.codecs import native
+
+    def broken_compile(sources, out_path):
+        raise OSError("cc: not found")
+
+    monkeypatch.setenv("ORC_HS_NATIVE_DIR", str(tmp_path))
+    monkeypatch.delenv("ORC_HS_NO_NATIVE", raising=False)
+    monkeypatch.setattr(native, "_compile", broken_compile)
+    monkeypatch.setattr(native, "_lib", None)
+    monkeypatch.setattr(native, "_tried", False)
+    caplog.set_level(logging.WARNING, logger="orc_haskell_spark.native")
+    assert native.load() is None
+    assert native.load() is None
+    warns = [r for r in caplog.records
+             if r.name == "orc_haskell_spark.native"]
+    assert len(warns) == 1 and warns[0].levelno == logging.WARNING
+    assert "compile failed" in warns[0].getMessage()
+    assert "cc: not found" in warns[0].getMessage()
+
+    caplog.clear()
+    monkeypatch.setenv("ORC_HS_NO_NATIVE", "1")
+    monkeypatch.setattr(native, "_tried", False)
+    assert native.load() is None
+    assert not [r for r in caplog.records
+                if r.name == "orc_haskell_spark.native"]
+
+
 def test_fsst_fallback_roundtrip_no_native(monkeypatch):
     """Full roundtrip with the native kernel disabled: the numpy path
     must remain a complete, correct implementation."""

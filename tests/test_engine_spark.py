@@ -106,6 +106,28 @@ def test_manifest_resume(spark, tmp_path):
     assert m.agg(F.sum("rows")).collect()[0][0] == 3000
 
 
+
+def test_manifest_resume_refuses_corrupt_manifest(spark, tmp_path):
+    """encode_to_dir reads its ledger on the driver: a corrupt manifest
+    part raises naming the directory before any Spark job runs, instead
+    of reading as "nothing done" and re-appending every part's rows."""
+    path = str(tmp_path / "enc")
+    df = gen.pages_df(spark, 1000, num_partitions=2)
+    r1 = manifest.encode_to_dir(df, path, partition_key="url",
+                                num_partitions=4, stripe_rows=500)
+    assert r1["parts_encoded"] == 4
+    mdir = tmp_path / "enc" / "manifest"
+    (mdir / "part-99999-corrupt.parquet").write_bytes(b"not parquet")
+
+    def resume():
+        with pytest.raises(ValueError, match=re.escape(str(mdir))):
+            manifest.encode_to_dir(df, path, partition_key="url",
+                                   num_partitions=4, stripe_rows=500)
+
+    _, n_jobs = _jobs(spark, "corrupt-manifest-resume", resume)
+    assert n_jobs == 0
+
+
 def test_gen_deterministic_across_partitionings(spark):
     a = gen.pages_df(spark, 1000, num_partitions=1)
     b = gen.pages_df(spark, 1000, num_partitions=7)

@@ -337,3 +337,28 @@ def test_c_kernel_unterminated_quote_startend_bails():
             extract.main_content(h, "fast"), repr(h)
         assert extract.visible_text_batch([h])[0] == \
             extract.visible_text(h, "fast"), repr(h)
+
+
+def test_c_kernel_lone_surrogate_falls_back_per_document(monkeypatch):
+    # a lone surrogate has no UTF-8 form: only that document takes the
+    # per-document Python fallback, the rest of the batch stays native
+    from orc_haskell_spark.codecs import native
+
+    if native.load() is None:
+        pytest.skip("no native kernels")
+    ok = ["<main><p>first page body words</p></main>",
+          "<div>second <b>page</b> &amp; more</div>"]
+    bad = "<main><p>broken \ud800 text here</p></main>"
+    want_ok = extract.main_content_batch(ok)
+    want_bad = extract.main_content(bad, "fast")
+    calls = []
+    real = extract.main_content
+    monkeypatch.setattr(extract, "main_content",
+                        lambda h, eng="fast": calls.append(h) or real(h, eng))
+    got = extract.main_content_batch([ok[0], bad, ok[1]])
+    assert calls == [bad]
+    assert [got[0], got[2]] == want_ok
+    assert got[1] == want_bad
+    vis = extract.visible_text_batch([ok[0], bad, ok[1]])
+    assert vis[1] == extract.visible_text(bad, "fast")
+    assert [vis[0], vis[2]] == extract.visible_text_batch(ok)

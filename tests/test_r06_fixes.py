@@ -1,5 +1,5 @@
 """Round-6 correctness fixes (ADVICE.md): front-code trial edge cases
-and the ALP-RD C decoder bounds clamp."""
+and the ALP-RD decoder's bounds check."""
 
 import numpy as np
 import pyarrow as pa
@@ -58,19 +58,28 @@ def test_fc_still_wins_on_sorted_urls():
     assert cache.get(("directfc_verified", "s")) is True
 
 
-def test_alp_rd_decode_clamps_corrupt_codes():
-    # ADVICE low: a corrupt stripe's code beyond the dictionary must not
-    # read out of bounds in the C kernel; it decodes via dict[0] instead
+def _rd_decode_raises_on_both_paths(monkeypatch, codes, dict_left):
     from orc_haskell_spark.codecs import native
 
     if native.load() is None:
         pytest.skip("no native kernels on this box")
-    dict_left = np.array([1, 2, 3], np.uint16)
-    codes = np.array([0, 1, 2, 250], np.uint64)  # 250 is out of range
-    right = np.zeros(4, np.uint64)
-    out = alp.rd_decode(codes, right, 4, dict_left,
-                        np.array([], np.uint64), b"", np.float32)
-    assert out.shape == (4,)  # no crash, deterministic output
+    args = (codes, np.zeros(len(codes), np.uint64), 4, dict_left,
+            np.array([], np.uint64), b"", np.float32)
+    with pytest.raises(ValueError, match="corrupt ALP-RD stripe"):
+        alp.rd_decode(*args)
+    monkeypatch.setattr(native, "_lib", None)
+    monkeypatch.setattr(native, "_tried", True)
+    with pytest.raises(ValueError, match="corrupt ALP-RD stripe"):
+        alp.rd_decode(*args)
+
+
+def test_alp_rd_decode_rejects_corrupt_codes(monkeypatch):
+    # ADVICE low: a corrupt stripe's code beyond the dictionary must not
+    # read out of bounds in the C kernel, nor decode as dict[0]: both
+    # paths raise the same error
+    _rd_decode_raises_on_both_paths(
+        monkeypatch, np.array([0, 1, 2, 250], np.uint64),  # 250: bad
+        np.array([1, 2, 3], np.uint16))
 
 
 def test_alp_rd_roundtrip_unchanged():
@@ -125,15 +134,8 @@ def test_float_choice_cached_and_artifacts_reused():
     assert d.column(0).to_pylist() == one.column(0).to_pylist()
 
 
-def test_alp_rd_decode_empty_dictionary():
-    # review-found: the bounds clamp still read dict[0] when the
-    # dictionary itself was empty (dn == 0)
-    from orc_haskell_spark.codecs import native
-
-    if native.load() is None:
-        pytest.skip("no native kernels")
-    out = alp.rd_decode(np.array([5, 9], np.uint64),
-                        np.zeros(2, np.uint64), 4,
-                        np.array([], np.uint16),
-                        np.array([], np.uint64), b"", np.float32)
-    assert out.shape == (2,)
+def test_alp_rd_decode_empty_dictionary(monkeypatch):
+    # review-found: the bounds check must not read dict[0] when the
+    # dictionary itself is empty (dn == 0): every code is out of range
+    _rd_decode_raises_on_both_paths(
+        monkeypatch, np.array([5, 9], np.uint64), np.array([], np.uint16))
