@@ -4,10 +4,14 @@ The reference is a single-process streaming encoder (stripe-at-a-time,
 constant memory — src/Orc/Serial/Binary/Striped.hs:560-635). Here Spark
 provides the parallel "stripe directory": each task's Arrow batches are
 re-chunked to exact stripe_rows stripes and encoded entirely JVM→Arrow→
-numpy, one output row per stripe. No per-row Python anywhere; no
-collect() on the hot path (the iterator form of mapInArrow never holds
-more than one stripe per task, preserving the reference's constant-memory
-property proved by test/Test/Orc/Memory/Leaks.hs).
+numpy, one output row per stripe. ``encode_stripes`` is that loop, the
+one every encode sink runs (``make_encode_fn`` and through it
+``encode_table``/``encode_parquet``/``encode_orc``, and the
+``manifest`` sinks); ``stripe_row`` builds each stripe's record. No
+per-row Python anywhere; no collect() on the hot path (the iterator
+form of mapInArrow never holds more than one stripe per task,
+preserving the reference's constant-memory property proved by
+test/Test/Orc/Memory/Leaks.hs).
 
 Scale design (100 TB / 1000 executors):
 - encode is shuffle-free by default: narrow map over whatever
@@ -93,7 +97,7 @@ def _rechunk(batches: Iterator[pa.RecordBatch], stripe_rows: int,
             tbl = pa.Table.from_batches(pending)
             head = tbl.slice(0, take).combine_chunks()
             rest = tbl.slice(take).combine_chunks()
-            yield head.to_batches()[0] if head.num_rows else None
+            yield head.to_batches()[0]
             pending = [b for b in rest.to_batches() if b.num_rows]
             pending_rows = sum(b.num_rows for b in pending)
             pending_bytes = sum(b.nbytes for b in pending)
@@ -102,42 +106,50 @@ def _rechunk(batches: Iterator[pa.RecordBatch], stripe_rows: int,
         yield tbl.to_batches()[0]
 
 
+def encode_stripes(batches: Iterator[pa.RecordBatch], stripe_rows: int,
+                   stripe_bytes: int, config: dict | None, cache: dict
+                   ) -> Iterator[tuple[pa.RecordBatch, str, bytes]]:
+    """The one worker encode loop of every encode sink: re-chunk
+    ``batches`` into stripes of ≤stripe_rows rows and ~≤stripe_bytes
+    bytes and encode each, yielding ``(stripe batch, footer JSON,
+    payload)``. ``cache`` holds the codec state (selector verdicts, FSST
+    tables) shared by the stripes encoded with it; its scope is the
+    caller's. ``config["sort_within"]`` (stripe-local clustering) is
+    applied inside ``stripe.encode_stripe``."""
+    clamp_worker_threads()
+    for b in _rechunk(batches, stripe_rows, stripe_bytes):
+        # looked up through the module on every stripe, so a wrapper
+        # installed on stripe.encode_stripe sees each call
+        footer, payload = stripe_mod.encode_stripe(b, config, cache)
+        yield b, json.dumps(footer, separators=(",", ":")), payload
+
+
+def stripe_row(part_id: int, stripe_id: int, b: pa.RecordBatch,
+               footer_json: str, payload: bytes) -> pa.RecordBatch:
+    """One encoded stripe as a one-row ``ENCODED_ARROW_SCHEMA`` batch."""
+    vals = [part_id, stripe_id, b.num_rows, b.num_columns, b.nbytes,
+            len(payload), footer_json, payload]
+    return pa.RecordBatch.from_arrays(
+        [pa.array([v], f.type) for v, f in zip(vals, ENCODED_ARROW_SCHEMA)],
+        schema=ENCODED_ARROW_SCHEMA)
+
+
 def make_encode_fn(stripe_rows: int = DEFAULT_STRIPE_ROWS,
                    stripe_bytes: int = DEFAULT_STRIPE_BYTES,
                    config: dict | None = None):
-    """Build the mapInArrow function: Iterator[RecordBatch] -> encoded rows."""
-
-    # config["sort_within"] (compression-aware stripe-local clustering)
-    # is applied inside stripe_mod.encode_stripe so every encode
-    # surface — this mapInArrow path, the fused scan paths, and the
-    # manifest sinks — shares one implementation.
+    """Build the mapInArrow function: Iterator[RecordBatch] -> encoded
+    rows, stripe ``seq`` of task ``pid`` numbered ``pid << 32 | seq``
+    with one codec cache per task."""
 
     def encode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
 
-        clamp_worker_threads()
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else 0
-        seq = 0
-        cache: dict = {}  # per-task codec state (e.g. FSST tables)
-        for b in _rechunk(batches, stripe_rows, stripe_bytes):
-            if b is None or b.num_rows == 0:
-                continue
-            footer, payload = stripe_mod.encode_stripe(b, config, cache)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([pid], pa.int32()),
-                    pa.array([(pid << 32) | seq], pa.int64()),
-                    pa.array([b.num_rows], pa.int64()),
-                    pa.array([b.num_columns], pa.int32()),
-                    pa.array([b.nbytes], pa.int64()),
-                    pa.array([len(payload)], pa.int64()),
-                    pa.array([json.dumps(footer, separators=(",", ":"))]),
-                    pa.array([payload], pa.binary()),
-                ],
-                schema=ENCODED_ARROW_SCHEMA,
-            )
-            seq += 1
+        stripes = encode_stripes(batches, stripe_rows, stripe_bytes,
+                                 config, {})
+        for seq, enc in enumerate(stripes):
+            yield stripe_row(pid, (pid << 32) | seq, *enc)
 
     return encode_fn
 
@@ -479,7 +491,6 @@ def _scan_encode_fn(columns, stripe_rows, stripe_bytes, config, batch_rows,
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from . import sources
 
-        clamp_worker_threads()
         enc = make_encode_fn(stripe_rows, stripe_bytes, config)
 
         def scan() -> Iterator[pa.RecordBatch]:
@@ -849,7 +860,6 @@ def encode_orc(spark, path: str, columns: list[str] | None = None,
                     ) -> Iterator[pa.RecordBatch]:
         from .orcfile.reader import ORCFile as OF
 
-        clamp_worker_threads()
         enc = make_encode_fn(stripe_rows, stripe_bytes, config)
 
         def scan() -> Iterator[pa.RecordBatch]:

@@ -8,6 +8,11 @@ carrying rows/bytes/codec-choice metrics and a lineage stamp (source,
 config hash), checkpointed next to the encoded data so an interrupted
 run re-encodes only missing partitions.
 
+Both sinks here encode through ``engine.encode_stripes``, the one
+worker encode loop; they differ only in stripe numbering, codec-cache
+scope (per part in ``encode_to_dir``, per task in the fused sink) and
+output.
+
 Layout under `path/`:
   stripes/part_id=N/...parquet   encoded stripe rows (engine.ENCODED_DDL)
   manifest/...parquet            stripe directory w/o blobs + lineage
@@ -16,8 +21,11 @@ Layout under `path/`:
 from __future__ import annotations
 
 import hashlib
+import itertools
 import json
 import os
+
+import numpy as np
 
 from . import engine
 
@@ -72,6 +80,38 @@ def completed_parts(spark, path: str) -> set[int]:
     return set() if m is None else set(m.column("part_id").to_pylist())
 
 
+def _part_stripes(df, num_partitions: int, stripe_rows: int, config):
+    """Encoded-stripe rows of ``df`` (which carries a ``_part`` column),
+    one stripe sequence per logical part: the exchange co-locates each
+    part in one task and the sort makes it one consecutive run there, so
+    the worker streams run after run through ``engine.encode_stripes``
+    with a fresh codec cache per part — never more than one stripe of
+    input held, whatever the part's size. The JVM sort spills to disk."""
+    stripe_bytes = engine.DEFAULT_STRIPE_BYTES
+
+    def encode_parts(batches):
+        def runs():  # (part, slice) for each run of one _part value
+            for batch in batches:
+                if batch.num_rows == 0:
+                    continue
+                parts = batch.column("_part").to_numpy()
+                data = batch.drop_columns(["_part"])
+                cuts = [0, *(np.flatnonzero(parts[1:] != parts[:-1]) + 1),
+                        len(parts)]
+                for lo, hi in zip(cuts, cuts[1:]):
+                    yield int(parts[lo]), data.slice(lo, hi - lo)
+
+        for pid, run in itertools.groupby(runs(), key=lambda r: r[0]):
+            stripes = engine.encode_stripes((d for _, d in run), stripe_rows,
+                                            stripe_bytes, config, {})
+            for seq, enc in enumerate(stripes):
+                yield engine.stripe_row(pid, (pid << 32) | seq, *enc)
+
+    return df.repartition(num_partitions, "_part") \
+        .sortWithinPartitions("_part") \
+        .mapInArrow(encode_parts, engine.ENCODED_DDL)
+
+
 def encode_to_dir(df, path: str, partition_key="url", num_partitions: int = 32,
                   stripe_rows: int = engine.DEFAULT_STRIPE_ROWS,
                   config: dict | None = None, source: str = "unknown") -> dict:
@@ -92,59 +132,7 @@ def encode_to_dir(df, path: str, partition_key="url", num_partitions: int = 32,
     with_part = df.withColumn("_part", _part_expr(partition_key, num_partitions))
     todo = with_part.filter(~F.col("_part").isin(list(done))) if done else with_part
 
-    # co-locate each logical part in one task, then strip the helper column
-    repartitioned = todo.repartition(num_partitions, "_part")
-
-    part_col = "_part"
-
-    def encode_with_part(batches):
-        import pyarrow as pa
-
-        from orc_haskell_spark import stripe as stripe_mod
-        from orc_haskell_spark.engine import clamp_worker_threads
-
-        clamp_worker_threads()
-
-        pending: dict[int, list] = {}
-
-        def flush(pid, batch_list):
-            tbl = pa.Table.from_batches(batch_list).combine_chunks()
-            seq = 0
-            cache: dict = {}  # per-part codec state (e.g. FSST tables)
-            for start in range(0, tbl.num_rows, stripe_rows):
-                b = tbl.slice(start, stripe_rows).combine_chunks().to_batches()[0]
-                footer, payload = stripe_mod.encode_stripe(b, config, cache)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([pid], pa.int32()),
-                        pa.array([(pid << 32) | seq], pa.int64()),
-                        pa.array([b.num_rows], pa.int64()),
-                        pa.array([b.num_columns], pa.int32()),
-                        pa.array([b.nbytes], pa.int64()),
-                        pa.array([len(payload)], pa.int64()),
-                        pa.array([json.dumps(footer, separators=(",", ":"))]),
-                        pa.array([payload], pa.binary()),
-                    ],
-                    schema=engine.ENCODED_ARROW_SCHEMA,
-                )
-                seq += 1
-
-        for batch in batches:
-            parts = batch.column(part_col).to_numpy()
-            data = batch.drop_columns([part_col])
-            if len(set(parts.tolist())) == 1:
-                pending.setdefault(int(parts[0]), []).append(data)
-            else:  # split by part (rare: only when input batches mix parts)
-                import numpy as np
-
-                for pid in np.unique(parts):
-                    mask = parts == pid
-                    pending.setdefault(int(pid), []).append(
-                        data.filter(pa.array(mask)))
-        for pid, blist in pending.items():
-            yield from flush(pid, blist)
-
-    enc = repartitioned.mapInArrow(encode_with_part, engine.ENCODED_DDL)
+    enc = _part_stripes(todo, num_partitions, stripe_rows, config)
     spath = os.path.join(path, "stripes")
     # Crash-safety: stripes land before their manifest rows, so a driver
     # crash in that window leaves committed stripes with no manifest.
@@ -229,11 +217,8 @@ def _fused_sink_fn(out_path: str, stripe_rows: int, stripe_bytes: int,
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from . import sources, stripe as stripe_mod
-        from .engine import (ENCODED_ARROW_SCHEMA, _rechunk,
-                             clamp_worker_threads)
+        from . import sources
 
-        clamp_worker_threads()
         splits = sources.split_list(batches)
         if not splits:
             return
@@ -245,11 +230,18 @@ def _fused_sink_fn(out_path: str, stripe_rows: int, stripe_bytes: int,
         # manifest coverage is lost and it is re-encoded under a new
         # task_key, the old part's stripes for that split become
         # invisible instead of duplicating rows.
-        out_schema = pa.schema(list(ENCODED_ARROW_SCHEMA)
+        out_schema = pa.schema(list(engine.ENCODED_ARROW_SCHEMA)
                                + [pa.field("task_key", pa.string()),
                                   pa.field("file", pa.string()),
                                   pa.field("rg", pa.int32())])
-        manifest_rows = []
+        # parquet statistics and dictionaries only on the small columns:
+        # on the multi-MB data values and the footer JSON they cost more
+        # than the stripe write, and nothing reads them
+        small = [n for n in out_schema.names if n not in ("footer", "data")]
+        # the manifest rows (FUSED_MANIFEST_DDL): each stripe row less data
+        ledger_cols = ["task_key", "file", "rg", "stripe_id", "n_rows",
+                       "raw_bytes", "enc_bytes", "footer"]
+        ledger = []
         writer = None
         handles = sources.ParquetHandleCache()
         rg_offsets: dict = {}
@@ -258,44 +250,28 @@ def _fused_sink_fn(out_path: str, stripe_rows: int, stripe_bytes: int,
         # is safe and skips re-training per 25k-row split
         try:
             writer = pq.ParquetWriter(staging, out_schema,
-                                      compression="NONE", filesystem=fs)
+                                      compression="NONE", filesystem=fs,
+                                      write_statistics=small,
+                                      use_dictionary=small)
             for f, rg in splits:
-                pf = handles.get(f)
-
-                def scan():
-                    from .engine import scan_row_group
-
-                    yield from scan_row_group(
-                        pf, f, rg, batch_rows,
-                        drop_positions=drop_positions,
-                        rg_offsets=rg_offsets, drop_values=drop_values,
-                        residual=residual)
-
-                seq = 0
-                for sb in _rechunk(scan(), stripe_rows, stripe_bytes):
-                    if sb is None or sb.num_rows == 0:
-                        continue
-                    footer, payload = stripe_mod.encode_stripe(
-                        sb, config, cache)
-                    fjson = json.dumps(footer, separators=(",", ":"))
-                    sid = (rg << 20) | seq
-                    writer.write_batch(pa.RecordBatch.from_arrays(
-                        [pa.array([0], pa.int32()),
-                         pa.array([sid], pa.int64()),
-                         pa.array([sb.num_rows], pa.int64()),
-                         pa.array([sb.num_columns], pa.int32()),
-                         pa.array([sb.nbytes], pa.int64()),
-                         pa.array([len(payload)], pa.int64()),
-                         pa.array([fjson]),
-                         pa.array([payload], pa.binary()),
-                         pa.array([key]),
-                         pa.array([f]),
-                         pa.array([rg], pa.int32())],
-                        schema=out_schema))
-                    manifest_rows.append(
-                        (key, f, rg, sid, sb.num_rows, sb.nbytes,
-                         len(payload), fjson))
-                    seq += 1
+                scan = engine.scan_row_group(
+                    handles.get(f), f, rg, batch_rows,
+                    drop_positions=drop_positions, rg_offsets=rg_offsets,
+                    drop_values=drop_values, residual=residual)
+                stripes = engine.encode_stripes(scan, stripe_rows,
+                                                stripe_bytes, config, cache)
+                for seq, enc in enumerate(stripes):
+                    row = engine.stripe_row(0, (rg << 20) | seq, *enc)
+                    row = pa.RecordBatch.from_arrays(
+                        row.columns + [pa.array([key]), pa.array([f]),
+                                       pa.array([rg], pa.int32())],
+                        schema=out_schema)
+                    writer.write_batch(row)
+                    ledger.append(row.select(ledger_cols))
+                    # free this stripe's batch and payload copies before
+                    # the next stripe encodes (pages bench, 4-core VM:
+                    # worker peak RSS 242 → 218 MB)
+                    del row, enc
             writer.close()
             writer = None
             sources.commit_part(fs, staging, final)
@@ -303,14 +279,9 @@ def _fused_sink_fn(out_path: str, stripe_rows: int, stripe_bytes: int,
             if writer is not None:
                 writer.close()
             sources.discard_part(fs, staging)
-        if manifest_rows:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([r[i] for r in manifest_rows], t)
-                 for i, t in enumerate(
-                     [pa.string(), pa.string(), pa.int32(), pa.int64(),
-                      pa.int64(), pa.int64(), pa.int64(), pa.string()])],
-                names=["task_key", "file", "rg", "stripe_id", "n_rows",
-                       "raw_bytes", "enc_bytes", "footer"])
+        if ledger:
+            yield from pa.Table.from_batches(ledger).combine_chunks() \
+                .to_batches()
 
     return fn
 

@@ -89,10 +89,12 @@ def _encode_int_stream(vals: np.ndarray, cfg: dict) -> tuple[str, bytes]:
     return "rle2", rle2.encode(vals, True)
 
 
-def _decode_int_stream(buf: np.ndarray, codec: str) -> np.ndarray:
+def _decode_int_stream(buf: np.ndarray, codec: str, n: int) -> np.ndarray:
+    """The first ``n`` values (the footer's count): the C kernel then
+    fills a buffer of that size instead of guessing and re-decoding."""
     if codec == "rle1":
-        return rle1.decode(buf, True)
-    return rle2.decode(buf, True)
+        return rle1.decode(buf, True, n)
+    return rle2.decode(buf, True, n)
 
 
 def _encode_uint_stream(vals: np.ndarray, cfg: dict) -> tuple[str, bytes]:
@@ -102,10 +104,10 @@ def _encode_uint_stream(vals: np.ndarray, cfg: dict) -> tuple[str, bytes]:
     return "rle2", rle2.encode(vals, False)
 
 
-def _decode_uint_stream(buf: np.ndarray, codec: str) -> np.ndarray:
+def _decode_uint_stream(buf: np.ndarray, codec: str, n: int) -> np.ndarray:
     if codec == "rle1":
-        return rle1.decode(buf, False)
-    return rle2.decode(buf, False)
+        return rle1.decode(buf, False, n)
+    return rle2.decode(buf, False, n)
 
 
 # ------------------------------------------------------------------ column encode
@@ -342,7 +344,9 @@ def _encode_string(arr: pa.Array, cfg: dict, cache: dict | None = None,
             choice, trial_table = selector.choose_string_codec(
                 arr, data, ("dict", "fsst", "direct"),
                 cfg.get("compression", "none"), cfg.get("compression_level"))
-            if cache is not None:
+            # FSST is no candidate below its floor: caching that
+            # verdict would lock FSST out for the rest of the task
+            if cache is not None and data.nbytes >= selector.FSST_MIN_BYTES:
                 cache[ckey] = choice
                 # reuse the trial's trained FSST table: training is the
                 # bulk of a cold task's cost now that compression is C
@@ -478,7 +482,7 @@ def _decode_values(meta: dict, streams: dict[str, bytes], n: int,
         return pa.array(mask, type=pa.bool_())
 
     if kind == "int":
-        vals = _decode_int_stream(_buf(streams["DATA"]), meta["codec"])[:n]
+        vals = _decode_int_stream(_buf(streams["DATA"]), meta["codec"], n)
         return _fixed_width_array(typ, n, vals)
 
     if kind == "float":
@@ -490,15 +494,15 @@ def _decode_values(meta: dict, streams: dict[str, bytes], n: int,
             codes = bitpack.unpack_width(_buf(streams["RD_CODES"]), n,
                                          alp.RD_DICT_BITS)
             pos = _decode_uint_stream(_buf(streams["RD_EXC_POS"]),
-                                      meta["pcodec"])[:meta["n_exc"]]
+                                      meta["pcodec"], meta["n_exc"])
             vals = alp.rd_decode(codes, right, meta["r"],
                                  np.asarray(meta["dict"], np.uint16),
                                  pos, streams["RD_EXC"], dt)
         elif fcodec == "alp":
             ints = _decode_int_stream(_buf(streams["DATA"]),
-                                      meta["icodec"])[:n]
+                                      meta["icodec"], n)
             pos = _decode_uint_stream(_buf(streams["ALP_POS"]),
-                                      meta["pcodec"])[:meta["n_exc"]]
+                                      meta["pcodec"], meta["n_exc"])
             vals = alp.decode(ints, meta["e"], meta["f"], pos,
                               streams["ALP_EXC"], dt)
         elif fcodec == "bss":
@@ -508,8 +512,8 @@ def _decode_values(meta: dict, streams: dict[str, bytes], n: int,
         return pa.array(vals, type=typ)
 
     if kind == "timestamp":
-        secs = _decode_int_stream(_buf(streams["DATA"]), meta["codec"])[:n]
-        packed = _decode_uint_stream(_buf(streams["SECONDARY"]), meta["ncodec"])[:n]
+        secs = _decode_int_stream(_buf(streams["DATA"]), meta["codec"], n)
+        packed = _decode_uint_stream(_buf(streams["SECONDARY"]), meta["ncodec"], n)
         us = timestamps.join_micros(secs, timestamps.decode_nanos(packed))
         return _fixed_width_array(typ, n, us)
 
@@ -517,7 +521,7 @@ def _decode_values(meta: dict, streams: dict[str, bytes], n: int,
         return _decode_string(meta, streams, n, typ)
 
     if kind == "list":
-        lengths = _decode_uint_stream(_buf(streams["LENGTH"]), meta["lcodec"])[:n]
+        lengths = _decode_uint_stream(_buf(streams["LENGTH"]), meta["lcodec"], n)
         child_streams = {k[len("item."):]: v for k, v in streams.items()
                          if k.startswith("item.")}
         child = decode_column(meta["child"], child_streams, typ.value_type)
@@ -530,8 +534,8 @@ def _decode_values(meta: dict, streams: dict[str, bytes], n: int,
         )
 
     if kind == "decimal":
-        lo = _decode_uint_stream(_buf(streams["DATA"]), meta["locodec"])[:n]
-        hi = _decode_int_stream(_buf(streams["SECONDARY"]), meta["hicodec"])[:n]
+        lo = _decode_uint_stream(_buf(streams["DATA"]), meta["locodec"], n)
+        hi = _decode_int_stream(_buf(streams["SECONDARY"]), meta["hicodec"], n)
         limbs = np.empty((n, 2), dtype=np.uint64)
         limbs[:, 0] = lo
         limbs[:, 1] = hi.view(np.uint64)
@@ -539,7 +543,7 @@ def _decode_values(meta: dict, streams: dict[str, bytes], n: int,
             typ, n, [None, pa.py_buffer(limbs.tobytes())])
 
     if kind == "map":
-        lengths = _decode_uint_stream(_buf(streams["LENGTH"]), meta["lcodec"])[:n]
+        lengths = _decode_uint_stream(_buf(streams["LENGTH"]), meta["lcodec"], n)
         kstreams = {k[len("key."):]: v for k, v in streams.items()
                     if k.startswith("key.")}
         vstreams = {k[len("value."):]: v for k, v in streams.items()
@@ -617,23 +621,24 @@ def _fixed_width_array(typ: pa.DataType, n: int, int64_vals: np.ndarray) -> pa.A
 
 def _decode_string(meta, streams, n, typ):
     enc = meta["enc"]
-    lengths = _decode_uint_stream(_buf(streams["LENGTH"]), meta["lcodec"]).astype(np.int64)
+    n_len = meta["card"] if enc == "dict" else n  # dictionary entries
+    lengths = _decode_uint_stream(_buf(streams["LENGTH"]), meta["lcodec"], n_len).astype(np.int64)
     if enc == "direct":
         data = _buf(streams["DATA"])
         if meta.get("fc"):
             plens = _decode_uint_stream(_buf(streams["PREFIX"]),
-                                        meta["pcodec"])[:n]
-            data = front_decode(plens, lengths[:n], data)
-        return build_string_array(data, lengths[:n], typ)
+                                        meta["pcodec"], n)
+            data = front_decode(plens, lengths, data)
+        return build_string_array(data, lengths, typ)
     if enc == "fsst":
         data = fsst_codec.decompress(_buf(streams["FSST_TABLE"]), _buf(streams["DATA"]))
-        return build_string_array(data, lengths[:n], typ)
+        return build_string_array(data, lengths, typ)
     if enc == "dict":
-        idx = _decode_uint_stream(_buf(streams["DATA"]), meta["icodec"])[:n]
+        idx = _decode_uint_stream(_buf(streams["DATA"]), meta["icodec"], n)
         ddata = _buf(streams["DICTIONARY_DATA"])
         if meta.get("fc"):
             plens = _decode_uint_stream(_buf(streams["PREFIX"]),
-                                        meta["pcodec"])[:lengths.size]
+                                        meta["pcodec"], lengths.size)
             ddata = front_decode(plens, lengths, ddata)
         return dictionary_decode(idx, lengths, ddata, typ)
     raise NotImplementedError(f"string encoding {enc}")

@@ -216,3 +216,77 @@ def test_truncated_payload_raises():
     footer, payload = stripe.encode_stripe(batch)
     with pytest.raises(ValueError, match="truncated"):
         stripe.decode_stripe(footer, payload[:4])
+
+
+def test_tiny_first_stripe_does_not_pin_string_codec():
+    """A first stripe below FSST's floor is chosen without FSST as a
+    candidate; that verdict must not be cached for the task, or FSST
+    stays locked out of every later stripe."""
+    from orc_haskell_spark.codecs import selector
+
+    rng = np.random.default_rng(5)
+    words = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta",
+             "theta", "kappa", "lambda", "sigma", "omega"]
+
+    def text(n):
+        return pa.record_batch({"s": pa.array(
+            [" ".join(rng.choice(words, 6)) + f" {rng.integers(10**9)}"
+             for _ in range(n)])})
+
+    cache: dict = {}
+    small, big = text(100), text(4000)
+    assert small.nbytes < selector.FSST_MIN_BYTES <= big.column(0).nbytes
+    stripe.encode_stripe(small, stripe.DEFAULT_CONFIG, cache)
+    f_big, payload = stripe.encode_stripe(big, stripe.DEFAULT_CONFIG, cache)
+    assert f_big["columns"][0]["meta"]["enc"] == "fsst"
+    assert stripe.decode_stripe(f_big, payload).equals(big)
+
+
+def _numpy_path(fn):
+    """``fn()`` with the C kernels switched off (numpy twins only)."""
+    from orc_haskell_spark.codecs import native
+
+    saved = (native._lib, native._tried)
+    try:
+        native._lib, native._tried = None, True
+        return fn()
+    finally:
+        native._lib, native._tried = saved
+
+
+def test_int_stream_decodes_in_one_bounded_kernel_call(monkeypatch):
+    """The stripe layer passes the footer's value count to the RLE
+    decoder: a 65,536-value constant stream (far more values than its
+    byte size suggests) decodes in ONE kernel call instead of growing a
+    guessed buffer, and the numpy twin returns the same array."""
+    from orc_haskell_spark.codecs import native
+
+    lib = native.load()
+    if lib is None:
+        pytest.skip("no C compiler")
+    calls = []
+    real = lib.rle2_decode
+
+    def counting(*args):
+        calls.append(args[-1])
+        return real(*args)
+
+    batch = pa.record_batch({"k": pa.array(np.full(65536, 7, np.int64))})
+    footer, payload = stripe.encode_stripe(batch)
+    monkeypatch.setattr(lib, "rle2_decode", counting)
+    assert stripe.decode_stripe(footer, payload).equals(batch)
+    assert calls == [65536]
+    monkeypatch.undo()
+
+    for signed, vals in [(True, np.full(65536, -3, np.int64)),
+                         (True, RNG.integers(-10**12, 10**12, 5000)),
+                         (False, RNG.integers(0, 50, 70000).astype(np.uint64))]:
+        for codec, mod in [("rle2", stripe.rle2), ("rle1", stripe.rle1)]:
+            buf = stripe._buf(mod.encode(vals, signed))
+            dec = (stripe._decode_int_stream if signed
+                   else stripe._decode_uint_stream)
+            for n in (vals.size, vals.size - 7, vals.size + 9):
+                c = dec(buf, codec, n)
+                py = _numpy_path(lambda: dec(buf, codec, n))
+                assert c.dtype == py.dtype and np.array_equal(c, py)
+                assert np.array_equal(c, vals[:n])
