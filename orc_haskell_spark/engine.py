@@ -127,7 +127,8 @@ def encode_stripes(batches: Iterator[pa.RecordBatch], stripe_rows: int,
 def stripe_row(part_id: int, stripe_id: int, b: pa.RecordBatch,
                footer_json: str, payload: bytes) -> pa.RecordBatch:
     """One encoded stripe as a one-row ``ENCODED_ARROW_SCHEMA`` batch."""
-    vals = [part_id, stripe_id, b.num_rows, b.num_columns, b.nbytes,
+    raw = sum(map(stripe_mod.raw_nbytes, b.columns))
+    vals = [part_id, stripe_id, b.num_rows, b.num_columns, raw,
             len(payload), footer_json, payload]
     return pa.RecordBatch.from_arrays(
         [pa.array([v], f.type) for v, f in zip(vals, ENCODED_ARROW_SCHEMA)],
@@ -535,7 +536,7 @@ def encode_parquet(spark, path: str, columns: list[str] | None = None,
     payload crossing, zero row materialization.
 
     Scale notes (100 TB / 1000 executors): splits are row groups, the
-    same granularity Spark's own scan parallelizes by; ``ranges``
+    same granularity Spark's own scan splits by; ``ranges``
     [(col, lo, hi), ...] prunes row groups on parquet stats before any
     data IO and ``columns`` projects at the column-chunk level, so
     pushdown/pruning parity with the Catalyst scan is kept. Reading one
@@ -834,27 +835,27 @@ def encode_orc(spark, path: str, columns: list[str] | None = None,
                stripe_rows: int = DEFAULT_STRIPE_ROWS,
                stripe_bytes: int = DEFAULT_STRIPE_BYTES,
                config: dict | None = None,
-               tasks_per_partition: int = 1,
+               num_partitions: int | None = None,
                files: list[str] | None = None):
     """Fused Python-side scan+encode over REAL ORC files: the ORC
     twin of encode_parquet. The driver reads file tails only to plan
-    (file, stripe) tasks; each worker decodes its stripes with the
-    pure-Python ORC reader and encodes them in place — payload bytes
-    never cross the JVM. ``columns`` projects at the ORC byte level
-    (unrequested subtrees are never decompressed)."""
+    (file, stripe) splits through ``sources.plan_splits`` (LPT-packed
+    into ``num_partitions`` tasks, like encode_parquet); each worker
+    decodes its stripes with the pure-Python ORC reader and encodes
+    them in place — payload bytes never cross the JVM. ``columns``
+    projects at the ORC byte level (unrequested subtrees are never
+    decompressed)."""
     from .orcfile import planner
     from .orcfile.spark_source import _list_orc_files
 
     files = files if files is not None else _list_orc_files(path)
     if not files:
         raise ValueError(f"no .orc files under {path}")
-    # two-mode planner (threaded driver / distributed footer-read
-    # stage): no serial per-file driver loop. check_schema=False keeps
-    # the parquet twin's behavior — each stripe encodes independently.
-    _, task_df = planner.orc_splits_df(
-        spark, files, check_schema=False,
-        tasks_per_partition=tasks_per_partition)
-    task_df = task_df.select("file", "stripe")
+    # check_schema=False keeps the parquet twin's behavior — each
+    # stripe encodes independently
+    _, plan = planner.plan_stripes(spark, files,
+                                   num_partitions=num_partitions,
+                                   check_schema=False)
 
     def scan_encode(batches: Iterator[pa.RecordBatch]
                     ) -> Iterator[pa.RecordBatch]:
@@ -872,4 +873,4 @@ def encode_orc(spark, path: str, columns: list[str] | None = None,
 
         yield from enc(scan())
 
-    return task_df.mapInArrow(scan_encode, ENCODED_DDL)
+    return plan.map_in_arrow(scan_encode, ENCODED_DDL)

@@ -1081,7 +1081,7 @@ def encode_iceberg(spark, table_path: str,
     fields = _schema_of(meta)
     fmts = {f["file_format"].upper() for f in files}
     if fmts == {"ORC"}:
-        # all-ORC snapshot: the fused ORC twin (stripe-granular tasks,
+        # all-ORC snapshot: the fused ORC twin (stripe splits,
         # byte-level projection). Tombstones reference parquet row
         # positions, so delete-bearing ORC snapshots refuse.
         if dels:
@@ -1089,10 +1089,10 @@ def encode_iceberg(spark, table_path: str,
                 "row-level deletes over ORC data files: compact() first")
         return engine.encode_orc(
             spark, table_path, columns=columns,
+            num_partitions=num_partitions,
             files=[f["file_path"] for f in files], **{
                 k: v for k, v in encode_kw.items()
-                if k in ("stripe_rows", "stripe_bytes", "config",
-                         "tasks_per_partition")})
+                if k in ("stripe_rows", "stripe_bytes", "config")})
     if "ORC" in fmts:
         raise NotImplementedError(
             "mixed PARQUET+ORC snapshot on the fused encode path: "

@@ -412,8 +412,9 @@ def read_fused_encoded(spark, path: str):
     (32) explicit paths with a listing job. Otherwise (manifest rows
     lost for part of a task's splits, a split that wrote no stripe, a
     committed part gone missing) the stripes directory is broadcast
-    semi-joined against the ledger, which is exact. A missing or
-    unreadable manifest raises ValueError naming it."""
+    semi-joined against the ledger's distinct (task_key, file, rg)
+    keys, built from the table the driver already read, which is exact.
+    A missing or unreadable manifest raises ValueError naming it."""
     from pyspark.sql import functions as F
 
     m = _fused_manifest_table(path, ["task_key", "file", "rg"])
@@ -425,8 +426,8 @@ def read_fused_encoded(spark, path: str):
     if parts is not None:
         return spark.read.schema(engine.ENCODED_DDL).parquet(*parts)
     stripes = spark.read.parquet(os.path.join(path, "stripes"))
-    keys = read_fused_manifest(spark, path) \
-        .select("task_key", "file", "rg").distinct()
+    keys = spark.createDataFrame(
+        m.group_by(["task_key", "file", "rg"]).aggregate([]))
     return stripes.join(F.broadcast(keys), ["task_key", "file", "rg"],
                         "left_semi").drop("task_key", "file", "rg")
 

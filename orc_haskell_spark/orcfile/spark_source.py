@@ -3,13 +3,16 @@ parallel write.
 
 Scale shape (100 TB): the unit of read parallelism is the STRIPE — the
 same self-contained unit the reference streams one at a time
-(/root/reference/src/Orc/Serial/Binary/Striped.hs stripe reader). The
-driver touches only file TAILS (postscript+footer, a few KB per file)
-to enumerate (file, stripe) tasks; stripe decode fans out via
-mapInArrow, so a directory of thousands of multi-GB ORC files reads
-with full cluster parallelism and zero driver data movement. Writes
-are one ORC file per Spark partition (the standard parquet-style
-layout), each written independently by its task.
+(src/Orc/Serial/Binary/Striped.hs stripe reader). The driver touches
+only file TAILS (postscript+footer, a few KB per file) to list
+(file, stripe) splits, and the scan is planned and launched like every
+fused parquet scan: ``sources.plan_splits`` LPT-packs the splits by
+bytes and ``SplitPlan.map_in_arrow`` runs the stripe decode, so a
+directory of thousands of multi-GB ORC files reads with full cluster
+parallelism and zero driver data movement. ``parquet_to_orc`` plans its
+parquet row groups the same way. Writes are one ORC file per Spark
+partition (the standard parquet-style layout), each written
+independently by its task.
 
 Files must be on storage all executors can reach (local FS here;
 HDFS/S3 via a mounted path on a real cluster — same contract as
@@ -70,11 +73,11 @@ def _read_stripe_pruned(orc, i: int, columns, prune):
 
 
 def read_orc_distributed(spark: SparkSession, path: str,
-                         tasks_per_partition: int = 1,
                          columns: list[str] | None = None,
                          prune: tuple | None = None,
                          files: list[str] | None = None) -> DataFrame:
-    """Read ORC file(s) into a DataFrame, one decode task per stripe.
+    """Read ORC file(s) into a DataFrame, stripes LPT-packed by bytes
+    onto the planner's decode tasks.
 
     100 TB shape: the driver touches only file tails (a few KB each);
     ``columns`` prunes at the BYTE level (unrequested subtrees are
@@ -85,23 +88,23 @@ def read_orc_distributed(spark: SparkSession, path: str,
     and, when the file carries a ROW_INDEX, eliminates 10k-row groups
     INSIDE each surviving stripe via positional seek at decode time.
 
-    Split planning is the two-mode ORC planner (threaded driver tail
-    reads below ``sources.DRIVER_SPLITS_MAX_FILES`` files, a
-    distributed footer-read stage beyond) — no serial per-file driver
-    loop at any file count.
+    Splits are planned by ``sources.plan_splits`` with the ORC stripe
+    lister (``planner.plan_stripes``: threaded driver tail reads below
+    ``sources.DRIVER_SPLITS_MAX_FILES`` files, a distributed footer-read
+    stage beyond) and the decode runs as ``plan.map_in_arrow`` — in
+    driver mode one stage whose only Python process is the decoding
+    worker.
     """
     from orc_haskell_spark.orcfile import planner
 
     files = files if files is not None else _list_orc_files(path)
     if not files:
         raise ValueError(f"no .orc files under {path}")
-    schema, task_df = planner.orc_splits_df(
-        spark, files, ranges=[prune] if prune else None,
-        tasks_per_partition=tasks_per_partition)
+    schema, plan = planner.plan_stripes(
+        spark, files, ranges=[prune] if prune else None)
     if columns is not None:
         schema = pa.schema([schema.field(c) for c in columns])
     spark_schema, arrow_schema = _spark_schema_for(schema)
-    task_df = task_df.select("file", "stripe")
 
     def decode(batches):
         from orc_haskell_spark.engine import clamp_worker_threads
@@ -123,7 +126,7 @@ def read_orc_distributed(spark: SparkSession, path: str,
                     cols.append(col)
                 yield pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
 
-    return task_df.mapInArrow(decode, spark_schema)
+    return plan.map_in_arrow(decode, spark_schema)
 
 
 def write_orc_distributed(df: DataFrame, out_dir: str,
@@ -205,21 +208,14 @@ def parquet_to_orc(spark: SparkSession, in_path: str, out_dir: str,
         "num_partitions": num_partitions})
 
     def convert(batches):
-        import hashlib
-        import json as _json
-
         from orc_haskell_spark.engine import clamp_worker_threads
         from orc_haskell_spark.orcfile.writer import write_orc
 
         clamp_worker_threads()
-        work = []
-        for b in batches:
-            work.extend(zip(b.column("file").to_pylist(),
-                            b.column("rg").to_pylist()))
+        work = sources.split_list(batches)
         if not work:
             return
-        key = hashlib.sha256(
-            _json.dumps(sorted(work)).encode()).hexdigest()[:24]
+        key = sources.task_key(work)
         fs, staging, final = sources.task_output(out_dir, None, key,
                                                  ext=".orc")
         raw_bytes = 0

@@ -11,7 +11,9 @@ through Catalyst's DataSourceV2; nothing in the engine changes.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.errors import AnalysisException
 
 
@@ -43,7 +45,8 @@ def read_stream(spark: SparkSession, source: str, schema) -> DataFrame:
     return spark.readStream.schema(schema).parquet(source)
 
 
-SPLIT_DDL = "file string, rg int, nbytes bigint, nrows bigint"
+SPLIT_SCHEMA = pa.schema([("file", pa.string()), ("rg", pa.int32()),
+                          ("nbytes", pa.int64()), ("nrows", pa.int64())])
 
 
 def list_parquet_files(path: str) -> list[str]:
@@ -121,27 +124,38 @@ def _file_splits(f: str, ranges) -> list[tuple]:
             and _keep_rg(md.row_group(rg), names, ranges)]
 
 
-def _split_batch(rows: list[tuple]):
-    """Arrow batch of (file, rg, nbytes, nrows) split rows (SPLIT_DDL)."""
-    import pyarrow as pa
-
-    types = [pa.string(), pa.int32(), pa.int64(), pa.int64()]
+def _split_batch(rows: list[tuple], schema: pa.Schema) -> pa.RecordBatch:
+    """Arrow batch of split rows, one column per ``schema`` field."""
     return pa.RecordBatch.from_arrays(
-        [pa.array([r[i] for r in rows], t) for i, t in enumerate(types)],
-        names=["file", "rg", "nbytes", "nrows"])
+        [pa.array([r[i] for r in rows], f.type)
+         for i, f in enumerate(schema)], schema=schema)
 
 
-def _splits_fn(ranges):
-    """mapInArrow fn: file-name rows -> one split row per row group."""
+def _splits_fn(lister, ranges, schema: pa.Schema):
+    """mapInArrow fn: file-name rows -> the files' split rows."""
 
     def fn(batches):
         for b in batches:
             for f in b.column("file").to_pylist():
-                rows = _file_splits(f, ranges)
+                rows = lister(f, ranges)
                 if rows:
-                    yield _split_batch(rows)
+                    yield _split_batch(rows, schema)
 
     return fn
+
+
+def list_splits(files: list[str], ranges=None,
+                lister=_file_splits) -> list[tuple]:
+    """``lister(file, ranges)``'s split rows of ``files`` in file order,
+    read by driver threads (footer reads are IO waits); raises the
+    lister's errors."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    if not files:
+        return []
+    with ThreadPoolExecutor(min(16, len(files))) as pool:
+        per_file = pool.map(lambda f: lister(f, ranges), files)
+        return [row for rows in per_file for row in rows]
 
 
 DRIVER_SPLITS_MAX_FILES = 1024
@@ -169,7 +183,7 @@ def lpt_buckets(splits: list[tuple], n: int) -> list[list]:
     return buckets
 
 
-def _bucket_fn(fn, buckets):
+def _bucket_fn(fn, buckets, schema: pa.Schema):
     """Wrap a mapInArrow fn over split rows so it runs over
     ``spark.range`` ids instead: task k builds bucket k's split batch
     from the broadcast ``buckets`` itself, so the sink's own worker is
@@ -178,24 +192,23 @@ def _bucket_fn(fn, buckets):
     def run(batches):
         rows = [r for b in batches for k in b.column(0).to_pylist()
                 for r in buckets.value[k]]
-        return fn(iter([_split_batch(rows)] if rows else []))
+        return fn(iter([_split_batch(rows, schema)] if rows else []))
 
     return run
 
 
-def _pass(batches):
-    return batches
-
-
 class SplitPlan:
-    """The (file, rg, nbytes, nrows) splits of one scan and where they
-    run. Driver mode: ``buckets[k]`` is task k's LPT share. Distributed
-    mode: ``df`` holds the split rows left to run, produced by
-    footer-reading tasks, and ``all_df`` every planned split.
-    ``total`` counts the planned splits before ``skip`` removed any."""
+    """The split rows (of ``schema``; column 2 is the byte weight) of
+    one fused scan and where they run. Driver mode: ``buckets[k]`` is
+    task k's LPT share. Distributed mode: ``df`` holds the split rows
+    left to run, produced by footer-reading tasks, and ``all_df`` every
+    planned split. ``total`` counts the planned splits before ``skip``
+    removed any."""
 
-    def __init__(self, spark, buckets=None, total=0, df=None, all_df=None):
-        self.spark, self.buckets, self.df = spark, buckets, df
+    def __init__(self, spark, schema: pa.Schema = SPLIT_SCHEMA,
+                 buckets=None, total=0, df=None, all_df=None):
+        self.spark, self.schema, self.buckets, self.df = \
+            spark, schema, buckets, df
         self._total, self._all = total, all_df
 
     @property
@@ -211,7 +224,7 @@ class SplitPlan:
             return None
         return sum(len(b) for b in self.buckets)
 
-    def map_in_arrow(self, fn, ddl: str) -> DataFrame:
+    def map_in_arrow(self, fn, ddl) -> DataFrame:
         """``fn`` (a mapInArrow fn over split-row batches) run once per
         task over that task's splits. Driver mode is ONE stage with no
         Python-RDD or metadata hop: ``spark.range(0, n, 1, n)`` gives
@@ -222,7 +235,14 @@ class SplitPlan:
         n = len(self.buckets)
         buckets = self.spark.sparkContext.broadcast(self.buckets)
         return self.spark.range(0, n, 1, max(n, 1)) \
-            .mapInArrow(_bucket_fn(fn, buckets), ddl)
+            .mapInArrow(_bucket_fn(fn, buckets, self.schema), ddl)
+
+    def to_df(self) -> DataFrame:
+        """The split rows, partition k holding task k's splits."""
+        if self.df is not None:
+            return self.df
+        return self.map_in_arrow(lambda bs: bs,
+                                 from_arrow_schema(self.schema))
 
 
 def _list_input(spark: SparkSession, path: str,
@@ -257,26 +277,31 @@ def _list_input(spark: SparkSession, path: str,
 def plan_splits(spark: SparkSession, path: str, ranges=None,
                 num_partitions: int | None = None,
                 files: list[str] | None = None,
-                skip: frozenset | set = frozenset()) -> SplitPlan:
-    """Plan the parquet row-group splits of ``path`` for a fused scan:
-    the one planner every fused sink runs through (``SplitPlan
-    .map_in_arrow``) and ``parquet_splits_df`` shows as a DataFrame.
+                skip: frozenset | set = frozenset(),
+                lister=_file_splits,
+                schema: pa.Schema = SPLIT_SCHEMA) -> SplitPlan:
+    """Plan the splits of a fused scan: the one planner every fused
+    sink and fused read runs through (``SplitPlan.map_in_arrow``).
+    ``lister(file, ranges)`` gives one file's split rows, of
+    ``schema``: parquet row groups by default, or ORC stripes
+    (``orcfile.planner.plan_stripes``).
 
     Two planning modes, picked by file count (Spark's own scan plans
     splits on the driver too — the point is keeping DATA off the
     driver, not metadata):
 
     - <= DRIVER_SPLITS_MAX_FILES files: footers read on the driver
-      (threaded — footer reads are IO waits), the splits in ``skip``
-      ((file, rg) pairs already done, e.g. by a resumed sink) removed,
-      and the rest LPT-packed by bytes into ``num_partitions`` buckets,
-      so a resume is balanced over what is left.
+      (``list_splits``, threaded), the splits in ``skip`` ((file, rg)
+      pairs already done, e.g. by a resumed sink) removed, and the rest
+      LPT-packed by bytes into ``num_partitions`` buckets, so a resume
+      is balanced over what is left.
     - beyond that (the 100 TB shape: millions of files): only file
       NAMES touch the driver; footers are read in parallel tasks, split
       rows round-robin repartitioned as pure metadata (bytes per row,
-      not data) and ``skip`` anti-joined out.
+      not data) and ``skip`` anti-joined out. A lister error fails the
+      job that runs the plan.
 
-    ``ranges`` prunes row groups on parquet column statistics before
+    ``ranges`` prunes row groups (stripes) on column statistics before
     any data IO — the Python-scan analog of Catalyst filter pushdown.
 
     ``path`` may also be a CATALOG TABLE NAME (e.g. an Iceberg table):
@@ -286,49 +311,42 @@ def plan_splits(spark: SparkSession, path: str, ranges=None,
 
     ``files`` bypasses listing entirely with an explicit file set — the
     hook `iceberg.py` uses after snapshot selection + partition/bounds
-    pruning against the table's own metadata (no catalog jar needed).
+    pruning against the table's own metadata (no catalog jar needed),
+    and the one the ORC planner uses.
     """
     files = _list_input(spark, path, files)
     n = num_partitions or spark.sparkContext.defaultParallelism * 2
 
     if len(files) <= DRIVER_SPLITS_MAX_FILES:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(min(16, len(files))) as pool:
-            per_file = pool.map(lambda f: _file_splits(f, ranges), files)
-        splits = [row for rows in per_file for row in rows]
+        splits = list_splits(files, ranges, lister)
         todo = [r for r in splits if (r[0], r[1]) not in skip]
-        return SplitPlan(spark, lpt_buckets(todo, n), len(splits))
+        return SplitPlan(spark, schema, lpt_buckets(todo, n), len(splits))
 
     meta_tasks = min(len(files), n)
     fdf = spark.createDataFrame([(f,) for f in files], "file string") \
         .repartition(meta_tasks)
-    # round-robin rebalance: row groups of one big file must spread
-    # across tasks, not stay on the footer-reader's partition
-    df = fdf.mapInArrow(_splits_fn(ranges), SPLIT_DDL).repartition(n)
+    # round-robin rebalance: splits of one big file must spread across
+    # tasks, not stay on the footer-reader's partition
+    df = fdf.mapInArrow(_splits_fn(lister, ranges, schema),
+                        from_arrow_schema(schema)).repartition(n)
     todo = df
     if skip:
         from pyspark.sql import functions as F
 
         done = spark.createDataFrame(sorted(skip), "file string, rg int")
         todo = df.join(F.broadcast(done), ["file", "rg"], "left_anti")
-    return SplitPlan(spark, df=todo, all_df=df)
+    return SplitPlan(spark, schema, df=todo, all_df=df)
 
 
 def parquet_splits_df(spark: SparkSession, path: str,
                       ranges=None, num_partitions: int | None = None,
                       files: list[str] | None = None) -> DataFrame:
     """DataFrame of parquet row-group splits (file, rg, nbytes, nrows)
-    as ``plan_splits`` places them: in driver mode partition k holds
-    exactly LPT bucket k; in distributed mode the rows are round-robin
-    repartitioned over ``num_partitions``. Fused sinks do not go
-    through this DataFrame — they run ``plan_splits(...).map_in_arrow``
-    — so it is for inspecting a plan and for callers that need splits
-    as rows."""
-    plan = plan_splits(spark, path, ranges, num_partitions, files)
-    if plan.df is not None:
-        return plan.df
-    return plan.map_in_arrow(_pass, SPLIT_DDL)
+    as ``plan_splits`` places them (``SplitPlan.to_df``). Fused sinks
+    do not go through this DataFrame — they run
+    ``plan_splits(...).map_in_arrow`` — so it is for inspecting a plan
+    and for callers that need splits as rows."""
+    return plan_splits(spark, path, ranges, num_partitions, files).to_df()
 
 
 def split_list(batches) -> list[tuple]:

@@ -61,11 +61,12 @@ DEFAULT_CONFIG: dict[str, Any] = {
     "float_codec": None,          # None=measured | "raw" | "bss" | "alp"
     "compression": "zstd",        # outer block layer; "none" to disable
     "compression_level": 3,
-    "compression_min_bytes": 256,  # don't frame tiny streams
     "bloom_columns": [],          # per-stripe blooms for point lookups
     "sort_within": [],            # stripe-local clustering sort (engine.py)
     "string_fc": True,            # front-code trial on DIRECT value streams
 }
+
+COMPRESSION_MIN_BYTES = 256  # don't frame tiny streams
 
 # fixed bloom geometry (engine.bloom_prune_stripes refuses to prune a
 # stripe whose stored geometry differs — forward-compatible by design)
@@ -422,7 +423,7 @@ def _encode_string(arr: pa.Array, cfg: dict, cache: dict | None = None,
         return len(block.compress(b, comp, lvl)) if comp != "none" \
             and b else len(b)
 
-    if fc is None and data.nbytes >= cfg.get("compression_min_bytes", 256):
+    if fc is None and data.nbytes >= COMPRESSION_MIN_BYTES:
         lens64 = lengths.astype(np.int64)
         csum = np.cumsum(lens64)
         cap = 1 << 19
@@ -678,10 +679,10 @@ def encode_stripe(batch: pa.RecordBatch, cfg: dict | None = None,
     for name, arr in zip(batch.schema.names, batch.columns):
         meta, streams = encode_column(name, arr, cfg, cache)
         entries = []
-        raw_col = _column_nbytes(arr)
+        raw_col = raw_nbytes(arr)
         for key, data in streams.items():
             scomp = "none"
-            if comp != "none" and len(data) >= cfg["compression_min_bytes"]:
+            if comp != "none" and len(data) >= COMPRESSION_MIN_BYTES:
                 framed = block.compress(data, comp, cfg.get("compression_level"))
                 if len(framed) < len(data):
                     data, scomp = framed, comp
@@ -879,8 +880,27 @@ def decode_stripe(footer: dict, payload: bytes | memoryview,
     return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
-def _column_nbytes(arr: pa.Array) -> int:
-    try:
-        return int(arr.nbytes)
-    except Exception:  # pragma: no cover
-        return 0
+def raw_nbytes(arr: pa.Array) -> int:
+    """The raw (input) size of ``arr``: its Arrow bytes, with a
+    validity bitmap counted only where its (sub)array holds a null.
+    Spark and IPC batches carry all-valid bitmaps that in-memory and
+    parquet-read arrays of the same rows lack, so ``nbytes`` alone
+    would make a stripe's raw size depend on the sink that read it."""
+    return arr.nbytes - _all_valid_bitmap_bytes(arr)
+
+
+def _all_valid_bitmap_bytes(arr: pa.Array) -> int:
+    """The bytes ``arr.nbytes`` counts for all-valid bitmaps in ``arr``
+    (it counts a struct's children's bitmaps, never the struct's)."""
+    t = arr.type
+    if pa.types.is_struct(t):
+        return sum(_all_valid_bitmap_bytes(arr.field(i))
+                   for i in range(t.num_fields))
+    n = 0
+    if arr.buffers()[0] is not None and arr.null_count == 0:
+        n = (arr.offset + len(arr) + 7) // 8 - arr.offset // 8
+    if (pa.types.is_list(t) or pa.types.is_large_list(t)
+            or pa.types.is_map(t)) and len(arr):
+        lo, hi = arr.offsets[0].as_py(), arr.offsets[-1].as_py()
+        n += _all_valid_bitmap_bytes(arr.values.slice(lo, hi - lo))
+    return n

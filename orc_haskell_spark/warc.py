@@ -12,14 +12,16 @@ Common-Crawl layout). This module closes the front end of the pipeline:
                              encode sinks)
 
 Scale shape: scan units are file chunks. A bare gzip stream has no
-random access, so unindexed files parallelize per FILE (Common Crawl
+random access, so unindexed files are scanned per FILE (Common Crawl
 ships ~64k files per crawl at ~1 GB each — file granularity already
 saturates any cluster); files carrying a ``.cdx`` sidecar (this
 module's writer emits them; Common Crawl publishes equivalents) are
 split at record boundaries into ~64 MB byte ranges, so one fat archive
-becomes parallel chunks instead of a straggler. Chunks are LPT-packed
-onto tasks by byte weight — same policy as the parquet split planner
-in ``sources.py``. Within a task the reader is streaming: gzip members
+becomes parallel chunks instead of a straggler. Chunks are split rows
+of the one fused-scan planner in ``sources.py``: LPT-packed onto tasks
+by byte weight (``sources.lpt_buckets``) and launched as one stage by
+``sources.SplitPlan``, exactly like parquet row groups and ORC
+stripes. Within a task the reader is streaming: gzip members
 are inflated one at a time (bounded memory ≈ one record, regardless of
 archive size) and rows leave as Arrow batches.
 
@@ -487,21 +489,6 @@ def _list_warc_files(path: str) -> list[tuple[str, int]]:
     return sorted(out)
 
 
-def _lpt_buckets(items: list[tuple], n: int) -> list[list]:
-    """LPT-pack (key, weight) items into n buckets (same policy as the
-    parquet split planner: biggest first to the least-loaded bucket)."""
-    import heapq
-
-    n = max(1, min(n, len(items)))
-    heap = [(0, k) for k in range(n)]
-    buckets: list[list] = [[] for _ in range(n)]
-    for key, w in sorted(items, key=lambda t: (-t[1], t[0])):
-        load, k = heapq.heappop(heap)
-        buckets[k].append(key)
-        heapq.heappush(heap, (load + max(w, 1), k))
-    return buckets
-
-
 DEFAULT_SPLIT_BYTES = 64 << 20
 
 
@@ -556,6 +543,25 @@ def _file_chunks(files: list[tuple[str, int]],
     return chunks
 
 
+CHUNK_SCHEMA = pa.schema([("file", pa.string()), ("start", pa.int64()),
+                          ("nbytes", pa.int64()), ("end", pa.int64())])
+
+
+def _chunk_plan(spark, files: list[tuple[str, int]], split_bytes: int,
+                num_partitions: int | None):
+    """``sources.SplitPlan`` of the scan chunks of ``files``: one
+    (file, start, nbytes, end) split row per chunk, LPT-packed by bytes
+    (``sources.lpt_buckets``) into ``num_partitions`` tasks, default one
+    per core."""
+    from . import sources
+
+    rows = [(f, start, w, end)
+            for (f, start, end), w in _file_chunks(files, split_bytes)]
+    n = num_partitions or spark.sparkContext.defaultParallelism
+    return sources.SplitPlan(spark, CHUNK_SCHEMA,
+                             sources.lpt_buckets(rows, n), len(rows))
+
+
 def read_warc(spark, path: str, num_partitions: int | None = None,
               strict: bool = True, extract: str | None = None,
               split_bytes: int = DEFAULT_SPLIT_BYTES):
@@ -563,10 +569,12 @@ def read_warc(spark, path: str, num_partitions: int | None = None,
     content_type, html[, text]). Scan units are file CHUNKS: whole
     files, or — when a file exceeds ``split_bytes`` and has a .cdx
     sidecar (write_warc emits them) — record-aligned byte ranges, so
-    fat archives parallelize instead of straggling. Chunks are
-    LPT-packed onto tasks by byte weight; each task streams its ranges
-    (member-at-a-time inflate) and emits Arrow batches. Only file
-    names + index offsets touch the driver.
+    fat archives spread over tasks instead of straggling. Chunks are
+    LPT-packed onto tasks by byte weight and launched like every fused
+    scan (``sources.SplitPlan.map_in_arrow``: one stage, task k builds
+    its chunk rows from the broadcast plan); each task streams its
+    ranges (member-at-a-time inflate) and emits Arrow batches. Only
+    file names + index offsets touch the driver.
 
     ``extract`` ('main' or 'visible') runs HTML->text extraction INSIDE
     the scan worker, appending a ``text`` column. This is the fused
@@ -579,8 +587,7 @@ def read_warc(spark, path: str, num_partitions: int | None = None,
     files = _list_warc_files(path)
     if not files:
         raise ValueError(f"no .warc/.warc.gz files under {path!r}")
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    buckets = _lpt_buckets(_file_chunks(files, split_bytes), n)
+    plan = _chunk_plan(spark, files, split_bytes, num_partitions)
     if extract is not None and extract not in extract_mod._MODES:
         raise ValueError(f"extract={extract!r}: use 'main' or 'visible'")
     ddl = WARC_DDL + (", text string" if extract else "")
@@ -618,10 +625,7 @@ def read_warc(spark, path: str, num_partitions: int | None = None,
         if rows:
             yield emit_rows()
 
-    fdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(buckets, len(buckets))
-        .flatMap(lambda b: b), "file string, start bigint, end bigint")
-    return fdf.mapInArrow(scan, ddl)
+    return plan.map_in_arrow(scan, ddl)
 
 
 def _rows_batch(rows: list[tuple], extract: str | None = None
@@ -714,8 +718,9 @@ def write_pages_parquet(spark, warc_path: str, out_dir: str,
                         row_group_rows: int = 8192):
     """FUSED ingest sink: WARC scan + extraction + parquet write all
     inside the worker — the payload never crosses into the JVM (the
-    same engineering as the fused encode sinks; the JVM schedules
-    metadata-only chunk rows). One pages parquet part per task via
+    same engineering as the fused encode sinks: the chunk plan launches
+    through ``sources.SplitPlan``, so the JVM schedules task ids only).
+    One pages parquet part per task via
     rename-on-commit; re-running a task rewrites its own part
     atomically. LAZY: returns the per-task summary DataFrame
     (file, n_rows, nbytes); the job runs when acted on.
@@ -733,8 +738,7 @@ def write_pages_parquet(spark, warc_path: str, out_dir: str,
         raise ValueError(f"no .warc/.warc.gz files under {warc_path!r}")
     if extract is not None and extract not in extract_mod._MODES:
         raise ValueError(f"extract={extract!r}: use 'main' or 'visible'")
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    buckets = _lpt_buckets(_file_chunks(files, DEFAULT_SPLIT_BYTES), n)
+    plan = _chunk_plan(spark, files, DEFAULT_SPLIT_BYTES, num_partitions)
     schema = pa.schema([
         ("url", pa.string()),
         ("warc_ts", pa.timestamp("us", tz="UTC")),
@@ -807,10 +811,7 @@ def write_pages_parquet(spark, warc_path: str, out_dir: str,
                  pa.array([size], pa.int64())],
                 names=["file", "n_rows", "nbytes"])
 
-    fdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(buckets, len(buckets))
-        .flatMap(lambda b: b), "file string, start bigint, end bigint")
-    return fdf.mapInArrow(write_part, PAGES_SUMMARY_DDL)
+    return plan.map_in_arrow(write_part, PAGES_SUMMARY_DDL)
 
 
 class _ArrowSink(io.RawIOBase):

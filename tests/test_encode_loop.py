@@ -30,19 +30,11 @@ def one_rg_input(tmp_path_factory):
     return str(d), t
 
 
-def _by_stripe(t: pa.Table, spark_batches: bool = False) -> dict:
-    """(part_id, stripe_id) -> the stripe's row. Spark's Arrow batches
-    carry a validity buffer on every nullable column, which the raw
-    (input) byte counts include: for a DataFrame sink those counts are
-    dropped, and payload, codecs and stream directory must still match."""
+def _by_stripe(t: pa.Table) -> dict:
+    """(part_id, stripe_id) -> the stripe's row, footer parsed."""
     out = {}
     for r in t.to_pylist():
-        footer = json.loads(r["footer"])
-        if spark_batches:
-            del r["raw_bytes"]
-            for c in footer["columns"]:
-                del c["raw_bytes"]
-        r["footer"] = footer
+        r["footer"] = json.loads(r["footer"])
         out[(r.pop("part_id"), r.pop("stripe_id"))] = r
     return out
 
@@ -71,13 +63,14 @@ def test_sinks_agree(spark, one_rg_input, tmp_path):
     encode_parquet_to_dir give identical stripes (ids, sizes, footer
     and payload bytes) on the same one-row-group input, and every sink's
     rows carry ENCODED_ARROW_SCHEMA (the fused sink plus its three
-    split columns)."""
+    split columns). The raw byte counts agree too: Spark's Arrow
+    batches carry an all-valid validity buffer on every nullable column
+    that the parquet-read batches lack, and it is not counted."""
     src, _ = one_rg_input
     scan = pq.ParquetFile(os.path.join(src, "part-0.parquet")).iter_batches()
     rows = list(engine.make_encode_fn(STRIPE_ROWS)(scan))
     assert all(r.schema == engine.ENCODED_ARROW_SCHEMA for r in rows)
-    ref_t = pa.Table.from_batches(rows)
-    ref = _by_stripe(ref_t)
+    ref = _by_stripe(pa.Table.from_batches(rows))
     assert len(ref) == ROWS // STRIPE_ROWS
 
     df = spark.read.parquet(src)
@@ -89,9 +82,7 @@ def test_sinks_agree(spark, one_rg_input, tmp_path):
     for name, enc in spark_sinks.items():
         got = enc.toArrow()
         assert got.schema == engine.ENCODED_ARROW_SCHEMA, name
-        from_df = name == "encode_table"
-        assert _by_stripe(got, from_df) == (
-            _by_stripe(ref_t, True) if from_df else ref), name
+        assert _by_stripe(got) == ref, name
 
     out = str(tmp_path / "fused")
     manifest.encode_parquet_to_dir(spark, src, out, stripe_rows=STRIPE_ROWS,

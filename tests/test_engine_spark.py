@@ -601,6 +601,11 @@ def test_read_fused_encoded_partial_ledger_falls_back(spark, tmp_path):
 
     enc = manifest.read_fused_encoded(spark, out)
     assert engine._encoded_scan_files(enc) is None  # semi-join kept
+    # the semi-join keys come from the ledger the driver already read:
+    # the only scan in the plan is the stripes directory's
+    plan = _physical_plan(enc)
+    assert plan.count("Scan parquet") == 1
+    assert str(mdir) not in plan
     assert engine.decode_table(enc, source.schema).count() \
         == source.count() - 250 * 2  # rg rgs[0]: two 250-row stripes
 

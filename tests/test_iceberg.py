@@ -1166,6 +1166,32 @@ def test_encode_iceberg_all_orc_snapshot(spark, tmp_path):
                              t.column("views").to_pylist()))
 
 
+def test_encode_iceberg_all_orc_honours_num_partitions(spark, tmp_path):
+    """encode_iceberg forwards num_partitions to the ORC twin: the
+    snapshot's stripes are LPT-packed into that many tasks, the same as
+    on a parquet snapshot."""
+    import pyarrow as pa_
+
+    from orc_haskell_spark import engine
+    from orc_haskell_spark.orcfile.writer import write_orc
+
+    root = str(tmp_path / "t_orc")
+    os.makedirs(os.path.join(root, "data"))
+    t = pa_.table({"views": pa_.array(np.arange(600), pa_.int64())})
+    iceberg.create_table(root, t.schema)
+    p = os.path.join(root, "data", "a.orc")
+    write_orc(t.to_batches(), p, stripe_rows=100)
+    iceberg.append_files(root, [p])
+    enc = iceberg.encode_iceberg(spark, root, num_partitions=2,
+                                 stripe_rows=100)
+    assert enc.rdd.getNumPartitions() == 2
+    assert sorted(r.part_id for r in enc.select("part_id").distinct()
+                  .collect()) == [0, 1]
+    dec = engine.decode_table(enc, spark.createDataFrame(
+        [(1,)], ["views"]).schema)
+    assert sorted(r.views for r in dec.collect()) == list(range(600))
+
+
 def test_stream_admission_control_bounded_batches(spark, table,
                                                   tmp_path):
     """max_seqs_per_batch=1: within one reader's life the offset

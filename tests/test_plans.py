@@ -7,6 +7,7 @@ joins, and whole-stage-codegen the Catalyst-only operators.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from orc_haskell_spark import engine
@@ -135,3 +136,57 @@ def test_unsalted_encode_key_uses_hash_not_range(spark):
     salted = _plan(engine.encode_table(df, partition_on=["lang"],
                                        salt_buckets=4, num_partitions=4))
     assert "rangepartitioning" in salted
+
+
+def _assert_range_feeds_map_in_arrow(df):
+    """The scan is launched by ``sources.SplitPlan``: its MapInArrow
+    reads ``spark.range`` task ids, with no Python-RDD split stage
+    (ExistingRDD) in front of it."""
+    import re
+
+    plan = _plan(df)
+    tree = plan.split("\n\n")[0]
+    assert re.search(r"MapInArrow \(\d+\)\n\+- (\* )?Range \(\d+\)", tree), \
+        tree
+    assert "ExistingRDD" not in plan
+
+
+@pytest.fixture(scope="module")
+def orc_and_warc_dirs(spark, tmp_path_factory):
+    """Two 3-stripe ORC files and a two-part WARC crawl."""
+    import pyarrow as pa
+
+    from orc_haskell_spark import gen, warc
+    from orc_haskell_spark.orcfile.writer import write_orc
+
+    root = tmp_path_factory.mktemp("scans")
+    (root / "orc").mkdir()
+    for i in range(2):
+        write_orc(pa.table({"x": pa.array(range(i * 300, i * 300 + 300),
+                                          pa.int64())}),
+                  str(root / "orc" / f"f{i}.orc"), stripe_rows=100)
+    warc.write_warc(gen.pages_df(spark, 100, num_partitions=2),
+                    str(root / "crawl")).collect()
+    return root
+
+
+@pytest.mark.parametrize("scan", ["read_orc_distributed", "encode_orc",
+                                  "read_warc", "write_pages_parquet"])
+def test_fused_orc_and_warc_scans_launch_through_split_plan(
+        spark, orc_and_warc_dirs, scan):
+    """The ORC and WARC fused scans plan through the one fused-scan
+    planner: Range feeds MapInArrow and no ExistingRDD is left."""
+    from orc_haskell_spark import warc
+    from orc_haskell_spark.orcfile.spark_source import read_orc_distributed
+
+    orc, crawl = str(orc_and_warc_dirs / "orc"), str(orc_and_warc_dirs /
+                                                       "crawl")
+    df = {"read_orc_distributed": lambda: read_orc_distributed(spark, orc),
+          "encode_orc": lambda: engine.encode_orc(spark, orc,
+                                                  stripe_rows=100),
+          "read_warc": lambda: warc.read_warc(spark, crawl),
+          "write_pages_parquet": lambda: warc.write_pages_parquet(
+              spark, crawl, str(orc_and_warc_dirs / "pages"))}[scan]()
+    _assert_range_feeds_map_in_arrow(df)
+    if scan == "read_orc_distributed":
+        assert df.agg(F.sum("x")).collect()[0][0] == sum(range(600))

@@ -256,34 +256,37 @@ def _write_orc_dir(tmp_path, n_files=6, rows=300, stripe_rows=100):
 
 def test_orc_splits_distributed_planning_matches_driver(
         spark, tmp_path, monkeypatch):
-    """The ORC twin of the parquet planner test (VERDICT r3 item 1):
-    beyond DRIVER_SPLITS_MAX_FILES planning switches to a distributed
-    tail-read stage; split sets identical in both modes, stripe-stat
-    ranges prune identically, and the Spark read over the planned
-    splits still matches."""
+    """The ORC twin of the parquet planner test: ORC stripes plan
+    through ``sources.plan_splits`` (``planner.plan_stripes``), which
+    beyond DRIVER_SPLITS_MAX_FILES switches to a distributed tail-read
+    stage; split sets identical in both modes, stripe-stat ranges prune
+    identically, and the Spark read over the planned splits still
+    matches."""
     from orc_haskell_spark.orcfile import planner, spark_source
 
     d = _write_orc_dir(tmp_path)
-    sch_drv, drv = planner.orc_splits_df(spark, sorted(
-        str(p) for p in d.glob("*.orc")), num_partitions=3)
-    driver_splits = sorted(map(tuple, drv.collect()))
+    files = sorted(str(p) for p in d.glob("*.orc"))
+
+    def splits(ranges=None):
+        return sorted(map(tuple, planner.plan_stripes(
+            spark, files, ranges=ranges, num_partitions=3)[1]
+            .to_df().collect()))
+
+    sch_drv, _ = planner.plan_stripes(spark, files, num_partitions=3)
+    driver_splits = splits()
     assert len(driver_splits) == 6 * 3  # 3 stripes per file
     assert all(r[2] > 0 and r[3] == 100 for r in driver_splits)
 
     monkeypatch.setattr(sources, "DRIVER_SPLITS_MAX_FILES", 2)
-    sch_dist, dist = planner.orc_splits_df(spark, sorted(
-        str(p) for p in d.glob("*.orc")), num_partitions=3)
-    assert sorted(map(tuple, dist.collect())) == driver_splits
+    sch_dist, plan = planner.plan_stripes(spark, files, num_partitions=3)
+    assert plan.buckets is None  # distributed mode
+    assert splits() == driver_splits
     assert sch_dist.equals(sch_drv)
 
     # stripe-stat ranges prune identically in both modes
-    pruned_dist = sorted(map(tuple, planner.orc_splits_df(
-        spark, sorted(str(p) for p in d.glob("*.orc")),
-        ranges=[("x", 250, 260)], num_partitions=3)[1].collect()))
+    pruned_dist = splits([("x", 250, 260)])
     monkeypatch.setattr(sources, "DRIVER_SPLITS_MAX_FILES", 1024)
-    pruned_drv = sorted(map(tuple, planner.orc_splits_df(
-        spark, sorted(str(p) for p in d.glob("*.orc")),
-        ranges=[("x", 250, 260)], num_partitions=3)[1].collect()))
+    pruned_drv = splits([("x", 250, 260)])
     assert pruned_dist == pruned_drv
     assert 0 < len(pruned_drv) < len(driver_splits)
 
@@ -296,12 +299,14 @@ def test_orc_splits_distributed_planning_matches_driver(
 
 def test_orc_splits_distributed_schema_mismatch_names_file(
         spark, tmp_path, monkeypatch):
-    """Schema agreement is enforced IN the distributed planning tasks:
-    a mixed directory fails with the offending file named."""
+    """Schema agreement is enforced by the ORC stripe lister in both
+    planning modes: threaded on the driver it raises at planning time,
+    in the distributed planning tasks when the job runs, and a mixed
+    directory fails with the offending file named."""
     import pyarrow as pa
     import pytest
 
-    from orc_haskell_spark.orcfile import planner
+    from orc_haskell_spark.orcfile import planner, spark_source
     from orc_haskell_spark.orcfile.writer import write_orc
 
     d = tmp_path / "mixed"
@@ -314,7 +319,12 @@ def test_orc_splits_distributed_schema_mismatch_names_file(
     with pytest.raises(ValueError, match="schema mismatch.*b.orc"):
         planner.orc_splits_threaded(files, check_schema=True)
 
+    with pytest.raises(ValueError, match="schema mismatch.*b.orc"):
+        spark_source.read_orc_distributed(spark, str(d))
+
     monkeypatch.setattr(sources, "DRIVER_SPLITS_MAX_FILES", 1)
-    _, dist = planner.orc_splits_df(spark, files, num_partitions=2)
+    _, dist = planner.plan_stripes(spark, files, num_partitions=2)
     with pytest.raises(Exception, match="schema mismatch"):
-        dist.collect()
+        dist.to_df().collect()
+    with pytest.raises(Exception, match="schema mismatch in .*b.orc"):
+        spark_source.read_orc_distributed(spark, str(d)).collect()

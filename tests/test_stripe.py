@@ -290,3 +290,49 @@ def test_int_stream_decodes_in_one_bounded_kernel_call(monkeypatch):
                 py = _numpy_path(lambda: dec(buf, codec, n))
                 assert c.dtype == py.dtype and np.array_equal(c, py)
                 assert np.array_equal(c, vals[:n])
+
+
+def _with_all_valid_bitmaps(arr: pa.Array) -> pa.Array:
+    """``arr`` rebuilt with an explicit validity bitmap on every
+    (sub)array that has none, as Spark's Arrow batches carry them."""
+    def bitmap(a):
+        return a.buffers()[0] or pa.py_buffer(
+            np.full((len(a) + 7) // 8, 255, np.uint8).tobytes())
+
+    t = arr.type
+    if pa.types.is_struct(t):
+        kids = [_with_all_valid_bitmaps(arr.field(i))
+                for i in range(t.num_fields)]
+        return pa.Array.from_buffers(t, len(arr), [bitmap(arr)],
+                                     children=kids)
+    if pa.types.is_list(t):
+        return pa.Array.from_buffers(
+            t, len(arr), [bitmap(arr), arr.buffers()[1]],
+            children=[_with_all_valid_bitmaps(arr.values)])
+    return pa.Array.from_buffers(t, len(arr),
+                                 [bitmap(arr)] + arr.buffers()[1:],
+                                 null_count=-1)
+
+
+@pytest.mark.parametrize("arr", [
+    pa.array(["abcdef"] * 3000),
+    pa.array([1, None, 3] * 1000, pa.int64()),
+    pa.array([True, False] * 77),
+    pa.array([[1, 2], [3], []] * 500, pa.list_(pa.int32())),
+    pa.array([{"a": 1, "b": "x"}] * 700),
+    pa.array([[{"a": 1}], None, [{"a": None}]] * 300),
+], ids=lambda a: str(a.type))
+def test_raw_nbytes_ignores_all_valid_bitmaps(arr):
+    """A stripe's raw size does not depend on whether its batches carry
+    all-valid validity bitmaps (Spark's do, parquet-read ones do not),
+    at any nesting depth and slice offset; real nulls still count."""
+    with_bm = _with_all_valid_bitmaps(arr)
+    assert with_bm.equals(arr)
+    assert stripe.raw_nbytes(arr) == stripe.raw_nbytes(with_bm)
+    assert stripe.raw_nbytes(arr.slice(13, 400)) == \
+        stripe.raw_nbytes(with_bm.slice(13, 400))
+    if arr.null_count == 0 and pa.types.is_string(arr.type):
+        assert with_bm.nbytes == arr.nbytes + 3000 // 8
+        assert stripe.raw_nbytes(with_bm) == arr.nbytes
+    if arr.null_count:
+        assert stripe.raw_nbytes(arr) == arr.nbytes

@@ -11,7 +11,7 @@ import zlib
 import pyarrow as pa
 import pytest
 
-from orc_haskell_spark import gen, warc
+from orc_haskell_spark import gen, sources, warc
 
 ROWS = [
     ("https://a.example/1", 1704067200_000_000, b"<html>one</html>"),
@@ -142,9 +142,12 @@ def test_warc_date_roundtrip():
 
 
 def test_lpt_buckets_balance():
-    files = [(f"f{i}", w) for i, w in enumerate([100, 1, 1, 1, 97, 1, 1, 98])]
-    buckets = warc._lpt_buckets(files, 3)
-    loads = sorted(sum(dict(files)[f] for f in b) for b in buckets)
+    """WARC chunk rows (file, start, nbytes, end) pack by their byte
+    column with the planner's LPT packing."""
+    files = [(f"f{i}", 0, w, -1)
+             for i, w in enumerate([100, 1, 1, 1, 97, 1, 1, 98])]
+    buckets = sources.lpt_buckets(files, 3)
+    loads = sorted(sum(r[2] for r in b) for b in buckets)
     assert len(buckets) == 3 and loads[-1] <= 103  # fat files separated
 
 
@@ -355,7 +358,8 @@ def test_distributed_chunked_read_equals_whole_file(spark, tmp_path):
 
 
 def test_read_warc_plan_is_narrow(spark, tmp_path):
-    """No shuffle in the scan: parallelize -> mapInArrow only."""
+    """No shuffle in the scan: the chunk plan launches through
+    ``sources.SplitPlan``, so Range -> MapInArrow only."""
     df = gen.pages_df(spark, 200, num_partitions=2)
     out = str(tmp_path / "crawl")
     warc.write_warc(df, out).collect()
