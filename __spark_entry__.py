@@ -478,7 +478,7 @@ def _orcfile_bloom_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _orcfile_rowgroup_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-group-granular reads through the orcfile DataSource: one big
     stripe, a selective range filter — ROW_INDEX positional seek decodes
-    only the covering 10k-row groups (datasource._read_pruned), Spark
+    only the covering 10k-row groups (ORCFile.read_stripe_pruned), Spark
     re-applies the filter exactly; oracle = the same WHERE in SQL."""
     import os
     import tempfile

@@ -79,15 +79,15 @@ def choose_string_codec(arr: pa.Array, data: "np.ndarray",
     if "dict" in allowed:
         distinct = pc.count_distinct(arr).as_py()
         if distinct < DICT_CARDINALITY_GATE * n:
-            # measured on a row sample: sorted-dict payload (outer-
-            # compressed) + RLEv2 indices
+            # measured on a row sample: sorted-dict payload and RLEv2
+            # indices, both outer-compressed like the other estimates
             k = max(1, min(n, int(n * (SAMPLE_BYTES / data_nbytes))
                            if data_nbytes > SAMPLE_BYTES else n))
             s_arr = arr.slice(0, k)
             from .strings import dictionary_encode_sorted
 
             idx, dlens, ddata = dictionary_encode_sorted(s_arr)
-            idx_bytes = len(rle2.encode(idx.astype(np.int64), False))
+            idx_bytes = outer(rle2.encode(idx.astype(np.int64), False))
             row_scale = n / k
             # dictionary payload: plain vs front-coded, whichever the
             # stripe encoder would pick (it re-measures on the full dict)

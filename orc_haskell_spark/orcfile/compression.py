@@ -151,22 +151,30 @@ def decompress_stream(buf: bytes, kind: str) -> bytes:
     return bytes(out)
 
 
+def _frame(data: bytes, kind: str, block_size: int, level: int | None,
+           offsets: list[int] | None = None) -> bytes:
+    """Chunk-frame ``data``; append each chunk's compressed start offset
+    to ``offsets`` when given."""
+    out = bytearray()
+    for start in range(0, len(data), block_size):
+        if offsets is not None:
+            offsets.append(len(out))
+        chunk = data[start:start + block_size]
+        comp = compress_chunk(chunk, kind, level)
+        if len(comp) < len(chunk):
+            out += (len(comp) << 1).to_bytes(HEADER_LEN, "little") + comp
+        else:  # isOriginal escape: store raw
+            out += ((len(chunk) << 1) | 1).to_bytes(HEADER_LEN, "little") \
+                + chunk
+    return bytes(out)
+
+
 def compress_stream(data: bytes, kind: str, block_size: int = 256 * 1024,
                     level: int | None = None) -> bytes:
     """Encode a stream into ORC chunk framing (identity when NONE)."""
     if kind == "NONE" or not data:
         return data
-    out = bytearray()
-    for start in range(0, len(data), block_size):
-        chunk = data[start:start + block_size]
-        comp = compress_chunk(chunk, kind, level)
-        if len(comp) < len(chunk):
-            h = (len(comp) << 1)
-            out += h.to_bytes(HEADER_LEN, "little") + comp
-        else:  # isOriginal escape: store raw
-            h = (len(chunk) << 1) | 1
-            out += h.to_bytes(HEADER_LEN, "little") + chunk
-    return bytes(out)
+    return _frame(data, kind, block_size, level)
 
 
 def compress_stream_offsets(data: bytes, kind: str,
@@ -179,16 +187,5 @@ def compress_stream_offsets(data: bytes, kind: str,
     chunk begins at offsets[b // block_size] in the compressed stream."""
     if kind == "NONE":
         return data, []
-    out = bytearray()
-    offsets = []
-    for start in range(0, len(data), block_size):
-        offsets.append(len(out))
-        chunk = data[start:start + block_size]
-        comp = compress_chunk(chunk, kind, level)
-        if len(comp) < len(chunk):
-            h = (len(comp) << 1)
-            out += h.to_bytes(HEADER_LEN, "little") + comp
-        else:
-            h = (len(chunk) << 1) | 1
-            out += h.to_bytes(HEADER_LEN, "little") + chunk
-    return bytes(out), offsets
+    offsets: list[int] = []
+    return _frame(data, kind, block_size, level, offsets), offsets

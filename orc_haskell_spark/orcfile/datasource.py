@@ -143,7 +143,7 @@ class OrcFileReader(DataSourceReader):
         if part.stripe < 0:
             return
         orc = ORCFile(part.file)
-        rb = self._read_pruned(orc, part.stripe)
+        rb = orc.read_stripe_pruned(part.stripe, self._ranges)
         import pyarrow as pa
 
         if self._schema is not None:
@@ -171,40 +171,6 @@ class OrcFileReader(DataSourceReader):
                     col = col.cast(field.type)
             cols.append(col)
         yield pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
-
-    def _read_pruned(self, orc, stripe: int):
-        """Stripe decode narrowed by ROW_INDEX row-group elimination:
-        when the file carries an index and the pushed filters exclude
-        some 10k-row groups, decode ONLY the surviving groups via
-        positional seek. Falls back to the full-stripe read on any
-        unindexed file, nested schema, or failure — pruning is an
-        optimization, never a correctness dependency (Spark re-applies
-        every filter exactly; see pushFilters)."""
-        if self._ranges and orc.footer.get("rowIndexStride"):
-            try:
-                stride = orc.footer["rowIndexStride"]
-                n = orc.stripes[stripe]["numberOfRows"]
-                keep = set(range(-(-n // stride)))
-                for col, lo, hi in self._ranges:
-                    if lo is not None and lo == hi:
-                        # equality: min/max stats AND bloom membership
-                        keep &= set(orc.prune_row_groups_eq(
-                            stripe, col, lo))
-                    else:
-                        keep &= set(orc.prune_row_groups(
-                            stripe, col, lo, hi))
-                if len(keep) < -(-n // stride):
-                    if not keep:
-                        import pyarrow as pa
-
-                        return pa.RecordBatch.from_arrays(
-                            [pa.array([], type=f.type)
-                             for f in orc.schema], schema=orc.schema)
-                    return orc.read_stripe_row_groups(
-                        stripe, sorted(keep))
-            except Exception:
-                pass  # unsupported type / no index entries: full read
-        return orc.read_stripe(stripe)
 
 
 @dataclass

@@ -605,11 +605,6 @@ def read_stripe_tables(data: bytes, info: dict, footer: dict,
     return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
-_PRIMITIVE_KINDS = ("BOOLEAN", "BYTE", "SHORT", "INT", "LONG", "FLOAT",
-                    "DOUBLE", "STRING", "VARCHAR", "CHAR", "BINARY",
-                    "TIMESTAMP", "TIMESTAMP_INSTANT", "DATE", "DECIMAL")
-
-
 def _stream_spans(sfoot: dict) -> dict[tuple[int, str], tuple[int, int]]:
     """(col, kind) -> (start, length) byte spans inside the stripe,
     walked from the start of the stream list (ROW_INDEX included)."""
@@ -637,78 +632,67 @@ def _positioned(data: bytes, span: tuple[int, int], comp: str,
     return decompress_stream(raw[spos[0]:], comp)[spos[1]:]
 
 
+# The ROW_INDEX position layout, shared by the writer and the
+# positioned reader: per column kind, the streams a RowIndexEntry
+# positions, in order, each with the number of skip values after its
+# cursor ([chunk, offset] with compression, [offset] without). One skip
+# is an RLE value count; two are the byte and bit skips of a bit-packed
+# stream. PRESENT (when the column has one) comes first. A dictionary
+# column positions only its index DATA: the dictionary is whole-stripe.
+# (Order and shapes follow the ORC spec's index section and the C++
+# readers; validated against C++-written files in tests/test_orcfile.py.)
+_PRESENT_LAYOUT = (("PRESENT", 2),)
+_DICTIONARY_LAYOUT = (("DATA", 1),)
+ROW_INDEX_LAYOUT: dict[str, tuple[tuple[str, int], ...]] = {
+    "BOOLEAN": (("DATA", 2),),
+    **dict.fromkeys(("BYTE", "SHORT", "INT", "LONG", "DATE"),
+                    (("DATA", 1),)),
+    **dict.fromkeys(("FLOAT", "DOUBLE"), (("DATA", 0),)),
+    **dict.fromkeys(("TIMESTAMP", "TIMESTAMP_INSTANT"),
+                    (("DATA", 1), ("SECONDARY", 1))),
+    **dict.fromkeys(("STRING", "VARCHAR", "CHAR", "BINARY"),
+                    (("DATA", 0), ("LENGTH", 1))),
+    "DECIMAL": (("DATA", 0), ("SECONDARY", 1)),
+}
+_DICTIONARY_ENCODINGS = ("DICTIONARY", "DICTIONARY_V2")
+
+
+def row_index_layout(kind: str, enc: str, has_present: bool
+                     ) -> tuple[tuple[str, int], ...]:
+    """(stream, skip count) pairs of one column's RowIndexEntry
+    positions, in order (see ROW_INDEX_LAYOUT)."""
+    if kind not in ROW_INDEX_LAYOUT:
+        raise NotImplementedError(
+            f"row-group reads of {kind} columns are not supported")
+    body = (_DICTIONARY_LAYOUT if enc in _DICTIONARY_ENCODINGS
+            else ROW_INDEX_LAYOUT[kind])
+    return (_PRESENT_LAYOUT if has_present else ()) + body
+
+
 def _seek_streams(data: bytes, comp: str, spans: dict, col: int,
                   kind: str, enc: str, positions: list[int]
                   ) -> tuple[dict, dict]:
     """Positioned (streams, skips) for one FLAT column at one row-group
-    boundary. Positions are consumed in the C++ readers' order —
-    PRESENT first, then DATA, then LENGTH/SECONDARY — with per-stream
-    shapes: [chunk, offset] (or [offset] uncompressed) for the raw
-    stream cursor; +[values] for RLE byte/int skips; +[bits] after the
-    byte skip for bit-packed booleans (PRESENT and BOOLEAN data).
-    (Semantics derived from the ORC spec's index section; validated
-    against C++-written files in tests/test_orcfile.py.)"""
+    boundary, consuming ``positions`` per row_index_layout. A skip is
+    in values for RLE streams and in bits for bit-packed ones."""
     it = iter(positions)
-
-    def spos():
-        if comp != "NONE":
-            return (next(it), next(it))
-        return (next(it),)
-
     streams: dict = {}
     skips: dict = {}
-
-    def cut(skind: str, p) -> None:
+    for skind, n_skips in row_index_layout(kind, enc,
+                                           (col, "PRESENT") in spans):
+        cursor = (next(it), next(it)) if comp != "NONE" else (next(it),)
+        sk = [next(it) for _ in range(n_skips)]
         streams[(col, skind)] = _positioned(data, spans[(col, skind)],
-                                            comp, p)
-
-    if (col, "PRESENT") in spans:
-        p = spos()
-        byte_sk = next(it)
-        bit_sk = next(it)
-        cut("PRESENT", p)
-        skips[(col, "PRESENT")] = byte_sk * 8 + bit_sk
-    if kind == "BOOLEAN":
-        p = spos()
-        skips[(col, "DATA")] = next(it) * 8 + next(it)
-        cut("DATA", p)
-    elif kind in ("BYTE", "SHORT", "INT", "LONG", "DATE"):
-        p = spos()
-        skips[(col, "DATA")] = next(it)
-        cut("DATA", p)
-    elif kind in ("FLOAT", "DOUBLE"):
-        cut("DATA", spos())
-    elif kind in ("TIMESTAMP", "TIMESTAMP_INSTANT"):
-        p = spos()
-        skips[(col, "DATA")] = next(it)
-        cut("DATA", p)
-        p2 = spos()
-        skips[(col, "SECONDARY")] = next(it)
-        cut("SECONDARY", p2)
-    elif kind in ("STRING", "VARCHAR", "CHAR", "BINARY"):
-        if enc in ("DICTIONARY", "DICTIONARY_V2"):
-            p = spos()
-            skips[(col, "DATA")] = next(it)
-            cut("DATA", p)
-            # dictionary streams are whole-stripe (not positioned)
-            for skind in ("LENGTH", "DICTIONARY_DATA"):
-                if (col, skind) in spans:
-                    s0, ln0 = spans[(col, skind)]
-                    streams[(col, skind)] = decompress_stream(
-                        data[s0:s0 + ln0], comp)
-        else:
-            cut("DATA", spos())  # blob cursor: exact byte offset
-            p = spos()
-            skips[(col, "LENGTH")] = next(it)
-            cut("LENGTH", p)
-    elif kind == "DECIMAL":
-        cut("DATA", spos())  # varint cursor: exact byte offset
-        p = spos()
-        skips[(col, "SECONDARY")] = next(it)
-        cut("SECONDARY", p)
-    else:
-        raise NotImplementedError(
-            f"row-group reads of {kind} columns are not supported")
+                                            comp, cursor)
+        if n_skips:
+            skips[(col, skind)] = sk[0] * 8 + sk[1] if n_skips == 2 \
+                else sk[0]
+    if enc in _DICTIONARY_ENCODINGS:
+        for skind in ("LENGTH", "DICTIONARY_DATA"):
+            if (col, skind) in spans:
+                s0, ln0 = spans[(col, skind)]
+                streams[(col, skind)] = decompress_stream(
+                    data[s0:s0 + ln0], comp)
     return streams, skips
 
 
@@ -1011,7 +995,7 @@ class ORCFile:
                   else [names.index(c) for c in columns])
         for pi in picked:
             k = proto.KIND_NAME[types[subtypes[pi]].get("kind", 0)]
-            if k not in _PRIMITIVE_KINDS:
+            if k not in ROW_INDEX_LAYOUT:
                 raise NotImplementedError(
                     f"row-group reads of {k} columns are not supported")
         index = {col: ents for col, ents in
@@ -1052,10 +1036,37 @@ class ORCFile:
             batches.append(
                 pa.RecordBatch.from_arrays(arrays, schema=schema))
         if not batches:
-            return schema.empty_table().to_batches()[0] \
-                if schema.names else pa.RecordBatch.from_arrays([], [])
+            return pa.RecordBatch.from_pylist([], schema=schema)
         return pa.Table.from_batches(batches).combine_chunks() \
             .to_batches()[0]
+
+    def read_stripe_pruned(self, i: int, ranges=(),
+                           columns: list[str] | None = None
+                           ) -> pa.RecordBatch:
+        """Stripe ``i`` narrowed by ROW_INDEX row-group elimination:
+        ``ranges`` [(column, lo, hi)] (None = unbounded) keep only the
+        groups whose statistics may hold a match, and an equality range
+        (lo == hi) also probes the column's bloom filter. Only the
+        surviving groups of ``columns`` are decoded; when none survive
+        the batch is empty. Unindexed files, nested columns and index
+        failures read the whole stripe: pruning is an optimization,
+        never a correctness dependency (callers re-apply the filters)."""
+        stride = self.footer.get("rowIndexStride", 0)
+        if ranges and stride:
+            try:
+                total = -(-self.stripes[i]["numberOfRows"] // stride)
+                keep = set(range(total))
+                for col, lo, hi in ranges:
+                    keep &= set(
+                        self.prune_row_groups_eq(i, col, lo)
+                        if lo is not None and lo == hi
+                        else self.prune_row_groups(i, col, lo, hi))
+                if len(keep) < total:
+                    return self.read_stripe_row_groups(i, sorted(keep),
+                                                       columns)
+            except Exception:
+                pass  # unsupported type / no index entries: full read
+        return self.read_stripe(i, columns)
 
     def read(self, columns: list[str] | None = None) -> pa.Table:
         if not self.stripes:

@@ -29,11 +29,14 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def _list_orc_files(path: str) -> list[str]:
+    """The .orc files of a directory, skipping hidden names ("." or "_"
+    first, the Hadoop convention): an in-flight or abandoned staging
+    file is never read as data."""
     if os.path.isfile(path):
         return [path]
     return sorted(
         os.path.join(path, f) for f in os.listdir(path)
-        if f.endswith(".orc"))
+        if f.endswith(".orc") and not f.startswith((".", "_")))
 
 
 def _spark_schema_for(schema: pa.Schema):
@@ -50,26 +53,6 @@ def _spark_schema_for(schema: pa.Schema):
         fields.append(pa.field(f.name, t, f.nullable))
     return (from_arrow_schema(pa.schema(fields), prefer_timestamp_ntz=True),
             pa.schema(fields))
-
-
-def _read_stripe_pruned(orc, i: int, columns, prune):
-    """Stripe decode narrowed by ROW_INDEX row-group elimination when
-    the file has an index and ``prune`` excludes some groups; falls
-    back to the full-stripe read otherwise (pruning is an optimization,
-    never a correctness dependency — the caller re-filters exactly)."""
-    if prune and orc.footer.get("rowIndexStride"):
-        try:
-            stride = orc.footer["rowIndexStride"]
-            n = orc.stripes[i]["numberOfRows"]
-            total = -(-n // stride)
-            keep = orc.prune_row_groups(i, prune[0], prune[1], prune[2])
-            if len(keep) < total:
-                if not keep:
-                    return None
-                return orc.read_stripe_row_groups(i, keep, columns)
-        except Exception:
-            pass  # nested/unsupported column: whole-stripe read
-    return orc.read_stripe(i, columns)
 
 
 def read_orc_distributed(spark: SparkSession, path: str,
@@ -116,8 +99,9 @@ def read_orc_distributed(spark: SparkSession, path: str,
             for f, i in zip(b.column("file").to_pylist(),
                             b.column("stripe").to_pylist()):
                 orc = opened.get(f) or opened.setdefault(f, OF(f))
-                rb = _read_stripe_pruned(orc, i, columns, prune)
-                if rb is None:
+                rb = orc.read_stripe_pruned(i, [prune] if prune else (),
+                                            columns)
+                if not rb.num_rows:
                     continue  # every row group eliminated
                 cols = []
                 for field, col in zip(arrow_schema, rb.columns):
@@ -129,21 +113,16 @@ def read_orc_distributed(spark: SparkSession, path: str,
     return plan.map_in_arrow(decode, spark_schema)
 
 
-def write_orc_distributed(df: DataFrame, out_dir: str,
-                          compression: str = "ZLIB",
-                          stripe_rows: int = 64 * 1024) -> DataFrame:
-    """Write a DataFrame as one ORC file per partition under out_dir.
-
-    Returns the manifest DataFrame (file, rows, bytes, stripes) —
-    forcing it (e.g. .collect()) executes the write.
-    """
-    os.makedirs(out_dir, exist_ok=True)
+def _part_writer(out_dir: str, compression: str, stripe_rows: int):
+    """write_orc_distributed's task: one ORC file per partition, written
+    under a hidden staging name and renamed to ``part-NNNNN.orc`` only
+    once complete, so a task that fails mid-write leaves no part file
+    for a later read to list."""
 
     def write_part(batches):
         import itertools
 
-        import pyarrow as pa
-
+        from orc_haskell_spark import sources
         from orc_haskell_spark.engine import clamp_worker_threads
         from orc_haskell_spark.orcfile.writer import write_orc
 
@@ -164,17 +143,37 @@ def write_orc_distributed(df: DataFrame, out_dir: str,
         except Exception:
             pass
         pid = ctx.partitionId() if ctx else os.getpid()
-        path = os.path.join(out_dir, f"part-{pid:05d}.orc")
-        info = write_orc(itertools.chain([first], it), path,
-                         compression=compression, stripe_rows=stripe_rows)
+        fs, staging, final = sources.task_output(out_dir, None,
+                                                 f"{pid:05d}", ext=".orc")
+        try:
+            with fs.open_output_stream(staging) as out:
+                info = write_orc(itertools.chain([first], it), out,
+                                 compression=compression,
+                                 stripe_rows=stripe_rows)
+            sources.commit_part(fs, staging, final)
+        finally:
+            sources.discard_part(fs, staging)
         yield pa.RecordBatch.from_arrays(
-            [pa.array([path]), pa.array([info["rows"]], pa.int64()),
+            [pa.array([final]), pa.array([info["rows"]], pa.int64()),
              pa.array([info["bytes"]], pa.int64()),
              pa.array([info["stripes"]], pa.int32())],
             names=["file", "rows", "bytes", "stripes"])
 
+    return write_part
+
+
+def write_orc_distributed(df: DataFrame, out_dir: str,
+                          compression: str = "ZLIB",
+                          stripe_rows: int = 64 * 1024) -> DataFrame:
+    """Write a DataFrame as one ORC file per partition under out_dir.
+
+    Returns the manifest DataFrame (file, rows, bytes, stripes) —
+    forcing it (e.g. .collect()) executes the write.
+    """
+    os.makedirs(out_dir, exist_ok=True)
     return df.mapInArrow(
-        write_part, "file string, rows long, bytes long, stripes int")
+        _part_writer(out_dir, compression, stripe_rows),
+        "file string, rows long, bytes long, stripes int")
 
 
 PARQUET_TO_ORC_DDL = ("file string, n_splits int, rows bigint, "

@@ -11,23 +11,31 @@ The reference only READS ORC files plus re-serializes logical tables
 (/root/reference/src/Orc/Serial/Binary/Base.hs, putOrcFile in
 Striped.hs:700-800); a conforming writer is strictly more than parity.
 
-Layout written: "ORC" header, stripes (data streams + stripe footer;
-row indexes disabled via rowIndexStride=0), file footer with minimal
-per-column statistics, postscript, postscript length byte.
+Layout written: "ORC" header; stripes, each an index region (a
+ROW_INDEX stream per column, plus BLOOM_FILTER_UTF8 streams for the
+requested columns), then the data streams and the stripe footer;
+Metadata with per-stripe column statistics; the file footer; the
+postscript and its length byte. Every all-primitive schema is indexed
+at ``row_index_stride`` rows (10,000 by default); a nested schema, or
+``row_index_stride=0``, writes stripes with no index region.
 """
 
 from __future__ import annotations
 
+import contextlib
+
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from orc_haskell_spark.codecs import byte_rle, rle2, varint
 from orc_haskell_spark.codecs.bitpack import pack_bools
+from orc_haskell_spark.codecs.selector import DICT_CARDINALITY_GATE
 from orc_haskell_spark.codecs.strings import (dictionary_encode_sorted,
                                               string_parts)
 from . import proto
-from .compression import compress_stream
-from .reader import ORC_EPOCH_SECONDS
+from .compression import compress_stream, compress_stream_offsets
+from .reader import ORC_EPOCH_SECONDS, row_index_layout
 
 MAGIC = b"ORC"
 
@@ -135,15 +143,48 @@ def _encode_nanos_signed(nanos: np.ndarray) -> np.ndarray:
     return out
 
 
-class _ColumnWriter:
-    """Encodes one stripe's worth of one column subtree."""
+_LEAF_ENCODING = {
+    **dict.fromkeys(("BOOLEAN", "BYTE", "FLOAT", "DOUBLE"), "DIRECT"),
+    **dict.fromkeys(("SHORT", "INT", "LONG", "DATE", "TIMESTAMP",
+                     "TIMESTAMP_INSTANT", "STRING", "BINARY", "DECIMAL"),
+                    "DIRECT_V2"),
+}
 
-    def __init__(self, types: list[dict], dict_ratio: float = 0.5):
+
+def _bits(mask: np.ndarray) -> bytes:
+    """A boolean mask as a byte-RLE'd MSB-first bitstream."""
+    return byte_rle.encode(np.frombuffer(pack_bools(mask), np.uint8))
+
+
+class _ColumnWriter:
+    """Encodes one stripe's worth of one column subtree.
+
+    Every primitive leaf is encoded one row group (``stride`` rows) at a
+    time, and every stream RESTARTS at each group boundary: a group's
+    ROW_INDEX position is the raw offset its runs begin at, with no
+    run-carry skips (spec-valid — an RLE stream is just a run sequence —
+    at ~2 bytes/group/stream). ``entries[col]`` records, per group, the
+    raw stream offsets, skips and statistics. ``stride=0`` writes each
+    leaf as one group: an unindexed file, or a column under a nested
+    type. stride must be a multiple of 8 so PRESENT bits restart
+    byte-aligned.
+
+    Two streams do not restart. A dictionary string column keeps one
+    sorted dictionary per stripe; only its index DATA restarts. Nullable
+    BOOLEAN data is one whole-stripe bitstream: a group's bit count is
+    its non-null count, so per-group restarts would leave padding bits
+    that shift every later value (readers consume one contiguous
+    bitstream); its positions carry real byte/bit skips instead.
+    """
+
+    def __init__(self, types: list[dict], stride: int = 0):
         self.types = types
-        self.dict_ratio = dict_ratio
+        self.stride = stride
         self.streams: list[tuple[int, str, bytes]] = []  # (col, kind, raw)
         self.encodings: dict[int, dict] = {}
         self.stats: dict[int, dict] = {}  # per-column ColumnStatistics
+        # leaf col -> per group {"offsets", "skips", "stats"}
+        self.entries: dict[int, list[dict]] = {}
 
     def _put(self, col: int, kind: str, data: bytes) -> None:
         # zero-length streams MUST still be declared: the C++ reader
@@ -165,22 +206,18 @@ class _ColumnWriter:
         # columns get true value counts and hasNull — third-party readers
         # (e.g. Trino) prune stripes on these
         self.stats[col] = _col_stats(arr, arr.type)
-        has_nulls = arr.null_count > 0
-        valid = None
-        if has_nulls:
-            valid = np.asarray(arr.is_valid())
-            self._put(col, "PRESENT",
-                      byte_rle.encode(np.frombuffer(pack_bools(valid),
-                                                    np.uint8)))
-        self._set_enc(col, "DIRECT_V2" if kind in (
-            "STRING", "BINARY") else "DIRECT")
-        dense = arr.drop_null() if has_nulls else arr
+        valid = np.asarray(arr.is_valid()) if arr.null_count else None
+        if kind in _LEAF_ENCODING:
+            self._write_leaf(col, kind, arr, valid)
+            return
+        if valid is not None:
+            self._put(col, "PRESENT", _bits(valid))
 
         if kind == "STRUCT":
             self._set_enc(col, "DIRECT")
             for i, sub in enumerate(self.types[col].get("subtypes", [])):
                 child = arr.field(i)
-                if has_nulls:
+                if valid is not None:
                     child = child.filter(pa.array(valid))
                 self.write(sub, child)
             return
@@ -210,6 +247,7 @@ class _ColumnWriter:
 
         if kind in ("LIST", "MAP"):
             self._set_enc(col, "DIRECT_V2")
+            dense = arr.drop_null() if valid is not None else arr
             offs = np.asarray(dense.offsets)
             lengths = np.diff(offs.astype(np.int64))
             self._put(col, "LENGTH",
@@ -230,40 +268,90 @@ class _ColumnWriter:
                            dense.items.slice(lo, hi - lo))
             return
 
+        raise NotImplementedError(f"ORC writer kind {kind}")
+
+    def _write_leaf(self, col: int, kind: str, arr: pa.Array,
+                    valid: np.ndarray | None) -> None:
+        n = len(arr)
+        stride = self.stride or max(n, 1)
+        starts = range(0, max(n, 1), stride)
+        dense = arr.drop_null() if valid is not None else arr
+        if kind in ("STRING", "BINARY"):
+            base = pa.string() if kind == "STRING" else pa.binary()
+            dense = dense.cast(base) if dense.type != base else dense
+        idx = None
+        if kind == "STRING" and len(dense):
+            n_unique = pc.count_distinct(dense).as_py()
+            if n_unique / len(dense) <= DICT_CARDINALITY_GATE:
+                idx, dlens, ddata = dictionary_encode_sorted(dense)
+        whole_bits = kind == "BOOLEAN" and valid is not None
+
+        parts: dict[str, list[bytes]] = {}  # stream kind -> group parts
+        sizes: dict[str, int] = {}
+        entries: list[dict] = []
+        lo = 0  # dense values before this group
+        for s in starts:
+            e: dict = {"offsets": {}, "skips": {}, "stats": (
+                self.stats[col] if len(starts) == 1
+                else _col_stats(arr.slice(s, stride), arr.type))}
+            entries.append(e)
+            c = (int(valid[s:s + stride].sum()) if valid is not None
+                 else min(stride, n - s))
+            group: list[tuple[str, bytes]] = []
+            if valid is not None:
+                group.append(("PRESENT", _bits(valid[s:s + stride])))
+            if idx is not None:
+                group.append(("DATA", rle2.encode(
+                    idx[lo:lo + c].astype(np.int64), False)))
+            elif whole_bits:
+                e["offsets"]["DATA"] = 0
+                e["skips"]["DATA"] = (lo // 8, lo % 8)
+            else:
+                group += self._leaf_streams(col, kind, dense.slice(lo, c))
+            for skind, data in group:
+                e["offsets"][skind] = sizes.get(skind, 0)
+                parts.setdefault(skind, []).append(data)
+                sizes[skind] = e["offsets"][skind] + len(data)
+            lo += c
+        if whole_bits:
+            parts["DATA"] = [_bits(np.asarray(dense, dtype=bool))]
+        if idx is None:
+            self._set_enc(col, _LEAF_ENCODING[kind])
+        else:
+            self._set_enc(col, "DICTIONARY_V2", dict_size=len(dlens))
+            dictionary = [("DICTIONARY_DATA", ddata.tobytes()),
+                          ("LENGTH", rle2.encode(dlens.astype(np.int64),
+                                                 False))]
+            # unindexed files have always listed DICTIONARY_DATA first
+            # and indexed ones LENGTH first: keep both, byte-stable
+            for skind, data in (dictionary[::-1] if self.stride
+                                else dictionary):
+                parts[skind] = [data]
+        for skind, group_parts in parts.items():
+            self._put(col, skind, b"".join(group_parts))
+        self.entries[col] = entries
+
+    def _leaf_streams(self, col: int, kind: str, dense: pa.Array
+                      ) -> list[tuple[str, bytes]]:
+        """One group's DIRECT streams of a no-null primitive array."""
         if kind == "BOOLEAN":
-            self._set_enc(col, "DIRECT")
-            bits = np.asarray(dense, dtype=bool)
-            self._put(col, "DATA",
-                      byte_rle.encode(np.frombuffer(pack_bools(bits),
-                                                    np.uint8)))
-            return
+            return [("DATA", _bits(np.asarray(dense, dtype=bool)))]
 
         if kind == "BYTE":
-            self._set_enc(col, "DIRECT")
             vals = np.asarray(dense, dtype=np.int8).view(np.uint8)
-            self._put(col, "DATA", byte_rle.encode(vals))
-            return
+            return [("DATA", byte_rle.encode(vals))]
 
-        if kind in ("SHORT", "INT", "LONG"):
-            self._set_enc(col, "DIRECT_V2")
-            vals = np.asarray(dense.cast(pa.int64()), dtype=np.int64)
-            self._put(col, "DATA", rle2.encode(vals, True))
-            return
-
-        if kind == "DATE":
-            self._set_enc(col, "DIRECT_V2")
-            days = np.asarray(dense.cast(pa.int32()), dtype=np.int64)
-            self._put(col, "DATA", rle2.encode(days, True))
-            return
+        if kind in ("SHORT", "INT", "LONG", "DATE"):
+            vals = np.asarray(dense.cast(
+                pa.int32() if kind == "DATE" else pa.int64()),
+                dtype=np.int64)
+            return [("DATA", rle2.encode(vals, True))]
 
         if kind in ("FLOAT", "DOUBLE"):
-            self._set_enc(col, "DIRECT")
             dt = np.dtype("<f4") if kind == "FLOAT" else np.dtype("<f8")
-            self._put(col, "DATA", np.asarray(dense, dtype=dt).tobytes())
-            return
+            return [("DATA", np.asarray(dense, dtype=dt).tobytes())]
 
         if kind in ("TIMESTAMP", "TIMESTAMP_INSTANT"):
-            self._set_enc(col, "DIRECT_V2")
             ns = np.asarray(
                 dense.cast(pa.timestamp("ns", tz=dense.type.tz))
                 .cast(pa.int64()), dtype=np.int64)
@@ -275,212 +363,56 @@ class _ColumnWriter:
             # trunc+signed is the only layout all readers agree on.
             secs = np.sign(ns) * (np.abs(ns) // 1_000_000_000)
             nanos = ns - secs * 1_000_000_000  # sign follows ns
-            self._put(col, "DATA",
-                      rle2.encode(secs - ORC_EPOCH_SECONDS, True))
-            self._put(col, "SECONDARY",
-                      rle2.encode(_encode_nanos_signed(nanos), False))
-            return
+            return [("DATA", rle2.encode(secs - ORC_EPOCH_SECONDS, True)),
+                    ("SECONDARY",
+                     rle2.encode(_encode_nanos_signed(nanos), False))]
 
         if kind in ("STRING", "BINARY"):
-            base = pa.string() if kind == "STRING" else pa.binary()
-            dense = dense.cast(base) if dense.type != base else dense
-            n = len(dense)
-            n_unique = pa.compute.count_distinct(dense).as_py() if n else 0
-            if kind == "STRING" and n and n_unique / n <= self.dict_ratio:
-                idx, dlens, ddata = dictionary_encode_sorted(dense)
-                self._set_enc(col, "DICTIONARY_V2", dict_size=len(dlens))
-                self._put(col, "DATA",
-                          rle2.encode(idx.astype(np.int64), False))
-                self._put(col, "DICTIONARY_DATA", ddata.tobytes())
-                self._put(col, "LENGTH",
-                          rle2.encode(dlens.astype(np.int64), False))
-            else:
-                self._set_enc(col, "DIRECT_V2")
-                data, lens = string_parts(dense)
-                self._put(col, "DATA", data.tobytes())
-                self._put(col, "LENGTH", rle2.encode(lens, False))
-            return
+            data, lens = string_parts(dense)
+            return [("DATA", data.tobytes()),
+                    ("LENGTH", rle2.encode(lens, False))]
 
-        if kind == "DECIMAL":
-            self._set_enc(col, "DIRECT_V2")
-            scale = self.types[col].get("scale", 0)
-            precision = self.types[col].get("precision", 38)
-            n = len(dense)
-            if precision <= 18 and n:
-                # mantissas fit int64: read them straight out of the
-                # decimal128 storage (lo limb IS the value in two's
-                # complement when |v| < 2^63) and emit zigzag varints
-                # with the vectorized kernel — no per-row Python
-                storage = np.frombuffer(
-                    dense.buffers()[1], dtype="<i8",
-                    count=2 * (dense.offset + n)).reshape(-1, 2)
-                lo = storage[dense.offset:dense.offset + n, 0]
-                z = (lo.astype(np.uint64) << np.uint64(1)) \
-                    ^ (lo >> np.int64(63)).astype(np.uint64)
-                data, _ = varint.encode_unsigned(z)
-                self._put(col, "DATA", data)
-            else:
-                mantissas = [int(v.scaleb(scale))
-                             for v in dense.to_pylist()]
-                self._put(col, "DATA", _zigzag_varint_bytes(mantissas))
-            self._put(col, "SECONDARY",
-                      rle2.encode(np.full(len(dense), scale, np.int64),
-                                  True))
-            return
-
-        raise NotImplementedError(f"ORC writer kind {kind}")
-
-
-_INDEXABLE_KINDS = ("BOOLEAN", "BYTE", "SHORT", "INT", "LONG", "FLOAT",
-                    "DOUBLE", "STRING", "BINARY", "TIMESTAMP",
-                    "TIMESTAMP_INSTANT", "DATE", "DECIMAL")
-
-
-def _indexed_column(types: list[dict], col: int, arr, stride: int,
-                    dict_ratio: float):
-    """Encode one primitive top-level column with per-row-group
-    RESTARTS: every stream starts a fresh run at each stride boundary,
-    so every ROW_INDEX position has zero run-carry skips (spec-valid —
-    an RLE stream is just a run sequence — at ~2 bytes/group/stream
-    ratio cost). stride must be a multiple of 8 so PRESENT bits stay
-    byte-aligned at boundaries.
-
-    EXCEPTION: nullable BOOLEAN data. Its bit count per group is the
-    group's NON-NULL count, which is not a multiple of 8, so per-group
-    restarts would leave padding bits that shift every later value
-    (readers consume the stream as one contiguous bitstream). That one
-    stream is encoded whole-stripe instead, and its positions carry
-    real byte/bit skips (entries[g]["skips"]["DATA"]).
-
-    Returns (streams {kind: bytes}, encoding, column stats,
-    entries [{"offsets": {kind: raw_offset},
-              "skips": {kind: (byte_skip, bit_skip)}, "stats": ...}]
-    per group).
-    """
-    import pyarrow.compute as pc
-
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    kind = proto.KIND_NAME[types[col].get("kind", 0)]
-    n = len(arr)
-    starts = list(range(0, n, stride))
-    has_nulls = arr.null_count > 0
-    bufs: dict[str, bytearray] = {}
-    entries: list[dict] = [{"offsets": {}, "skips": {}, "stats": None}
-                           for _ in starts]
-
-    def put(stream_kind: str, g: int, data: bytes) -> None:
-        buf = bufs.setdefault(stream_kind, bytearray())
-        entries[g]["offsets"][stream_kind] = len(buf)
-        buf += data
-
-    if has_nulls:
-        valid = np.asarray(arr.is_valid())
-        for g, s in enumerate(starts):
-            bits = valid[s:s + stride]
-            put("PRESENT", g,
-                byte_rle.encode(np.frombuffer(pack_bools(bits), np.uint8)))
-
-    dict_mode = False
-    dense = None
-    if kind == "STRING":
-        dense = arr.drop_null() if has_nulls else arr
-        if dense.type != pa.string():
-            dense = dense.cast(pa.string())
-        nu = pc.count_distinct(dense).as_py() if len(dense) else 0
-        dict_mode = len(dense) > 0 and nu / len(dense) <= dict_ratio
-    if dict_mode:
-        idx, dlens, ddata = dictionary_encode_sorted(dense)
-        encoding = {"kind": proto.ENCODING["DICTIONARY_V2"],
-                    "dictionarySize": len(dlens)}
-        if has_nulls:
-            counts = [int(valid[s:s + stride].sum()) for s in starts]
+        # DECIMAL
+        scale = self.types[col].get("scale", 0)
+        precision = self.types[col].get("precision", 38)
+        n = len(dense)
+        if precision <= 18 and n:
+            # mantissas fit int64: read them straight out of the
+            # decimal128 storage (lo limb IS the value in two's
+            # complement when |v| < 2^63) and emit zigzag varints
+            # with the vectorized kernel — no per-row Python
+            storage = np.frombuffer(
+                dense.buffers()[1], dtype="<i8",
+                count=2 * (dense.offset + n)).reshape(-1, 2)
+            lo = storage[dense.offset:dense.offset + n, 0]
+            z = (lo.astype(np.uint64) << np.uint64(1)) \
+                ^ (lo >> np.int64(63)).astype(np.uint64)
+            data, _ = varint.encode_unsigned(z)
         else:
-            counts = [min(stride, n - s) for s in starts]
-        lo = 0
-        for g, c in enumerate(counts):
-            put("DATA", g, rle2.encode(idx[lo:lo + c].astype(np.int64),
-                                       False))
-            lo += c
-        # dictionary streams are whole-stripe: never positioned
-        bufs["DICTIONARY_DATA"] = bytearray(ddata.tobytes())
-        bufs["LENGTH"] = bytearray(rle2.encode(dlens.astype(np.int64),
-                                               False))
-    elif kind == "BOOLEAN" and has_nulls:
-        # see docstring EXCEPTION: one whole-stripe bitstream; positions
-        # carry cumulative dense-bit skips instead of restart offsets
-        encoding = {"kind": proto.ENCODING["DIRECT"]}
-        bits = np.asarray(arr.drop_null(), dtype=bool)
-        bufs["DATA"] = bytearray(
-            byte_rle.encode(np.frombuffer(pack_bools(bits), np.uint8)))
-        cum = 0
-        for g, s in enumerate(starts):
-            entries[g]["offsets"]["DATA"] = 0
-            entries[g]["skips"]["DATA"] = (cum // 8, cum % 8)
-            cum += int(valid[s:s + stride].sum())
-    else:
-        encoding = None
-        for g, s in enumerate(starts):
-            group = arr.slice(s, stride)
-            sub = _ColumnWriter(types, dict_ratio=-1.0)  # force DIRECT
-            sub.write(col, group.drop_null() if group.null_count
-                      else group)
-            encoding = sub.encodings[col]
-            for _, k2, raw in sub.streams:
-                if k2 == "PRESENT":
-                    continue  # handled above with original validity
-                put(k2, g, raw)
-    for g, s in enumerate(starts):
-        entries[g]["stats"] = _col_stats(arr.slice(s, stride), arr.type)
-    return ({k: bytes(v) for k, v in bufs.items()}, encoding,
-            _col_stats(arr, arr.type), entries)
+            data = _zigzag_varint_bytes(
+                [int(v.scaleb(scale)) for v in dense.to_pylist()])
+        return [("DATA", data),
+                ("SECONDARY", rle2.encode(np.full(n, scale, np.int64),
+                                          True))]
 
 
-def _entry_positions(kind: str, enc_kind: int, has_present: bool,
-                     offsets: dict, posmap,
-                     entry_skips: dict | None = None) -> list[int]:
-    """RowIndexEntry.positions in the exact order C++ readers consume
-    them (mirrors reader._seek_streams): PRESENT, DATA, then LENGTH /
-    SECONDARY; RLE streams append a zero value-skip, bit-packed streams
-    a zero byte-skip + zero bit-skip (restart boundaries carry none —
-    except nullable BOOLEAN data, whose whole-stripe bitstream records
-    real cumulative skips via ``entry_skips``)."""
+def _entry_positions(kind: str, enc: str, entry: dict, posmap
+                     ) -> list[int]:
+    """One group's RowIndexEntry.positions, laid out by the shared
+    reader.row_index_layout table: each positioned stream's cursor
+    (``posmap`` of its raw offset), then its skips — zero at restart
+    boundaries, real byte/bit skips for nullable BOOLEAN data."""
     out: list[int] = []
-    entry_skips = entry_skips or {}
-
-    def add(stream_kind: str, skips: list[int]) -> None:
-        out.extend(posmap(stream_kind, offsets.get(stream_kind, 0)))
-        out.extend(entry_skips.get(stream_kind, skips))
-
-    if has_present:
-        add("PRESENT", [0, 0])
-    if kind == "BOOLEAN":
-        add("DATA", [0, 0])
-    elif kind in ("BYTE", "SHORT", "INT", "LONG", "DATE"):
-        add("DATA", [0])
-    elif kind in ("FLOAT", "DOUBLE"):
-        add("DATA", [])
-    elif kind in ("TIMESTAMP", "TIMESTAMP_INSTANT"):
-        add("DATA", [0])
-        add("SECONDARY", [0])
-    elif kind in ("STRING", "BINARY"):
-        if enc_kind in (proto.ENCODING["DICTIONARY"],
-                        proto.ENCODING["DICTIONARY_V2"]):
-            add("DATA", [0])
-        else:
-            add("DATA", [])
-            add("LENGTH", [0])
-    elif kind == "DECIMAL":
-        add("DATA", [])
-        add("SECONDARY", [0])
+    for skind, n_skips in row_index_layout(
+            kind, enc, "PRESENT" in entry["offsets"]):
+        out.extend(posmap(skind, entry["offsets"].get(skind, 0)))
+        out.extend(entry["skips"].get(skind, (0,) * n_skips))
     return out
 
 
 def _col_stats(arr: pa.Array, col_type: pa.DataType) -> dict:
     """Min/max ColumnStatistics for scalar columns (enables stripe
     pruning in readers); counts only for nested types."""
-    import pyarrow.compute as pc
-
     st: dict = {"numberOfValues": len(arr) - arr.null_count,
                 "hasNull": 1 if arr.null_count else 0}
     try:
@@ -531,6 +463,97 @@ def _merge_stats(agg: list, cs: list[dict]) -> None:
                 del a[key]
 
 
+@contextlib.contextmanager
+def _output(where):
+    """A path is opened (and closed) here; a file object is used as is."""
+    out = open(where, "wb") if isinstance(where, str) else where
+    try:
+        yield out
+    finally:
+        if isinstance(where, str):
+            out.close()
+
+
+class _FileSink:
+    """The ORC byte layout around already-framed streams: the header,
+    each stripe's streams and StripeFooter, then Metadata, Footer and
+    PostScript. ORC needs no backpatching: stripes land first, the tail
+    follows at close()."""
+
+    def __init__(self, out, types: list[dict], compression: str,
+                 block_size: int):
+        self.out = out
+        self.types = types
+        self.compression = compression
+        self.block_size = block_size
+        self.pos = 0
+        self.stripes: list[dict] = []  # StripeInformation
+        self._w(MAGIC)
+
+    def _w(self, b: bytes) -> None:
+        self.out.write(b)
+        self.pos += len(b)
+
+    def frame(self, msg: str, body: dict) -> bytes:
+        """A metadata message, protobuf-encoded and chunk-framed."""
+        return compress_stream(proto.encode(msg, body), self.compression,
+                               self.block_size)
+
+    def stripe(self, streams: list[tuple[int, str, bytes]],
+               encodings: dict[int, dict], n_rows: int,
+               index_len: int = 0) -> None:
+        """One stripe of framed ``streams`` [(col, kind, bytes)] in file
+        order; the first ``index_len`` bytes are its index region."""
+        offset = self.pos
+        for _, _, comp in streams:
+            self._w(comp)
+        data_len = self.pos - offset - index_len
+        sfoot_c = self.frame("StripeFooter", {
+            "streams": [{"kind": proto.STREAM_KIND[kind], "column": col,
+                         "length": len(comp)}
+                        for col, kind, comp in streams],
+            "columns": [encodings.get(c, {"kind": 0})
+                        for c in range(len(self.types))],
+            "writerTimezone": "UTC",
+        })
+        self._w(sfoot_c)
+        self.stripes.append({
+            "offset": offset, "indexLength": index_len,
+            "dataLength": data_len, "footerLength": len(sfoot_c),
+            "numberOfRows": n_rows,
+        })
+
+    def close(self, statistics: list[dict], row_index_stride: int,
+              stripe_stats: list[dict] | None = None) -> None:
+        content_len = self.pos - len(MAGIC)  # stripes only, pre-metadata
+        metadata_c = (self.frame("Metadata",
+                                   {"stripeStats": stripe_stats})
+                      if stripe_stats else b"")
+        self._w(metadata_c)
+        footer_c = self.frame("Footer", {
+            "headerLength": len(MAGIC),
+            "contentLength": content_len,
+            "stripes": self.stripes,
+            "types": self.types,
+            "numberOfRows": sum(s["numberOfRows"] for s in self.stripes),
+            "statistics": statistics,
+            "rowIndexStride": row_index_stride,
+            "writer": 1,
+        })
+        self._w(footer_c)
+        ps = proto.encode("PostScript", {
+            "footerLength": len(footer_c),
+            "compression": proto.COMPRESSION[self.compression],
+            "compressionBlockSize": self.block_size,
+            "version": [0, 12],
+            "metadataLength": len(metadata_c),
+            "writerVersion": 1,
+            "magic": "ORC",
+        })
+        self._w(ps)
+        self._w(bytes([len(ps)]))
+
+
 def write_raw_stripe(where, types: list[dict],
                      streams: list[tuple[int, str, bytes]],
                      encodings: dict[int, dict], n_rows: int,
@@ -545,44 +568,13 @@ def write_raw_stripe(where, types: list[dict],
     (pre-order), ``streams`` [(col, kind, raw_bytes)], ``encodings``
     {col: encoding dict}.
     """
-    n_cols = len(types)
-    out = open(where, "wb") if isinstance(where, str) else where
-    try:
-        buf = bytearray(MAGIC)
-        offset = len(buf)
-        stream_protos = []
-        for col, kind, raw in streams:
-            comp = compress_stream(raw, compression, block_size)
-            stream_protos.append({"kind": proto.STREAM_KIND[kind],
-                                  "column": col, "length": len(comp)})
-            buf += comp
-        data_len = len(buf) - offset
-        sfoot_c = compress_stream(proto.encode("StripeFooter", {
-            "streams": stream_protos,
-            "columns": [encodings.get(c, {"kind": 0}) for c in range(n_cols)],
-            "writerTimezone": "UTC"}), compression, block_size)
-        buf += sfoot_c
-        info = {"offset": offset, "indexLength": 0, "dataLength": data_len,
-                "footerLength": len(sfoot_c), "numberOfRows": n_rows}
-        content_len = len(buf) - len(MAGIC)
-        footer_c = compress_stream(proto.encode("Footer", {
-            "headerLength": len(MAGIC), "contentLength": content_len,
-            "stripes": [info], "types": types, "numberOfRows": n_rows,
-            "statistics": [{"numberOfValues": n_rows, "hasNull": 1}
-                           for _ in range(n_cols)],
-            "rowIndexStride": 0, "writer": 1}), compression, block_size)
-        buf += footer_c
-        ps = proto.encode("PostScript", {
-            "footerLength": len(footer_c),
-            "compression": proto.COMPRESSION[compression],
-            "compressionBlockSize": block_size, "version": [0, 12],
-            "metadataLength": 0, "writerVersion": 1, "magic": "ORC"})
-        buf += ps
-        buf.append(len(ps))
-        out.write(bytes(buf))
-    finally:
-        if isinstance(where, str):
-            out.close()
+    with _output(where) as out:
+        sink = _FileSink(out, types, compression, block_size)
+        sink.stripe([(col, kind, compress_stream(raw, compression,
+                                                 block_size))
+                     for col, kind, raw in streams], encodings, n_rows)
+        sink.close([{"numberOfValues": n_rows, "hasNull": 1}
+                    for _ in types], 0)
 
 
 def _bloom_values(arr: pa.Array, kind: str) -> list:
@@ -612,10 +604,77 @@ def _bloom_values(arr: pa.Array, kind: str) -> list:
         f"ORC bloom filters are not written for {kind} columns")
 
 
+def _bloom_filter(grp: pa.Array, kind: str, fpp: float) -> dict:
+    """One row group's BloomFilter message. Hashes UNIQUE values only
+    (bloom adds are idempotent), with the vectorized Wang mix for
+    integer-domain columns."""
+    from . import bloom
+
+    vals = _bloom_values(pc.unique(grp), kind)
+    bf = bloom.BloomFilterUtf8.build(len(vals), fpp)
+    if vals and isinstance(vals[0], int):
+        bf.add_hashes(bloom.hash64_long_array(np.array(vals, np.int64)))
+    elif vals and isinstance(vals[0], (str, bytes)):
+        bf.add_hashes(bloom.hash64_bytes_array(
+            [v.encode() if isinstance(v, str) else v for v in vals]))
+    elif vals and isinstance(vals[0], float):
+        # IEEE bits through the Wang mix; -0.0 normalizes first
+        # (hash64_double)
+        d = np.array(vals, np.float64)
+        d[d == 0.0] = 0.0
+        bf.add_hashes(bloom.hash64_long_array(d.view(np.int64)))
+    else:
+        for v in vals:
+            bf.add_value(v)
+    return bf.to_proto()
+
+
+def _index_streams(sink: _FileSink, cw: _ColumnWriter, chunk,
+                   framed: list[tuple], bloom_ids: set[int],
+                   bloom_fpp: float) -> list[tuple[int, str, bytes]]:
+    """A stripe's index region: one ROW_INDEX stream per column (root
+    first), each followed by the column's BLOOM_FILTER_UTF8 stream when
+    it is bloom-filtered. ``framed`` [(col, kind, bytes, chunk starts)]
+    maps each group's raw stream offset to its position."""
+    types, stride, block_size = cw.types, cw.stride, sink.block_size
+    n = chunk.num_rows
+    chunk_starts = {(col, kind): offs for col, kind, _, offs in framed}
+    frame = sink.frame
+
+    def posmap(col: int):
+        def at(skind: str, b: int) -> tuple:
+            if sink.compression == "NONE":
+                return (b,)
+            offs = chunk_starts.get((col, skind)) or [0]
+            ci = min(b // block_size, len(offs) - 1)
+            return (offs[ci], b - ci * block_size)
+        return at
+
+    out = [(0, "ROW_INDEX", frame("RowIndex", {"entry": [
+        {"positions": [],
+         "statistics": {"numberOfValues": min(stride, n - s), "hasNull": 0}}
+        for s in range(0, n, stride)]}))]
+    for i, sub in enumerate(types[0].get("subtypes", [])):
+        kind = proto.KIND_NAME[types[sub].get("kind", 0)]
+        enc = proto.ENCODING_NAME[cw.encodings[sub].get("kind", 0)]
+        out.append((sub, "ROW_INDEX", frame("RowIndex", {"entry": [
+            {"positions": _entry_positions(kind, enc, e, posmap(sub)),
+             "statistics": e["stats"]}
+            for e in cw.entries[sub]]})))
+        if sub in bloom_ids:
+            col = chunk.column(i)
+            if isinstance(col, pa.ChunkedArray):
+                col = col.combine_chunks()
+            out.append((sub, "BLOOM_FILTER_UTF8", frame(
+                "BloomFilterIndex", {"bloomFilter": [
+                    _bloom_filter(col.slice(s, stride), kind, bloom_fpp)
+                    for s in range(0, n, stride)]})))
+    return out
+
+
 def write_orc(data, where, compression: str = "ZLIB",
               stripe_rows: int = 64 * 1024,
               block_size: int = 256 * 1024,
-              dict_ratio: float = 0.5,
               stripe_bytes: int = 64 << 20,
               schema: pa.Schema | None = None,
               row_index_stride: int = 10000,
@@ -662,45 +721,34 @@ def write_orc(data, where, compression: str = "ZLIB",
     types: list[dict] = []
     _build_types(schema, types)
     n_cols = len(types)
+    subtypes = types[0].get("subtypes", [])
 
     # ROW_INDEX needs positional seek semantics per stream; emitted for
     # all-primitive schemas (the 100 TB pages shape). Nested columns
-    # fall back to stride 0 — an unindexed file, exactly what we wrote
-    # before. stride must be a multiple of 8 (bit-packed streams
-    # restart byte-aligned at group boundaries).
+    # fall back to stride 0 — an unindexed file. stride must be a
+    # multiple of 8 (bit-packed streams restart byte-aligned at group
+    # boundaries).
     if row_index_stride % 8:
         raise ValueError("row_index_stride must be a multiple of 8")
-    indexed = bool(row_index_stride) and all(
-        proto.KIND_NAME[types[sub].get("kind", 0)] in _INDEXABLE_KINDS
-        for sub in types[0].get("subtypes", []))
-    if bloom_filter_columns and not indexed:
+    if not all(proto.KIND_NAME[types[sub].get("kind", 0)] in _LEAF_ENCODING
+               for sub in subtypes):
+        row_index_stride = 0
+    if bloom_filter_columns and not row_index_stride:
         raise ValueError("bloom filters require an indexed file "
                          "(row_index_stride > 0, primitive schema)")
     bloom_ids = set()
-    if bloom_filter_columns:
-        root_names = types[0].get("fieldNames", [])
-        for cname in bloom_filter_columns:
-            sub = types[0]["subtypes"][root_names.index(cname)]
-            kind = proto.KIND_NAME[types[sub].get("kind", 0)]
-            if kind == "BOOLEAN" or kind == "DECIMAL":
-                raise NotImplementedError(
-                    f"ORC bloom filters are not written for {kind}")
-            bloom_ids.add(sub)
+    for cname in bloom_filter_columns or ():
+        sub = subtypes[types[0]["fieldNames"].index(cname)]
+        kind = proto.KIND_NAME[types[sub].get("kind", 0)]
+        if kind in ("BOOLEAN", "DECIMAL"):
+            raise NotImplementedError(
+                f"ORC bloom filters are not written for {kind}")
+        bloom_ids.add(sub)
 
-    out = open(where, "wb") if isinstance(where, str) else where
-    pos = 0
-
-    def w(b: bytes) -> None:
-        nonlocal pos
-        out.write(b)
-        pos += len(b)
-
-    try:
-        w(MAGIC)
-        stripe_infos: list[dict] = []
+    with _output(where) as out:
+        sink = _FileSink(out, types, compression, block_size)
         stripe_stats: list[dict] = []
         agg_stats: list = [None] * n_cols
-        total_rows = 0
         # rechunk=False: one INPUT batch -> one stripe, exactly (the
         # stripe-preserving rewrite shape; _rechunk would merge small
         # leading batches into a later one's budget)
@@ -708,199 +756,27 @@ def write_orc(data, where, compression: str = "ZLIB",
                       if rechunk else batches):
             if chunk is None or chunk.num_rows == 0:
                 continue
-            cw = _ColumnWriter(types, dict_ratio)
+            cw = _ColumnWriter(types, row_index_stride)
             cw.encodings[0] = {"kind": proto.ENCODING["DIRECT"]}
-            col_entries: dict[int, list[dict]] = {}
-            if indexed:
-                for i, sub in enumerate(types[0].get("subtypes", [])):
-                    streams, enc, stats, entries = _indexed_column(
-                        types, sub, chunk.column(i), row_index_stride,
-                        dict_ratio)
-                    for skind in ("PRESENT", "DATA", "LENGTH",
-                                  "DICTIONARY_DATA", "SECONDARY"):
-                        if skind in streams:
-                            cw._put(sub, skind, streams[skind])
-                    cw.encodings[sub] = enc
-                    cw.stats[sub] = stats
-                    col_entries[sub] = entries
-            else:
-                for i, sub in enumerate(types[0].get("subtypes", [])):
-                    cw.write(sub, chunk.column(i))
-
-            offset = pos
-            stream_protos = []
-            index_len = 0
-            if indexed:
-                from .compression import compress_stream_offsets
-
-                comp_streams = []
-                chunkmaps: dict[tuple[int, str], list[int]] = {}
-                for col, kind, raw in cw.streams:
-                    comp, offs = compress_stream_offsets(
-                        raw, compression, block_size)
-                    comp_streams.append((col, kind, comp))
-                    chunkmaps[(col, kind)] = offs
-
-                n_groups = len(range(0, chunk.num_rows, row_index_stride))
-
-                def mk_posmap(col: int):
-                    def posmap(skind: str, b: int) -> tuple:
-                        if compression == "NONE":
-                            return (b,)
-                        offs = chunkmaps.get((col, skind)) or [0]
-                        ci = min(b // block_size, len(offs) - 1)
-                        return (offs[ci], b - ci * block_size)
-                    return posmap
-
-                # index streams first (they ARE the index region)
-                for sub in [0] + list(types[0].get("subtypes", [])):
-                    if sub == 0:
-                        ents = [{"positions": [],
-                                 "statistics": {
-                                     "numberOfValues": min(
-                                         row_index_stride,
-                                         chunk.num_rows
-                                         - g * row_index_stride),
-                                     "hasNull": 0}}
-                                for g in range(n_groups)]
-                    else:
-                        kind = proto.KIND_NAME[types[sub].get("kind", 0)]
-                        enck = cw.encodings[sub].get("kind", 0)
-                        has_p = any(c == sub and k == "PRESENT"
-                                    for c, k, _ in cw.streams)
-                        ents = [{"positions": _entry_positions(
-                                     kind, enck, has_p,
-                                     e["offsets"], mk_posmap(sub),
-                                     e.get("skips")),
-                                 "statistics": e["stats"]}
-                                for e in col_entries[sub]]
-                    ri = compress_stream(
-                        proto.encode("RowIndex", {"entry": ents}),
-                        compression, block_size)
-                    stream_protos.append(
-                        {"kind": proto.STREAM_KIND["ROW_INDEX"],
-                         "column": sub, "length": len(ri)})
-                    w(ri)
-                    if sub in bloom_ids:
-                        from . import bloom as bloom_mod
-
-                        kind2 = proto.KIND_NAME[types[sub].get("kind", 0)]
-                        idx2 = types[0]["subtypes"].index(sub)
-                        col_arr = chunk.column(idx2)
-                        bfs = []
-                        for g in range(n_groups):
-                            grp = col_arr.slice(g * row_index_stride,
-                                                row_index_stride)
-                            # hash UNIQUE values only (bloom adds are
-                            # idempotent) and use the vectorized Wang
-                            # mix for integer-domain columns
-                            import pyarrow.compute as pc2
-
-                            uniq = pc2.unique(
-                                grp.combine_chunks()
-                                if isinstance(grp, pa.ChunkedArray)
-                                else grp)
-                            vals = _bloom_values(uniq, kind2)
-                            bf = bloom_mod.BloomFilterUtf8.build(
-                                len(vals), bloom_filter_fpp)
-                            if vals and isinstance(vals[0], int):
-                                bf.add_hashes(bloom_mod.hash64_long_array(
-                                    np.array(vals, np.int64)))
-                            elif vals and isinstance(vals[0], (str, bytes)):
-                                bf.add_hashes(bloom_mod.hash64_bytes_array(
-                                    [v.encode() if isinstance(v, str)
-                                     else v for v in vals]))
-                            elif vals and isinstance(vals[0], float):
-                                # IEEE bits through the Wang mix; -0.0
-                                # normalizes first (hash64_double)
-                                d = np.array(vals, np.float64)
-                                d[d == 0.0] = 0.0
-                                bf.add_hashes(bloom_mod.hash64_long_array(
-                                    d.view(np.int64)))
-                            else:
-                                for v in vals:
-                                    bf.add_value(v)
-                            bfs.append(bf.to_proto())
-                        bb = compress_stream(
-                            proto.encode("BloomFilterIndex",
-                                         {"bloomFilter": bfs}),
-                            compression, block_size)
-                        stream_protos.append(
-                            {"kind":
-                             proto.STREAM_KIND["BLOOM_FILTER_UTF8"],
-                             "column": sub, "length": len(bb)})
-                        w(bb)
-                index_len = pos - offset
-                for col, kind, comp in comp_streams:
-                    stream_protos.append(
-                        {"kind": proto.STREAM_KIND[kind],
-                         "column": col, "length": len(comp)})
-                    w(comp)
-            else:
-                for col, kind, raw in cw.streams:
-                    comp = compress_stream(raw, compression, block_size)
-                    stream_protos.append(
-                        {"kind": proto.STREAM_KIND[kind],
-                         "column": col, "length": len(comp)})
-                    w(comp)
-            data_len = pos - offset - index_len
-            sfoot = proto.encode("StripeFooter", {
-                "streams": stream_protos,
-                "columns": [cw.encodings.get(c, {"kind": 0})
-                            for c in range(n_cols)],
-                "writerTimezone": "UTC",
-            })
-            sfoot_c = compress_stream(sfoot, compression, block_size)
-            w(sfoot_c)
-            stripe_infos.append({
-                "offset": offset, "indexLength": index_len,
-                "dataLength": data_len,
-                "footerLength": len(sfoot_c),
-                "numberOfRows": chunk.num_rows,
-            })
+            for i, sub in enumerate(subtypes):
+                cw.write(sub, chunk.column(i))
+            framed = [(col, kind, *compress_stream_offsets(
+                raw, compression, block_size))
+                for col, kind, raw in cw.streams]
+            index = (_index_streams(sink, cw, chunk, framed, bloom_ids,
+                                    bloom_filter_fpp)
+                     if row_index_stride else [])
+            sink.stripe(index + [f[:3] for f in framed], cw.encodings,
+                        chunk.num_rows, sum(len(b) for _, _, b in index))
             cs: list[dict] = [
                 cw.stats.get(c, {"numberOfValues": 0, "hasNull": 1})
                 for c in range(n_cols)]
             cs[0] = {"numberOfValues": chunk.num_rows, "hasNull": 0}
             stripe_stats.append({"colStats": cs})
             _merge_stats(agg_stats, cs)
-            total_rows += chunk.num_rows
 
-        stats = [a if a is not None else {"numberOfValues": 0, "hasNull": 0}
-                 for a in agg_stats]
-
-        content_len = pos - len(MAGIC)  # stripes only, pre-metadata
-        metadata_c = b""
-        if stripe_stats:
-            metadata_c = compress_stream(
-                proto.encode("Metadata", {"stripeStats": stripe_stats}),
-                compression, block_size)
-            w(metadata_c)
-
-        footer = proto.encode("Footer", {
-            "headerLength": len(MAGIC),
-            "contentLength": content_len,
-            "stripes": stripe_infos,
-            "types": types,
-            "numberOfRows": total_rows,
-            "statistics": stats,
-            "rowIndexStride": row_index_stride if indexed else 0,
-            "writer": 1,
-        })
-        footer_c = compress_stream(footer, compression, block_size)
-        w(footer_c)
-        ps = proto.encode("PostScript", {
-            "footerLength": len(footer_c),
-            "compression": proto.COMPRESSION[compression],
-            "compressionBlockSize": block_size,
-            "version": [0, 12],
-            "metadataLength": len(metadata_c),
-            "writerVersion": 1,
-            "magic": "ORC",
-        })
-        w(ps)
-        w(bytes([len(ps)]))
-    finally:
-        if isinstance(where, str):
-            out.close()
-    return {"stripes": len(stripe_infos), "bytes": pos, "rows": total_rows}
+        sink.close([a if a is not None else {"numberOfValues": 0,
+                                             "hasNull": 0}
+                    for a in agg_stats], row_index_stride, stripe_stats)
+    return {"stripes": len(sink.stripes), "bytes": sink.pos,
+            "rows": sum(s["numberOfRows"] for s in sink.stripes)}

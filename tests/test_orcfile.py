@@ -132,9 +132,19 @@ def test_read_edge_tables():
         ["héllo", "日本語", "🚀🚀🚀", "", None] * 100)}))
 
 
-@pytest.mark.parametrize("comp", ["NONE", "ZLIB", "SNAPPY", "ZSTD", "LZ4"])
-def test_write_files_cpp_reads_all_compressions(comp):
-    _roundtrip_us_to_pa(_wide_table(), compression=comp)
+_COMPRESSIONS = ["NONE", "ZLIB", "SNAPPY", "ZSTD", "LZ4"]
+
+
+@pytest.mark.parametrize("comp,stride", [
+    *[pytest.param(c, 10000, id=c) for c in _COMPRESSIONS],
+    *[pytest.param(c, 0, id=f"{c}-stride0") for c in _COMPRESSIONS]])
+def test_write_files_cpp_reads_all_compressions(comp, stride):
+    t = _wide_table()
+    _roundtrip_us_to_pa(t, compression=comp, row_index_stride=stride)
+    # the nested columns leave that file unindexed; the flat columns
+    # alone take the stride's own path
+    _roundtrip_us_to_pa(t.drop_columns(["lst", "mp", "st"]),
+                        compression=comp, row_index_stride=stride)
 
 
 def test_write_multi_stripe_cpp_reads():
@@ -1141,6 +1151,63 @@ def test_own_writer_bloom_filters(tmp_path):
     cpp = paorc.ORCFile(p).read()
     assert cpp.num_rows == n
     assert cpp.column("k").to_pylist() == list(range(n))
+
+
+def test_read_stripe_pruned_stats_and_bloom(tmp_path):
+    """An equality range keeps only the row groups that pass both the
+    min/max statistics and the bloom filter, and decodes only the
+    requested columns of those groups."""
+    n = 40000
+    rng = np.random.default_rng(8)
+    k = rng.integers(0, 10**6, n)
+    k[::10000] = 0  # every group's min is 0 ...
+    k[9999::10000] = 10**6  # ... and its max 10**6
+    probe = 123457
+    k[k == probe] = probe + 1
+    k[25000] = probe  # present in group 2 only
+    t = pa.table({"k": pa.array(k), "v": pa.array(np.arange(n))})
+    p = str(tmp_path / "b.orc")
+    write_orc(t, p, compression="ZSTD", bloom_filter_columns=["k"])
+    f = ORCFile(p)
+    assert f.prune_row_groups(0, "k", probe, probe) == [0, 1, 2, 3]
+    keep = f.prune_row_groups_eq(0, "k", probe)
+    assert 2 in keep and len(keep) < 4
+    rb = f.read_stripe_pruned(0, [("k", probe, probe)], ["v"])
+    assert rb.schema.names == ["v"]
+    assert rb.column(0).to_pylist() == [
+        v for g in keep for v in range(g * 10000, (g + 1) * 10000)]
+    # ranges intersect; a range no group can match decodes nothing
+    assert f.read_stripe_pruned(
+        0, [("k", probe, probe), ("v", 0, 19999)]).num_rows == (
+        10000 * len([g for g in keep if g < 2]))
+    assert f.read_stripe_pruned(0, [("k", -5, -1)]).num_rows == 0
+    assert f.read_stripe_pruned(0, []).num_rows == n
+
+
+def test_write_orc_distributed_failed_task_leaves_no_part(tmp_path):
+    """A write task whose input raises after its first stripe leaves no
+    .orc file behind: the part is staged under a hidden name and only
+    renamed into place once complete."""
+    from orc_haskell_spark.orcfile.spark_source import (_list_orc_files,
+                                                        _part_writer)
+
+    rng = np.random.default_rng(2)
+    batch = pa.record_batch({"k": pa.array(rng.integers(0, 10**9, 70000)),
+                             "s": pa.array([f"s{i}" for i in range(70000)])})
+
+    def failing():
+        yield batch
+        raise RuntimeError("input failed")
+
+    out = tmp_path / "out"
+    out.mkdir()
+    with pytest.raises(RuntimeError, match="input failed"):
+        list(_part_writer(str(out), "ZLIB", 65536)(failing()))
+    assert not [f for f in os.listdir(out) if f.endswith(".orc")]
+
+    rows = list(_part_writer(str(out), "ZLIB", 65536)(iter([batch])))
+    assert _list_orc_files(str(out)) == [rows[0].column("file")[0].as_py()]
+    assert read_orc(_list_orc_files(str(out))[0]).num_rows == 70000
 
 
 def test_bloom_edge_cases_negative_zero_ns_and_domains(tmp_path):

@@ -242,6 +242,23 @@ def test_tiny_first_stripe_does_not_pin_string_codec():
     assert stripe.decode_stripe(f_big, payload).equals(big)
 
 
+def test_flag_column_picks_dict_under_outer_codec():
+    """A 1-byte flag column (TPC-H l_returnflag's A/R/N shape): the
+    dict estimate counts its indices after the outer codec, like the
+    direct and FSST estimates, so dict wins, and its stripe is smaller
+    than the FSST one."""
+    rng = np.random.default_rng(0)
+    n = 65536
+    flag = np.where(rng.random(n) < 0.5,
+                    np.where(rng.random(n) < 0.5, "R", "A"), "N")
+    batch = pa.record_batch({"f": pa.array(flag.tolist())})
+    footer, payload = stripe.encode_stripe(batch)
+    assert footer["columns"][0]["meta"]["enc"] == "dict"
+    _, fsst_payload = stripe.encode_stripe(batch, {"string_codec": "fsst"})
+    assert len(payload) < len(fsst_payload)
+    assert stripe.decode_stripe(footer, payload).equals(batch)
+
+
 def _numpy_path(fn):
     """``fn()`` with the C kernels switched off (numpy twins only)."""
     from orc_haskell_spark.codecs import native
