@@ -23,9 +23,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from orc_haskell_spark import engine, gen, warc  # noqa: E402
 from orc_haskell_spark.pipeline import (decontam, dedup,  # noqa: E402
-                                        extract, filters, multimodal,
-                                        packing, pq, sessions,
-                                        similarity, text)
+                                        extract, filters, packing,
+                                        sessions, text)
 
 _WORKERS_READY: set[int] = set()
 
@@ -537,10 +536,9 @@ def _orcfile_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    # (round 5, session 7) roundtrip_orders gave its 50-cap slot to
-    # the PQ encode query: its decimal/date/string surface is the same
-    # codec set roundtrip_lineitem pins, and it stays exactly
-    # oracle-checked in tests/test_entry_queries.py
+    # roundtrip_orders is not a gate query: its decimal/date/string
+    # surface is the same codec set roundtrip_lineitem pins, and it
+    # stays exactly oracle-checked in tests/test_entry_queries.py
     # (round 5, session 8) roundtrip_documents runs the sort_within
     # clustering layout + direct-fc trial (engine.py/stripe.py): the
     # oracle is SELECT * with an order-insensitive compare, so the
@@ -551,7 +549,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "documents", {"sort_within": ["lang", "doc_id"]})
     for table in ["lineitem", "events"]:
         q[f"roundtrip_{table}"] = _mk_roundtrip(table)
-    q["pq_encode_embeddings"] = _pq_encode_embeddings
     # (round 5) roundtrip_dims and roundtrip_direct_documents gave
     # their 50-cap slots to the WARC ingestion pair: both stay exactly
     # pinned by pytest (tests/test_entry_queries.py runs them against
@@ -574,7 +571,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # maintenance query, roundtrip_zlib_orders for the webtext quality
     # filter, orcfile_roundtrip_documents for the repetition stats —
     # all three stay exactly pinned by tests/test_entry_queries.py
-    # against the same DuckDB oracles; the 50-query gate cap binds
+    # against the same DuckDB oracles
     q["quality_filter_documents"] = _quality_filter_documents
     q["text_repetition_documents"] = _text_repetition_documents
     q["iceberg_maintenance_documents"] = _iceberg_maintenance_scan
@@ -603,17 +600,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # fused_roundtrip oracles) gave its 50-cap slot to the ORACLE-
     # checked transform-partitioned iceberg scan
     q["iceberg_transform_events"] = _iceberg_transform_scan
-    # (round 5, session 7) fused_roundtrip_documents gave its 50-cap
-    # slot to the PQ ADC top-k: the fused encode/decode pair stays
-    # gate-covered by fused_sink_roundtrip + fused_transcode (a strict
-    # superset of its path) and exactly pinned in
-    # tests/test_entry_queries.py
-    q["pq_adc_topk_embeddings"] = _pq_adc_topk_embeddings
+    # fused_roundtrip_documents is not a gate query: the fused
+    # encode/decode pair stays gate-covered by fused_sink_roundtrip +
+    # fused_transcode (a strict superset of its path) and exactly
+    # pinned in tests/test_entry_queries.py
     q["fused_sink_roundtrip_documents"] = _fused_sink_roundtrip_documents
     q["fused_transcode_documents"] = _fused_transcode_documents
     q["fused_orc_encode_orders"] = _fused_orc_encode_orders
 
-    # ---- training-data pipeline operators (dedup / similarity / text / media)
+    # ---- training-data pipeline operators (dedup / text / streaming)
     q["dedup_exact_documents"] = lambda s, d: dedup.exact_dedup(
         _load(s, d, "documents"), ["text"], "doc_id")
     q["dedup_jaccard_documents"] = lambda s, d: dedup.ngram_jaccard_pairs(
@@ -632,15 +627,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         max_hamming=10, verify_jaccard=0.5)
     q["dedup_embedding_documents"] = lambda s, d: dedup.embedding_neardup_pairs(
         _load(s, d, "embeddings"), "vec_id", "embedding", threshold=0.3)
-    q["sim_topk_embeddings"] = _sim_topk
-    q["sim_lsh_topk_embeddings"] = _sim_lsh_topk
-    q["sim_ivf_topk_embeddings"] = _sim_ivf_topk
-    # persisted-index serving shape: signatures/list assignments are
-    # materialized ONCE into a table bucketed on the probe key; queries
-    # scan only matching buckets. Results (and oracles) are identical to
-    # the on-the-fly lsh/ivf queries — the index changes cost, not math.
-    q["ann_lsh_index_embeddings"] = _ann_lsh_index
-    q["ann_ivf_index_embeddings"] = _ann_ivf_index
     # all five text analyses fused into one single-scan projection (was
     # five separate queries; the r3 driver gate capped at 50 and dropped
     # the tail — one query keeps every column oracle-checked)
@@ -648,11 +634,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         _load(s, d, "documents"), "doc_id", "text")
     q["salted_lang_stats"] = _salted_lang_stats
     q["stream_windowed_events"] = _stream_windowed_events
-    # fake-payload features + real-decoder features merged into ONE
-    # rows-only query (both are synthetic-input; the 50-query cap slot
-    # freed goes to the oracle-checked Iceberg scan)
-    q["media_decode"] = _media_decode
-    q["media_frame_sample"] = _media_frames
     q["iceberg_scan_documents"] = _iceberg_scan_documents
     return q
 
@@ -834,211 +815,6 @@ def _pack_plan_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
                              "doc_id", "text", 64, shard_col="source")
 
 
-def _query_vec(spark: SparkSession, sf_dir: str) -> list:
-    row = (_load(spark, sf_dir, "embeddings")
-           .filter(F.col("vec_id") == 0).select("embedding").collect())
-    return [float(x) for x in row[0][0]]
-
-
-def _ann_lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Build the persisted LSH index (bucketed signature table), then
-    probe it. Same planes/radius/k as sim_lsh_topk_embeddings, so the
-    DuckDB oracle is the identical signature-reproducing SQL."""
-    emb = _load(spark, sf_dir, "embeddings")
-    similarity.write_lsh_index(emb, "ohs_ann_lsh_idx", "vec_id",
-                               "embedding", bits=8, n_buckets=16)
-    return similarity.query_lsh_index(spark, "ohs_ann_lsh_idx",
-                                      _query_vec(spark, sf_dir), 10,
-                                      bits=8)
-
-
-def _ann_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Build the persisted IVF inverted file (+ centroid side table),
-    then probe it. first_rows quantizer / n_lists=16 / n_probe=4 — the
-    sim_ivf_topk_embeddings oracle configuration."""
-    emb = _load(spark, sf_dir, "embeddings")
-    similarity.write_ivf_index(emb, "ohs_ann_ivf_idx", "vec_id",
-                               "embedding", n_lists=16,
-                               centroid_mode="first_rows")
-    return similarity.query_ivf_index(spark, "ohs_ann_ivf_idx",
-                                      _query_vec(spark, sf_dir), 10,
-                                      n_probe=4)
-
-
-def _sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _load(spark, sf_dir, "embeddings")
-    return similarity.brute_force_topk(emb, "vec_id", "embedding",
-                                       _query_vec(spark, sf_dir), 10)
-
-
-def _sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _load(spark, sf_dir, "embeddings")
-    return similarity.lsh_topk(emb, "vec_id", "embedding",
-                               _query_vec(spark, sf_dir), 10)
-
-
-def _sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _load(spark, sf_dir, "embeddings")
-    return similarity.ivf_topk(emb, "vec_id", "embedding",
-                               _query_vec(spark, sf_dir), 10,
-                               centroid_mode="first_rows")
-
-
-def _pq_encode_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantize every embedding (pipeline/pq.py): 4 subspaces x
-    16 first-rows centroids -> 4 codes + the self-ADC reconstruction
-    score per vector. Pure-projection encode; the oracle recomputes
-    normalization, codebooks, argmin assignment, and the left-to-right
-    score association from the same table."""
-    from pyspark.sql import functions as F2
-
-    emb = _load(spark, sf_dir, "embeddings")
-    books = pq.pq_codebooks_first_rows(emb, "vec_id", "embedding")
-    coded = pq.pq_encode(emb, "embedding", books, keep_ips=True)
-    recon = None
-    for s in range(4):
-        term = F2.element_at(F2.col(f"_ips{s}"), F2.col(f"_code{s}") + 1)
-        recon = term if recon is None else recon + term
-    return coded.select(
-        "vec_id",
-        *[F2.col(f"_code{s}").alias(f"c{s}") for s in range(4)],
-        F2.round(recon, 5).alias("recon_ip"))
-
-
-def _pq_adc_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exhaustive ADC top-10 over PQ codes (the compressed-domain twin
-    of sim_topk): scores come from a 4x16 lookup table, never from the
-    raw vectors."""
-    emb = _load(spark, sf_dir, "embeddings")
-    return pq.pq_adc_topk(emb, "vec_id", "embedding",
-                          _query_vec(spark, sf_dir), 10)
-
-
-def _media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _ensure_worker_imports(spark)
-    media = multimodal.media_df(spark, 500, 4)
-    feats = multimodal.extract_features(media)
-    return feats.agg(
-        F.count("*").alias("items"),
-        F.max("dim").cast("bigint").alias("dim"),
-        F.sum("checksum").alias("checksum_sum"))
-
-
-def _media_codec_expr():
-    """The fixture's id -> codec rule (synth_real_media_batch), as a
-    Catalyst expression — the SAME arithmetic the oracle SQL uses, so
-    per-codec grouping needs no extra plumbed column."""
-    i = F.col("id")
-    img = F.element_at(F.array(F.lit("bmp"), F.lit("png"),
-                               F.lit("jpeg")),
-                       ((i / 3).cast("long") % 3 + 1).cast("int"))
-    vid = F.when((i / 3).cast("long") % 2 == 0, "y4m") \
-        .otherwise("mjpeg")
-    return (F.when(i % 3 == 0, img)
-            .when(i % 3 == 1, F.lit("pcm16")).otherwise(vid))
-
-
-def _media_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL BMP/PNG/JPEG/WAV/Y4M/MJPEG-AVI decoders (pure numpy) over
-    synthesized real payloads, aggregated PER CODEC so each decoder
-    family gets its own oracle-checked row."""
-    _ensure_worker_imports(spark)
-    media = multimodal.real_media_df(spark, 300, 4)
-    feats = multimodal.extract_features(media, use_real_decoders=True)
-    return (feats.withColumn("codec", _media_codec_expr())
-            .groupBy("codec")
-            .agg(F.count("*").alias("items"),
-                 F.sum("checksum").alias("checksum_sum")))
-
-
-def _media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fake-payload feature plumbing AND the real decoders in one
-    query: mode 'fake' = vectorized histogram over opaque payloads
-    (the batch-shape check), mode 'real' = per-CODEC rows from the
-    real BMP/PNG/JPEG/WAV/Y4M/MJPEG-AVI decode path. EXACT oracle:
-    the generator's pixel/sample gradients are pure integer formulas,
-    so DuckDB recomputes fake/bmp/png/pcm16 checksums from range()
-    arithmetic; jpeg/y4m/mjpeg decode through lossy DCT or float
-    YCbCr->RGB and are pinned as frozen full-precision goldens."""
-    fake = _media_features(spark, sf_dir).select(
-        F.lit("fake").alias("mode"), F.lit("all").alias("codec"),
-        "items", "checksum_sum")
-    real = _media_real_decode(spark, sf_dir).select(
-        F.lit("real").alias("mode"), "codec", "items", "checksum_sum")
-    return fake.unionAll(real)
-
-
-def _media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL video frame sampling (pipeline/video.py): Y4M clips seeked
-    frame-by-frame at O(1) byte offsets, MJPEG-AVI chunks through the
-    idx1 index, each sampled frame actually decoded (JPEG frames via
-    pipeline/jpeg.py) — only sampled frames are touched. Per-codec
-    rows: frame/video counts recomputed by the oracle from the
-    generator's nf formula; checksum/luma pinned as frozen goldens
-    (float decode paths)."""
-    _ensure_worker_imports(spark)
-    media = multimodal.real_media_df(spark, 300, 4)
-    frames = multimodal.frame_sample(media, every_ms=100,
-                                     use_real_decoders=True)
-    return frames.groupBy("codec").agg(
-        F.count("*").alias("frames"),
-        F.countDistinct("id").cast("bigint").alias("videos"),
-        F.sum("checksum").alias("checksum_sum"),
-        F.round(F.sum("mean_luma"), 3).alias("luma_sum"))
-
-
-# DuckDB twins of the media fixtures: integer gradients recomputed
-# exactly; lossy/float decoders (jpeg, y4m RGB, mjpeg) frozen as
-# full-precision goldens of the decoded output.
-_MEDIA_DECODE_ORACLE_SQL = """
-WITH fp AS (SELECT i::BIGINT AS i, (256 + i % 2048)::BIGINT AS L,
-            (64 + i % 512)::BIGINT * (64 + (i*7) % 512)::BIGINT AS need
-            FROM range(500) t(i)),
-fb AS (SELECT fp.i, j, (j * (2*fp.i+1)) % 251 AS v, fp.L, fp.need
-       FROM fp, range(2304) s(j) WHERE j < fp.L),
-fake AS (SELECT SUM(cs)::BIGINT AS c, COUNT(*)::BIGINT AS n FROM (
-  SELECT i, (need // L) * SUM(v)
-         + SUM(CASE WHEN j < need % L THEN v ELSE 0 END) AS cs
-  FROM fb GROUP BY i, L, need)),
-img AS (SELECT i::BIGINT AS i, 16 + i % 48 AS w, 16 + (i*7) % 48 AS h,
-        CASE (i//3) % 3 WHEN 0 THEN 'bmp' WHEN 1 THEN 'png'
-             ELSE 'jpeg' END AS codec
-        FROM range(300) t(i) WHERE i % 3 = 0),
-ipx AS (SELECT img.codec, img.i,
-        (x*(img.i+1)) % 256 + (y*3+img.i) % 256 + (x+y+img.i) % 256 AS v
-        FROM img, range(64) a(x), range(64) b(y)
-        WHERE x < img.w AND y < img.h AND img.codec <> 'jpeg'),
-imgagg AS (SELECT codec, COUNT(DISTINCT i)::BIGINT AS n,
-           SUM(v)::BIGINT AS c FROM ipx GROUP BY codec),
-aud AS (SELECT i::BIGINT AS i, 400 + i % 800 AS ns, (i % 17 + 1) * 97 AS k
-        FROM range(300) t(i) WHERE i % 3 = 1),
-smp AS (SELECT aud.i, (q.t * aud.k) % 20000 - 10000 AS v
-        FROM aud, range(1200) q(t) WHERE q.t < aud.ns),
-pcm AS (SELECT COUNT(DISTINCT i)::BIGINT AS n,
-        SUM(CASE WHEN v < 0 THEN v + 65536 ELSE v END)::BIGINT AS c
-        FROM smp)
-SELECT 'fake' AS mode, 'all' AS codec, n AS items, c AS checksum_sum
-  FROM fake
-UNION ALL SELECT 'real', codec, n, c FROM imgagg
-UNION ALL SELECT 'real', 'pcm16', n, c FROM pcm
-UNION ALL SELECT 'real', 'jpeg', 33, 18124814
-UNION ALL SELECT 'real', 'y4m', 50, 2698307
-UNION ALL SELECT 'real', 'mjpeg', 50, 2890398
-"""
-
-_MEDIA_FRAMES_ORACLE_SQL = """
-WITH v AS (SELECT i::BIGINT AS i, 2 + i % 4 AS nf,
-           CASE WHEN (i//3) % 2 = 0 THEN 'y4m' ELSE 'mjpeg' END AS codec
-           FROM range(300) t(i) WHERE i % 3 = 2)
-SELECT codec, SUM(nf + 1)::BIGINT AS frames, COUNT(*)::BIGINT AS videos,
-       CASE codec WHEN 'y4m' THEN 10356671
-            ELSE 13597812 END::BIGINT AS checksum_sum,
-       CAST(CASE codec WHEN 'y4m' THEN 23020.812
-            ELSE 30153.027 END AS DOUBLE) AS luma_sum
-FROM v GROUP BY codec
-"""
-
-
 def _fixture_root(prefix: str, sf_dir: str, builder, extra_mods=(),
                   extra_key: str = "") -> str:
     """Cache dir keyed on (sf_dir, builder source, helper-module
@@ -1147,13 +923,13 @@ def _iceberg_scan_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _ICEBERG_ORACLE_SQL = (
     "SELECT 'v1' AS snap, lang, count(*) AS n_rows, "
-    "sum(n_chars) AS chars, "
+    "CAST(sum(n_chars) AS BIGINT) AS chars, "
     "CAST(sum(CAST(('0x'||substr(md5(concat_ws('|', doc_id, lang, "
     "source, n_chars)),1,12)) AS BIGINT)) AS BIGINT) AS sdig "
     "FROM documents WHERE lang < 'm' GROUP BY lang "
     "UNION ALL "
     "SELECT 'v2' AS snap, lang, count(*) AS n_rows, "
-    "sum(n_chars) AS chars, "
+    "CAST(sum(n_chars) AS BIGINT) AS chars, "
     "CAST(sum(CAST(('0x'||substr(md5(concat_ws('|', doc_id, lang, "
     "source, n_chars)),1,12)) AS BIGINT)) AS BIGINT) AS sdig "
     "FROM documents WHERE n_chars >= 1 AND doc_id % 13 <> 0 "
@@ -1228,7 +1004,8 @@ def _iceberg_maintenance_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _ICEBERG_MAINT_ORACLE_SQL = (
-    "SELECT lang, count(*) AS n_rows, sum(n_chars) AS chars, "
+    "SELECT lang, count(*) AS n_rows, "
+    "CAST(sum(n_chars) AS BIGINT) AS chars, "
     "CAST(sum(CAST(('0x'||substr(md5(concat_ws('|', doc_id, lang, "
     "source, n_chars)),1,12)) AS BIGINT)) AS BIGINT) AS sdig, "
     "CAST(1 AS INT) AS snaps "
@@ -1383,66 +1160,10 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
     >= {verify_jaccard}"""
 
 
-# PQ oracles: DuckDB recomputes the normalized vectors, the first-rows
-# codebooks, the argmin code assignment (first-minimum tie-break =
-# list ORDER BY dist, j), and the explicit left-to-right ADC score
-# association — fully independent of the Spark expressions, identical
-# doubles because every fold is left-to-right in both engines.
-_PQ_CODE_CTES = """
-WITH raw AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-nrm AS (SELECT vec_id, CASE WHEN sqrt(list_inner_product(v,v)) = 0
-             THEN 1.0 ELSE sqrt(list_inner_product(v,v)) END AS nr, v
-        FROM raw),
-nv AS (SELECT vec_id, list_transform(v, x -> x / nr) AS v FROM nrm),
-cent AS (SELECT s, vec_id AS j, v[s*16+1 : s*16+16] AS c
-         FROM nv, range(4) t(s) WHERE vec_id < 16),
-sub AS (SELECT vec_id, s, v[s*16+1 : s*16+16] AS u
-        FROM nv, range(4) t(s)),
-d AS (SELECT sub.vec_id, sub.s, cent.j,
-             list_inner_product(sub.u, cent.c) AS ip,
-             list_inner_product(cent.c, cent.c)
-               - 2 * list_inner_product(sub.u, cent.c) AS dist
-      FROM sub JOIN cent ON cent.s = sub.s),
-code AS (SELECT vec_id, s, j, ip FROM d
-         QUALIFY row_number() OVER (PARTITION BY vec_id, s
-                                    ORDER BY dist ASC, j ASC) = 1)
-"""
-
-_PQ_ENCODE_ORACLE_SQL = _PQ_CODE_CTES + """
-SELECT vec_id,
-       MAX(CASE WHEN s=0 THEN j END)::INT AS c0,
-       MAX(CASE WHEN s=1 THEN j END)::INT AS c1,
-       MAX(CASE WHEN s=2 THEN j END)::INT AS c2,
-       MAX(CASE WHEN s=3 THEN j END)::INT AS c3,
-       round(((MAX(CASE WHEN s=0 THEN ip END)
-             + MAX(CASE WHEN s=1 THEN ip END))
-             + MAX(CASE WHEN s=2 THEN ip END))
-             + MAX(CASE WHEN s=3 THEN ip END), 5) AS recon_ip
-FROM code GROUP BY vec_id
-"""
-
-_PQ_ADC_TOPK_ORACLE_SQL = _PQ_CODE_CTES + """,
-q AS (SELECT s, u FROM sub WHERE vec_id = 0),
-lut AS (SELECT cent.s, cent.j, list_inner_product(q.u, cent.c) AS ip
-        FROM cent JOIN q ON q.s = cent.s),
-scored AS (SELECT code.vec_id,
-       ((MAX(CASE WHEN code.s=0 THEN lut.ip END)
-       + MAX(CASE WHEN code.s=1 THEN lut.ip END))
-       + MAX(CASE WHEN code.s=2 THEN lut.ip END))
-       + MAX(CASE WHEN code.s=3 THEN lut.ip END) AS score
-  FROM code JOIN lut ON lut.s = code.s AND lut.j = code.j
-  GROUP BY code.vec_id)
-SELECT vec_id, round(score, 5) AS score FROM scored
-ORDER BY score DESC, vec_id ASC LIMIT 10
-"""
-
-
 def oracle_sql() -> dict[str, str]:
     o: dict[str, str] = {}
     for table in ["documents", "lineitem", "events"]:
         o[f"roundtrip_{table}"] = _select_sql(table)
-    o["pq_encode_embeddings"] = _PQ_ENCODE_ORACLE_SQL
-    o["pq_adc_topk_embeddings"] = _PQ_ADC_TOPK_ORACLE_SQL
     # WARC pair: the oracle reconstructs every page from the documents
     # view with the same SQL-expressible constructors the fixture used;
     # warc_extract's oracle selects the SOURCE text (it does not re-run
@@ -1594,13 +1315,6 @@ WHERE len(list_intersect(a.shingles, b.shingles)) * 1.0 /
         "FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id "
         "WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), "
         "CAST(b.embedding AS DOUBLE[])) >= 0.3")
-    o["sim_topk_embeddings"] = (
-        "WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings "
-        "WHERE vec_id = 0) "
-        "SELECT vec_id, round(list_cosine_similarity(CAST(embedding AS DOUBLE[]), "
-        "q.qv), 5) AS cos FROM embeddings, q "
-        "ORDER BY list_cosine_similarity(CAST(embedding AS DOUBLE[]), q.qv) DESC, "
-        "vec_id ASC LIMIT 10")
     o["text_profile_documents"] = _text_profile_oracle_sql()
     o["salted_lang_stats"] = (
         "SELECT lang, count(doc_id) AS docs, CAST(sum(n_chars) AS BIGINT) AS chars, "
@@ -1609,73 +1323,6 @@ WHERE len(list_intersect(a.shingles, b.shingles)) * 1.0 /
     o["stream_windowed_events"] = (
         "SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS window_start, "
         "event_type, count(*) AS events FROM events GROUP BY 1, 2")
-    # LSH hyperplanes are md5-derived Rademacher signs (similarity.
-    # hyperplanes), so DuckDB reproduces every signature bit: sig_j
-    # flips on list_inner_product(emb, plane_j) > 0, planes built from
-    # md5('lsh|42|j|i') first-hex-digit parity. Candidates = hamming<=1
-    # multiprobe, then exact cosine top-k — the same plan as the query.
-    o["sim_lsh_topk_embeddings"] = """
-WITH planes AS (
-  SELECT j, list(CASE WHEN substr(md5('lsh|42|' || j || '|' || i), 1, 1)
-                      IN ('1','3','5','7','9','b','d','f')
-                 THEN 1.0 ELSE -1.0 END ORDER BY i) AS p
-  FROM (SELECT unnest(range(8)) AS j), (SELECT unnest(range(64)) AS i)
-  GROUP BY j),
-sigs AS (
-  SELECT e.vec_id,
-         CAST(sum(CASE WHEN list_inner_product(
-             CAST(e.embedding AS DOUBLE[]), pl.p) > 0
-             THEN (1 << pl.j) ELSE 0 END) AS BIGINT) AS sig
-  FROM embeddings e, planes pl GROUP BY e.vec_id),
-q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv,
-             (SELECT sig FROM sigs WHERE vec_id = 0) AS qsig
-      FROM embeddings WHERE vec_id = 0)
-SELECT e.vec_id,
-       round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 5)
-         AS cos
-FROM embeddings e JOIN sigs s ON e.vec_id = s.vec_id, q
-WHERE bit_count(xor(s.sig, q.qsig)) <= 1
-ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv) DESC,
-         e.vec_id ASC LIMIT 10"""
-    # IVF with the 'first_rows' quantizer (similarity.ivf_topk
-    # centroid_mode): centroids = first 16 rows by id, L2-normalized;
-    # every float op mirrors the Spark plan left-to-right, so list
-    # assignment, probe choice and the final top-k are all exact.
-    o["sim_ivf_topk_embeddings"] = """
-WITH cents AS (
-  SELECT vec_id AS c,
-         list_transform(CAST(embedding AS DOUBLE[]),
-             x -> x / sqrt(list_inner_product(CAST(embedding AS DOUBLE[]),
-                           CAST(embedding AS DOUBLE[])))) AS cv
-  FROM embeddings WHERE vec_id < 16),
-q AS (
-  SELECT CAST(embedding AS DOUBLE[]) AS qv,
-         list_transform(CAST(embedding AS DOUBLE[]),
-             x -> x / sqrt(list_inner_product(CAST(embedding AS DOUBLE[]),
-                           CAST(embedding AS DOUBLE[])))) AS qn
-  FROM embeddings WHERE vec_id = 0),
-probes AS (
-  SELECT c FROM cents, q
-  ORDER BY list_inner_product(cv, q.qn) DESC, c ASC LIMIT 4),
-assigned AS (
-  SELECT e.vec_id, e.embedding,
-         (SELECT c FROM cents
-          ORDER BY list_inner_product(CAST(e.embedding AS DOUBLE[]), cv)
-            DESC, c ASC LIMIT 1) AS lst
-  FROM embeddings e)
-SELECT a.vec_id,
-       round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), q.qv), 5)
-         AS cos
-FROM assigned a, q
-WHERE a.lst IN (SELECT c FROM probes)
-ORDER BY list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), q.qv) DESC,
-         a.vec_id ASC LIMIT 10"""
-    # persisted-index probes return exactly the on-the-fly results
-    # (same planes / quantizer / probe sets): identical oracles
-    o["ann_lsh_index_embeddings"] = o["sim_lsh_topk_embeddings"]
-    o["ann_ivf_index_embeddings"] = o["sim_ivf_topk_embeddings"]
-    o["media_decode"] = _MEDIA_DECODE_ORACLE_SQL
-    o["media_frame_sample"] = _MEDIA_FRAMES_ORACLE_SQL
     o["iceberg_transform_events"] = _ICE_TRANSFORM_ORACLE_SQL
     # iceberg: snapshot 1 holds exactly the lang < 'm' partitions (the
     # fixture's static split), so time travel is plain-SQL expressible

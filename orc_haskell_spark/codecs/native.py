@@ -27,8 +27,8 @@ import tempfile
 
 _SRC_NAMES = ["fsst_kernel.c", "bitpack_kernel.c", "rle2_kernel.c",
               "rle2_encode_kernel.c", "rle1_kernel.c", "byte_rle_kernel.c",
-              "png_kernel.c", "frontcode_kernel.c", "alp_kernel.c",
-              "extract_kernel.c", "html_entities_gen.c"]
+              "frontcode_kernel.c", "alp_kernel.c", "extract_kernel.c",
+              "html_entities_gen.c"]
 
 
 def _read_sources() -> list[bytes]:
@@ -158,9 +158,6 @@ def load() -> ctypes.CDLL | None:
                                         ctypes.c_long]
         lib.byte_rle_encode.restype = ctypes.c_long
         lib.byte_rle_encode.argtypes = [u8p, ctypes.c_long, u8p]
-        lib.png_unfilter.restype = ctypes.c_long
-        lib.png_unfilter.argtypes = [u8p, ctypes.c_long, ctypes.c_long,
-                                     ctypes.c_long, u8p]
         i64p = ctypes.POINTER(ctypes.c_int64)
         lib.front_code_encode.restype = ctypes.c_long
         lib.front_code_encode.argtypes = [

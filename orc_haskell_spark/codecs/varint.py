@@ -86,13 +86,3 @@ def decode_unsigned(
     )
     vals = np.add.reduceat(contrib, starts)
     return vals, total
-
-
-def decode_all_unsigned(buf: np.ndarray, offset: int = 0) -> np.ndarray:
-    """Decode every varint remaining in the buffer (DECIMAL mantissa stream)."""
-    b = buf[offset:]
-    count = int(np.count_nonzero(b < 0x80))
-    vals, consumed = decode_unsigned(buf, offset, count)
-    if consumed != b.size:
-        raise ValueError("trailing bytes after last varint terminator")
-    return vals

@@ -21,6 +21,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
 
 TOKEN_SPLIT = "\\s+"
@@ -332,6 +333,23 @@ def _lsh_band_plan(threshold: float, max_planes: int = 128,
     return best
 
 
+def hyperplanes(dim: int, bits: int = 8, seed: int = 42) -> np.ndarray:
+    """Deterministic Rademacher (±1) hyperplanes derived from md5.
+
+    Sign-projection LSH only needs symmetric random components, and
+    md5-derived ±1 entries make every signature reproducible in an
+    independent SQL engine (sign(j,i) = +1 iff the first hex digit of
+    md5('lsh|seed|j|i') is odd — same rationale as the simhash oracle)."""
+    import hashlib
+
+    out = np.empty((bits, dim), dtype=np.float64)
+    for j in range(bits):
+        for i in range(dim):
+            h = hashlib.md5(f"lsh|{seed}|{j}|{i}".encode()).hexdigest()
+            out[j, i] = 1.0 if int(h[0], 16) & 1 else -1.0
+    return out
+
+
 def embedding_neardup_pairs(df: DataFrame, id_col: str, vec_col: str,
                             threshold: float = 0.98, dim: int | None = None,
                             seed: int = 42) -> DataFrame:
@@ -351,8 +369,6 @@ def embedding_neardup_pairs(df: DataFrame, id_col: str, vec_col: str,
     For the all-pairs exact verifier (small tables / tests) use
     embedding_neardup_pairs_exact.
     """
-    from orc_haskell_spark.pipeline.similarity import hyperplanes
-
     if dim is None:
         dim = df.select(F.size(vec_col)).first()[0]
     band_bits, n_bands = _lsh_band_plan(threshold)

@@ -19,8 +19,8 @@ chrome) removed. Two extractors:
 Parsing is stdlib ``html.parser`` (no external deps), tolerant of
 unclosed/mis-nested tags. The Spark wrapper ``extract_df`` is a
 mapInArrow batch map — per-document Python is the honest cost of HTML
-parsing (same stance as the media decoders); the job shape is a narrow
-CPU-bound map with no shuffle, which scales linearly with executors.
+parsing; the job shape is a narrow CPU-bound map with no shuffle,
+which scales linearly with executors.
 
 No counterpart exists in the reference repo — this is pipeline surface
 the reference lacks (cited: reference has no HTML handling at all).

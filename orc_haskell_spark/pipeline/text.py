@@ -40,18 +40,14 @@ def token_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def _bpe_cols(text_col: str) -> list[Column]:
+    """BPE-ish tokenization estimate: words and punctuation count as
+    separate tokens (the \\w+|[^\\w\\s] regex families used to size LLM
+    training batches), plus a ~chars/4 subword estimate."""
     toks = F.regexp_extract_all(F.col(text_col), F.lit(r"\w+|[^\w\s]"), 0)
     return [
         F.size(toks).alias("n_word_tokens"),
         (F.length(text_col) / 4).cast("bigint").alias("est_subwords"),
     ]
-
-
-def token_counts_bpe(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """BPE-ish tokenization estimate: words and punctuation count as
-    separate tokens (the \\w+|[^\\w\\s] regex families used to size LLM
-    training batches), plus a ~chars/4 subword estimate."""
-    return df.select(F.col(id_col), *_bpe_cols(text_col))
 
 
 def _quality_cols(text_col: str) -> list[Column]:

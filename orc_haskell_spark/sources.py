@@ -1,4 +1,4 @@
-"""Input sources: Iceberg-style tables, parquet directories, streams.
+"""Input sources: Iceberg-style tables and parquet directories.
 
 The engine is source-agnostic — encode_table takes any DataFrame — but
 the north rule names Iceberg tables of Common-Crawl-style pages as the
@@ -36,13 +36,6 @@ def read_table(spark: SparkSession, source: str) -> DataFrame:
                     "cannot be found" not in str(e):
                 raise
     return spark.read.parquet(source)
-
-
-def read_stream(spark: SparkSession, source: str, schema) -> DataFrame:
-    """Streaming source: file-drop directory (or rate: for tests)."""
-    if source.startswith("rate"):
-        return spark.readStream.format("rate").load()
-    return spark.readStream.schema(schema).parquet(source)
 
 
 SPLIT_SCHEMA = pa.schema([("file", pa.string()), ("rg", pa.int32()),

@@ -1,10 +1,10 @@
 """Driver-gate query pinning.
 
-Two jobs: (1) keep the round-5 swapped-OUT queries (roundtrip_dims,
-direct-codec documents roundtrip) exactly oracle-checked even though
-the 50-query driver cap no longer has room for them; (2) pre-flight the
-swapped-IN WARC pair against the same oracles the driver will run, so
-a gate regression shows up here first."""
+Three jobs: (1) keep the round-5 swapped-OUT queries (roundtrip_dims,
+direct-codec documents roundtrip) exactly oracle-checked outside the
+driver gate; (2) pre-flight the swapped-IN WARC pair against the same
+oracles the driver will run, so a gate regression shows up here first;
+(3) pin every oracle's result types to the ones Spark returns."""
 
 from __future__ import annotations
 
@@ -107,8 +107,7 @@ def test_orcfile_cpp_read_documents_still_oracle_exact(spark, oracle):
 
 
 def test_roundtrip_orders_still_oracle_exact(spark, oracle):
-    """Swapped out of the gate (round 5 session 7, for
-    pq_encode_embeddings); pinned here — orders' decimal/date/string
+    """Not a gate query; pinned here — orders' decimal/date/string
     codec surface is the same set roundtrip_lineitem pins."""
     n = _compare(spark, oracle, "roundtrip_orders",
                  query_fn=e._mk_roundtrip("orders"),
@@ -117,21 +116,12 @@ def test_roundtrip_orders_still_oracle_exact(spark, oracle):
 
 
 def test_fused_roundtrip_documents_still_oracle_exact(spark, oracle):
-    """Swapped out of the gate (round 5 session 7, for
-    pq_adc_topk_embeddings); pinned here — the gate keeps the strict
+    """Not a gate query; pinned here — the gate keeps the strict
     superset paths (fused_sink_roundtrip + fused_transcode)."""
     n = _compare(spark, oracle, "fused_roundtrip_documents",
                  query_fn=e._fused_roundtrip_documents,
                  oracle_sql=e._select_sql("documents"))
     assert n > 0
-
-
-def test_pq_encode_gate_preflight(spark, oracle):
-    assert _compare(spark, oracle, "pq_encode_embeddings") == 500
-
-
-def test_pq_adc_topk_gate_preflight(spark, oracle):
-    assert _compare(spark, oracle, "pq_adc_topk_embeddings") == 10
 
 
 def test_decontam_gate_preflight(spark, oracle):
@@ -161,6 +151,22 @@ def test_warc_extract_pages_gate_preflight(spark, oracle):
 def test_gate_cap_and_oracle_coverage():
     """The driver runs at most 50 queries; every one has an oracle."""
     qs, osql = e.queries(), e.oracle_sql()
-    assert len(qs) == 50
+    assert len(qs) == 41
     assert not [k for k in qs if k not in osql]   # all oracle-checked
     assert not [k for k in osql if k not in qs]   # no orphan oracles
+
+
+def test_oracle_result_types_match_spark(oracle):
+    """No oracle may return a type Spark never produces. DuckDB widens
+    sum(int) and sum(bigint) to HUGEINT where Spark returns bigint, and
+    sum(decimal) to DECIMAL(38, s) where Spark keeps precision + 10, so
+    such a column matches on values but not on an exact-typed hash of
+    the result."""
+    bad = {}
+    for name, sql in e.oracle_sql().items():
+        rel = oracle.sql(sql)
+        cols = [c for c, t in zip(rel.columns, rel.types)
+                if str(t) == "HUGEINT" or str(t).startswith("DECIMAL(38")]
+        if cols:
+            bad[name] = cols
+    assert bad == {}

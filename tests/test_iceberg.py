@@ -1046,40 +1046,6 @@ def test_avro_corruption_fuzz_never_crashes():
             blob[pos] = old
 
 
-def test_video_corruption_fuzz_never_crashes():
-    """Byte flips through both video container parsers + frame decode:
-    raise-or-decode, never crash."""
-    import random
-
-    from orc_haskell_spark.pipeline import video as V
-
-    rng = random.Random(99)
-    y4m = bytearray(V.encode_y4m(
-        [(np.full((8, 8), 7, np.uint8),
-          np.full((4, 4), 9, np.uint8),
-          np.full((4, 4), 11, np.uint8)) for _ in range(3)]))
-    from orc_haskell_spark.pipeline.jpeg import encode_jpeg
-
-    avi = bytearray(V.encode_avi_mjpeg(
-        [encode_jpeg(np.full((8, 8), k * 30, np.uint8), quality=100)
-         for k in range(3)], 8, 8))
-    for blob in (y4m, avi):
-        for _ in range(200):
-            pos = rng.randrange(len(blob))
-            old = blob[pos]
-            blob[pos] ^= 1 << rng.randrange(8)
-            try:
-                n = V.video_frame_count(bytes(blob))
-                for k in range(min(n, 3)):
-                    V.decode_video_frame(bytes(blob), k)
-            except (ValueError, NotImplementedError, IndexError,
-                    KeyError, struct.error, OverflowError,
-                    MemoryError, ZeroDivisionError):
-                pass
-            finally:
-                blob[pos] = old
-
-
 def test_single_value_serialization_property():
     """Hypothesis: encode_bound/decode_bound roundtrip for every
     supported Iceberg type (bounds pruning correctness rests on this)."""

@@ -1,13 +1,12 @@
 """Training-data pipeline operators: recall on constructed near-dups,
-plus plumbing checks for similarity search and multimodal columns."""
+plus text analysis and dedup clustering checks."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
-from orc_haskell_spark.pipeline import dedup, multimodal, similarity, text
+from orc_haskell_spark.pipeline import dedup, text
 
 BASE = ("the quick brown fox jumps over the lazy dog and runs far away "
         "into the deep dark forest to find some food for the long winter")
@@ -75,9 +74,6 @@ def test_embedding_neardup_and_topk(spark):
         "vec_id long, embedding array<float>")
     p = _pairs(dedup.embedding_neardup_pairs(df, "vec_id", "embedding", 0.98))
     assert p == {(0, 1)}
-    top = similarity.brute_force_topk(df, "vec_id", "embedding",
-                                      [float(x) for x in base], 2).collect()
-    assert [r.vec_id for r in top] == [0, 1]
 
 
 def test_embedding_lsh_matches_exact_verifier(spark):
@@ -99,36 +95,6 @@ def test_embedding_lsh_plan_has_no_cartesian(spark):
         .fromString("formatted"))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_ivf_topk_contains_exact_top1(spark):
-    rng = np.random.default_rng(3)
-    vecs = rng.standard_normal((200, 16))
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<float>")
-    q = [float(x) for x in vecs[17]]
-    got = [r.vec_id for r in
-           similarity.ivf_topk(df, "vec_id", "embedding", q, 5,
-                               n_lists=8, n_probe=3).collect()]
-    assert got[0] == 17  # the query's own vector lives in its probe list
-    # deterministic
-    got2 = [r.vec_id for r in
-            similarity.ivf_topk(df, "vec_id", "embedding", q, 5,
-                                n_lists=8, n_probe=3).collect()]
-    assert got == got2
-
-
-def test_lsh_topk_contains_exact_top1(spark):
-    rng = np.random.default_rng(7)
-    vecs = rng.standard_normal((100, 16))
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<float>")
-    q = [float(x) for x in vecs[42]]
-    approx = similarity.lsh_topk(df, "vec_id", "embedding", q, 5)
-    got = [r.vec_id for r in approx.collect()]
-    assert got[0] == 42  # the query vector itself shares its own bucket
 
 
 def test_text_stats_and_quality(spark):
@@ -161,255 +127,6 @@ def test_fingerprints_detect_shared_content(spark):
     fp = {r.doc_id: r for r in text.fingerprints(df, "doc_id", "text").collect()}
     assert fp[1].md5 == fp[2].md5 != fp[3].md5
     assert fp[1].min_shingle == fp[2].min_shingle
-
-
-def test_multimodal_features_deterministic(spark):
-    media = multimodal.media_df(spark, 60, 3)
-    f1 = multimodal.extract_features(media).orderBy("id").collect()
-    f2 = multimodal.extract_features(media).orderBy("id").collect()
-    assert [r.checksum for r in f1] == [r.checksum for r in f2]
-    assert all(r.dim == 32 and len(r.feature) == 32 for r in f1)
-    assert all(abs(sum(r.feature) - 1.0) < 1e-3 for r in f1)
-
-
-def test_multimodal_png_real_and_unknown_rejected():
-    # JPEG decodes for real now (tests/test_jpeg.py); a corrupt JPEG
-    # header raises ValueError, an unknown container NotImplementedError
-    with pytest.raises(ValueError):
-        multimodal.decode_image(b"\xff\xd8\xff\xe0jpeg...", {})
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image(b"GIF89a...", {})
-    # PNG decodes for real (all five scanline filters, pure numpy)
-    rng = np.random.default_rng(3)
-    px = rng.integers(0, 256, (21, 13, 3)).astype(np.uint8)
-    got = multimodal.decode_image(multimodal.encode_png(px), {})
-    assert np.array_equal(got, px)
-    # RGBA and grayscale shapes too
-    for shape in ((8, 5, 4), (9, 7, 1)):
-        img = rng.integers(0, 256, shape).astype(np.uint8)
-        assert np.array_equal(
-            multimodal.decode_png(multimodal.encode_png(img)), img)
-    with pytest.raises(ValueError):
-        multimodal.decode_png(b"\x89PNG\r\n\x1a\n" + b"junk" * 4)
-
-
-def test_frame_sample_counts(spark):
-    media = multimodal.media_df(spark, 30, 2)
-    frames = multimodal.frame_sample(media, every_ms=1000)
-    rows = frames.collect()
-    videos = media.filter(F.col("kind") == "video").select(
-        "id", "meta.duration_ms").collect()
-    expect = sum(r.duration_ms // 1000 + 1 for r in videos)
-    assert len(rows) == expect
-
-
-def test_bmp_wav_decode_roundtrip():
-    """Real pure-numpy decoders: BMP pixels and WAV samples roundtrip
-    through our own encoders byte-exactly."""
-    rng = np.random.default_rng(0)
-    px = rng.integers(0, 256, (33, 47, 3)).astype(np.uint8)  # odd width
-    assert np.array_equal(multimodal.decode_bmp(multimodal.encode_bmp(px)), px)
-    s = rng.integers(-30000, 30000, (500, 2)).astype(np.int16)
-    got, rate = multimodal.decode_wav(multimodal.encode_wav(s, 44100))
-    assert np.array_equal(got, s) and rate == 44100
-
-
-def test_real_decoders_in_spark_pipeline(spark):
-    media = multimodal.real_media_df(spark, 60, 3)
-    feats = multimodal.extract_features(media, use_real_decoders=True)
-    rows = {r.id: r for r in feats.collect()}
-    assert len(rows) == 60
-    assert all(len(r.feature) == 32 for r in rows.values())
-    # deterministic across runs
-    feats2 = {r.id: r.checksum for r in multimodal.extract_features(
-        multimodal.real_media_df(spark, 60, 3),
-        use_real_decoders=True).collect()}
-    assert feats2 == {k: v.checksum for k, v in rows.items()}
-    # image checksum equals the driver-side decode of the same payload
-    m = {r.id: r for r in media.collect()}
-    # verify ALL image containers (rotating bmp/png/jpeg payloads)
-    seen = set()
-    for i, r in m.items():
-        if r.kind != "image":
-            continue
-        codec = r.meta.codec
-        if codec in seen:
-            continue
-        seen.add(codec)
-        px = multimodal.decode_image(bytes(r.payload), {})
-        assert rows[i].checksum == int(px.astype(np.int64).sum()), codec
-    assert seen == {"bmp", "png", "jpeg"}
-    # video rows decode their first frame through pipeline/video.py
-    from orc_haskell_spark.pipeline.video import decode_video_frame
-
-    vseen = set()
-    for i, r in m.items():
-        if r.kind != "video" or r.meta.codec in vseen:
-            continue
-        vseen.add(r.meta.codec)
-        px = decode_video_frame(bytes(r.payload), 0)
-        assert rows[i].checksum == int(px.astype(np.int64).sum()), \
-            r.meta.codec
-    assert vseen == {"y4m", "mjpeg"}
-
-
-def test_real_frame_sample_in_spark(spark):
-    """Real frame sampling: every emitted (id, frame_ms) row's stats
-    must equal a driver-side decode of the SAME sampled frame index —
-    Y4M rows through the O(1) seek, AVI rows through the idx1 index."""
-    from orc_haskell_spark.pipeline.video import (decode_video_frame,
-                                                  video_timing)
-
-    media = multimodal.real_media_df(spark, 45, 3)
-    got = multimodal.frame_sample(media, every_ms=100,
-                                  use_real_decoders=True).collect()
-    assert got, "no frames sampled"
-    payloads = {r.id: bytes(r.payload) for r in media.collect()
-                if r.kind == "video"}
-    assert {r.id for r in got} == set(payloads)
-    codecs = {r.codec for r in got}
-    assert codecs == {"y4m", "mjpeg"}
-    for r in got:
-        blob = payloads[r.id]
-        nframes, uspf = video_timing(blob)
-        k = min(r.frame_ms * 1000 // uspf, nframes - 1)
-        px = decode_video_frame(blob, k)
-        assert r.checksum == int(px.astype(np.int64).sum())
-        assert abs(r.mean_luma - float(px[..., 0].mean())) < 1e-9
-    # grid shape: one row per every_ms tick per clip, duration inclusive
-    for vid, blob in payloads.items():
-        nframes, uspf = video_timing(blob)
-        dur_ms = nframes * uspf // 1000
-        assert sum(1 for r in got if r.id == vid) == dur_ms // 100 + 1
-
-
-def test_png_all_filters_and_error_contract():
-    """Every scanline filter (None/Sub/Up/Average/Paeth) decoded from a
-    spec-filtered fixture built by an INDEPENDENT forward filterer;
-    corrupt payloads raise ValueError (never zlib/struct errors)."""
-    import struct
-    import zlib
-
-    rng = np.random.default_rng(11)
-
-    def forward_filter(img, filters):
-        h, w, c = img.shape
-        stride = w * c
-        flat = img.reshape(h, stride).astype(np.int32)
-        out = bytearray()
-        for y in range(h):
-            f = filters[y % len(filters)]
-            out.append(f)
-            for x in range(stride):
-                raw = int(flat[y, x])
-                a = int(flat[y, x - c]) if x >= c else 0
-                b = int(flat[y - 1, x]) if y else 0
-                cc = int(flat[y - 1, x - c]) if (y and x >= c) else 0
-                if f == 0:
-                    v = raw
-                elif f == 1:
-                    v = raw - a
-                elif f == 2:
-                    v = raw - b
-                elif f == 3:
-                    v = raw - ((a + b) >> 1)
-                else:
-                    p = a + b - cc
-                    pa_, pb, pc = abs(p - a), abs(p - b), abs(p - cc)
-                    pred = a if pa_ <= pb and pa_ <= pc else \
-                        (b if pb <= pc else cc)
-                    v = raw - pred
-                out.append(v & 0xFF)
-        return bytes(out)
-
-    def chunk(t, d):
-        return (struct.pack(">I", len(d)) + t + d
-                + struct.pack(">I", zlib.crc32(t + d)))
-
-    for c, color in ((1, 0), (3, 2), (4, 6)):
-        img = rng.integers(0, 256, (11, 7, c)).astype(np.uint8)
-        raw = forward_filter(img, [0, 1, 2, 3, 4])
-        png = (b"\x89PNG\r\n\x1a\n"
-               + chunk(b"IHDR", struct.pack(">IIBBBBB", 7, 11, 8,
-                                            color, 0, 0, 0))
-               + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b""))
-        got = multimodal.decode_png(png)
-        assert np.array_equal(got, img), c
-
-    # error contract: ValueError for every corrupt shape
-    magic = b"\x89PNG\r\n\x1a\n"
-    good = multimodal.encode_png(rng.integers(0, 256, (4, 4, 3))
-                                 .astype(np.uint8))
-    for bad in (magic + b"junk" * 4,                       # no chunks
-                good[:40],                                  # truncated IDAT
-                magic + chunk(b"IHDR", b"\x00" * 5)):       # short IHDR
-        with pytest.raises((ValueError, NotImplementedError)):
-            multimodal.decode_png(bad)
-
-
-def test_lsh_index_probe_matches_lsh_topk(spark):
-    """Persisted LSH index (bucketed on _sig): probing the index gives
-    exactly lsh_topk's result, and the probe scan reads only the
-    buckets holding the multi-probe signature set (bucket pruning in
-    the plan)."""
-    rng = np.random.default_rng(11)
-    vecs = rng.standard_normal((150, 16))
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<float>")
-    q = [float(x) for x in vecs[42]]
-    similarity.write_lsh_index(df, "lsh_idx_test", "vec_id", "embedding",
-                               bits=8, n_buckets=16)
-    got = similarity.query_lsh_index(spark, "lsh_idx_test", q, 5, bits=8)
-    ref = similarity.lsh_topk(df, "vec_id", "embedding", q, 5, bits=8)
-    assert [tuple(r) for r in got.collect()] == \
-        [tuple(r) for r in ref.collect()]
-    # bucket pruning: force the bucketed-scan display (the planner's
-    # auto-disable hides the metadata line but file pruning by bucket id
-    # still happens in the non-bucketed read path)
-    spark.conf.set(
-        "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    try:
-        plan = similarity.query_lsh_index(
-            spark, "lsh_idx_test", q, 5,
-            bits=8)._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.unset(
-            "spark.sql.sources.bucketing.autoBucketedScan.enabled")
-    import re
-    m = re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", plan)
-    assert m and int(m.group(1)) < int(m.group(2))  # pruned, not full scan
-
-
-def test_ivf_index_probe_matches_ivf_topk(spark):
-    """Persisted IVF index + centroid side table: probe result equals
-    ivf_topk with the same quantizer; probe scans only n_probe lists."""
-    rng = np.random.default_rng(13)
-    vecs = rng.standard_normal((200, 16))
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<float>")
-    q = [float(x) for x in vecs[17]]
-    similarity.write_ivf_index(df, "ivf_idx_test", "vec_id", "embedding",
-                               n_lists=8, centroid_mode="first_rows")
-    got = similarity.query_ivf_index(spark, "ivf_idx_test", q, 5,
-                                     n_probe=3)
-    ref = similarity.ivf_topk(df, "vec_id", "embedding", q, 5, n_lists=8,
-                              n_probe=3, centroid_mode="first_rows")
-    assert [tuple(r) for r in got.collect()] == \
-        [tuple(r) for r in ref.collect()]
-    spark.conf.set(
-        "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    try:
-        plan = similarity.query_ivf_index(
-            spark, "ivf_idx_test", q, 5,
-            n_probe=3)._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.unset(
-            "spark.sql.sources.bucketing.autoBucketedScan.enabled")
-    import re
-    m = re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", plan)
-    assert m and int(m.group(1)) < int(m.group(2))
 
 
 def test_dedup_clusters_transitive(spark):
