@@ -7,7 +7,10 @@ re-chunked to exact stripe_rows stripes and encoded entirely JVM→Arrow→
 numpy, one output row per stripe. ``encode_stripes`` is that loop, the
 one every encode sink runs (``make_encode_fn`` and through it
 ``encode_table``/``encode_parquet``/``encode_orc``, and the
-``manifest`` sinks); ``stripe_row`` builds each stripe's record. No
+``manifest`` sinks); ``stripe_row`` builds each stripe's record. Every
+worker loop of the package starts with ``worker_setup``, the one
+executor-side setup hook (Arrow thread clamp, zip import finders
+dropped so PySpark's per-task cache invalidation re-reads no archive). No
 per-row Python anywhere; no collect() on the hot path (the iterator
 form of mapInArrow never holds more than one stripe per task,
 preserving the reference's constant-memory property proved by
@@ -35,6 +38,8 @@ Scale design (100 TB / 1000 executors):
 from __future__ import annotations
 
 import json
+import sys
+import zipimport
 from typing import Iterator
 
 import numpy as np
@@ -62,19 +67,40 @@ DEFAULT_STRIPE_ROWS = 65536
 DEFAULT_STRIPE_BYTES = 64 << 20  # byte budget per stripe (see module doc)
 
 
-def clamp_worker_threads() -> None:
-    """Pin Arrow's internal pools to 1 thread inside executor-side Python.
+def worker_setup() -> None:
+    """The one setup hook of executor-side Python, run at the start of
+    every worker loop.
 
-    Every Python worker otherwise creates an os.cpu_count()-sized Arrow
-    thread pool on first compute call; with 32 workers on a 32-core host
-    that's 1000+ threads and a 6x slowdown (measured). Spark provides the
-    parallelism; worker-side kernels must be single-threaded.
+    Threads: pin Arrow's internal pools to 1 thread. Every Python worker
+    otherwise creates an os.cpu_count()-sized Arrow thread pool on first
+    compute call; with 32 workers on a 32-core host that's 1000+ threads
+    and a 6x slowdown (measured). Spark provides the parallelism;
+    worker-side kernels must be single-threaded.
+
+    Import finders: drop every ``zipimport.zipimporter`` from
+    ``sys.path_importer_cache``. PySpark's ``setup_spark_files`` calls
+    ``importlib.invalidate_caches()`` at the start of every task, and on
+    CPython 3.11 a zipimporter's ``invalidate_caches`` re-reads its
+    archive's whole central directory. Workers that import PySpark from
+    Spark's ``pyspark.zip`` hold about 14 such finders (one per imported
+    subpackage), so each task re-read that directory ~14 times: about
+    0.2 s per task on a reused worker (measured, 4 cores), about 0.2 ms
+    after the drop. A later import that searches a dropped path entry
+    builds a new finder from zipimport's module-level directory cache,
+    without reading the archive, and the next call drops it again;
+    imported modules keep their own loaders. The one assumption: an
+    archive is not rewritten in place under the same path while the
+    worker lives (Spark ships each file once per application under a
+    fixed name), since a new finder would not see the rewrite.
     """
     try:
         pa.set_cpu_count(1)
         pa.set_io_thread_count(1)
     except Exception:
         pass
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            sys.path_importer_cache.pop(path, None)
 
 
 def _rechunk(batches: Iterator[pa.RecordBatch], stripe_rows: int,
@@ -116,7 +142,7 @@ def encode_stripes(batches: Iterator[pa.RecordBatch], stripe_rows: int,
     tables) shared by the stripes encoded with it; its scope is the
     caller's. ``config["sort_within"]`` (stripe-local clustering) is
     applied inside ``stripe.encode_stripe``."""
-    clamp_worker_threads()
+    worker_setup()
     for b in _rechunk(batches, stripe_rows, stripe_bytes):
         # looked up through the module on every stripe, so a wrapper
         # installed on stripe.encode_stripe sees each call
@@ -174,7 +200,7 @@ def decode_fn(batches: Iterator[pa.RecordBatch],
               ) -> Iterator[pa.RecordBatch]:
     """mapInArrow function: encoded stripe rows -> original RecordBatches
     (only ``columns``, in that order, when given)."""
-    clamp_worker_threads()
+    worker_setup()
     for b in batches:
         yield from _decode_rows(b, columns)
 
@@ -187,7 +213,7 @@ def decode_splits(splits, columns=None,
     of the fused ``decode_table`` and of ``decode_parquet_to_dir``."""
     from . import sources
 
-    clamp_worker_threads()
+    worker_setup()
     handles = sources.ParquetHandleCache()
     for f, rg in splits:
         for rb in handles.get(f).iter_batches(

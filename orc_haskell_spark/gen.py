@@ -191,9 +191,9 @@ def pages_df(spark, n_rows: int, num_partitions: int | None = None):
     import pyarrow as pa  # re-import for executor pickling
 
     def gen_fn(batches):
-        from orc_haskell_spark.engine import clamp_worker_threads
+        from orc_haskell_spark.engine import worker_setup
 
-        clamp_worker_threads()
+        worker_setup()
         for b in batches:
             ids = b.column("id").to_numpy()
             if len(ids) == 0:

@@ -443,6 +443,9 @@ def _transform_column(spark, transform: str, src: str,
                 import numpy as _np
                 import pandas as _pd
 
+                from orc_haskell_spark.engine import worker_setup
+
+                worker_setup()
                 vals = col
                 if src_type in ("timestamp", "timestamptz"):
                     vals = col.astype("int64") // 1000  # ns -> us
@@ -468,6 +471,9 @@ def _transform_column(spark, transform: str, src: str,
         def _bucket_s(col):
             import pandas as _pd
 
+            from orc_haskell_spark.engine import worker_setup
+
+            worker_setup()
             return _pd.Series(
                 [None if v is None
                  else bucket_value(src_type or "string", v, n)
@@ -632,12 +638,18 @@ def plan_scan(table_path: str, snapshot_id: int | None = None,
     if spark is not None and len(data_mans) >= DISTRIBUTED_MANIFESTS_MIN:
         sc = spark.sparkContext
         n = min(len(data_mans), sc.defaultParallelism * 2)
-        out = (sc.parallelize(data_mans, n)
-               .flatMap(lambda ms: _read_manifest(ms[0], field_types,
-                                                  id_of, pred,
-                                                  manifest_seq=ms[1],
-                                                  spec_fields=ms[2]))
-               .collect())
+
+        def read_manifests(part):
+            from orc_haskell_spark.engine import worker_setup
+
+            worker_setup()
+            for p, mseq, spf in part:
+                yield from _read_manifest(p, field_types, id_of, pred,
+                                          manifest_seq=mseq,
+                                          spec_fields=spf)
+
+        out = sc.parallelize(data_mans, n).mapPartitions(
+            read_manifests).collect()
     else:
         out = [f for p, mseq, spf in data_mans
                for f in _read_manifest(p, field_types, id_of, pred,

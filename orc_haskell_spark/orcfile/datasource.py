@@ -135,11 +135,11 @@ class OrcFileReader(DataSourceReader):
         return parts or [_StripePartition(self._file_list[0], -1)]
 
     def read(self, part: _StripePartition):
-        from orc_haskell_spark.engine import clamp_worker_threads
+        from orc_haskell_spark.engine import worker_setup
 
         from .reader import ORCFile
 
-        clamp_worker_threads()
+        worker_setup()
         if part.stripe < 0:
             return
         orc = ORCFile(part.file)
@@ -195,11 +195,11 @@ class OrcFileWriter(DataSourceArrowWriter):
         import os
         import uuid
 
-        from orc_haskell_spark.engine import clamp_worker_threads
+        from orc_haskell_spark.engine import worker_setup
 
         from .writer import write_orc
 
-        clamp_worker_threads()
+        worker_setup()
         os.makedirs(self.path, exist_ok=True)
         it = iter(iterator)
         first = next(it, None)

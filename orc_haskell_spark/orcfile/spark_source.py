@@ -90,10 +90,10 @@ def read_orc_distributed(spark: SparkSession, path: str,
     spark_schema, arrow_schema = _spark_schema_for(schema)
 
     def decode(batches):
-        from orc_haskell_spark.engine import clamp_worker_threads
+        from orc_haskell_spark.engine import worker_setup
         from orc_haskell_spark.orcfile.reader import ORCFile as OF
 
-        clamp_worker_threads()
+        worker_setup()
         opened: dict[str, OF] = {}
         for b in batches:
             for f, i in zip(b.column("file").to_pylist(),
@@ -123,10 +123,10 @@ def _part_writer(out_dir: str, compression: str, stripe_rows: int):
         import itertools
 
         from orc_haskell_spark import sources
-        from orc_haskell_spark.engine import clamp_worker_threads
+        from orc_haskell_spark.engine import worker_setup
         from orc_haskell_spark.orcfile.writer import write_orc
 
-        clamp_worker_threads()
+        worker_setup()
         # peek one batch to skip empty partitions, then hand the ITERATOR
         # to write_orc: the writer streams stripe-at-a-time, so task
         # memory is one stripe, not the whole partition (multi-GB
@@ -207,10 +207,10 @@ def parquet_to_orc(spark: SparkSession, in_path: str, out_dir: str,
         "num_partitions": num_partitions})
 
     def convert(batches):
-        from orc_haskell_spark.engine import clamp_worker_threads
+        from orc_haskell_spark.engine import worker_setup
         from orc_haskell_spark.orcfile.writer import write_orc
 
-        clamp_worker_threads()
+        worker_setup()
         work = sources.split_list(batches)
         if not work:
             return

@@ -563,9 +563,9 @@ def extract_df(df, html_col: str = "html", mode: str = "main",
     batch_fn = _BATCH_MODES[mode]
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from orc_haskell_spark.engine import clamp_worker_threads
+        from orc_haskell_spark.engine import worker_setup
 
-        clamp_worker_threads()
+        worker_setup()
         for b in batches:
             html = b.column(html_col).to_pylist()
             texts = batch_fn(html, engine)

@@ -12,6 +12,12 @@ through Catalyst's DataSourceV2; nothing in the engine changes.
 from __future__ import annotations
 
 import pyarrow as pa
+# imported with the module, not per call: a worker's first parquet open
+# must not import anything new (pyarrow.fs pulls in ssl) after
+# engine.worker_setup has dropped the zip finders, or the import would
+# rebuild them for the next task to re-read
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.errors import AnalysisException
@@ -47,8 +53,6 @@ def list_parquet_files(path: str) -> list[str]:
     or a pyarrow-fs URI like s3://...). Listing is metadata-only and
     cheap even for very large tables; the expensive part — reading each
     file's footer — is distributed by ``plan_splits``."""
-    import pyarrow.fs as pafs
-
     fs, base = _resolve_fs(path)
     info = fs.get_file_info(base)
     if info.type == pafs.FileType.File:
@@ -62,8 +66,6 @@ def list_parquet_files(path: str) -> list[str]:
 
 def _resolve_fs(path: str):
     """(pyarrow FileSystem, fs-local path) for a local path or URI."""
-    import pyarrow.fs as pafs
-
     if "://" in path:
         return pafs.FileSystem.from_uri(path)
     return pafs.LocalFileSystem(), path
@@ -71,8 +73,6 @@ def _resolve_fs(path: str):
 
 def open_parquet(path: str):
     """pyarrow ParquetFile for a local path or filesystem URI."""
-    import pyarrow.parquet as pq
-
     fs, local = _resolve_fs(path)
     return pq.ParquetFile(local, filesystem=fs)
 
@@ -128,6 +128,9 @@ def _splits_fn(lister, ranges, schema: pa.Schema):
     """mapInArrow fn: file-name rows -> the files' split rows."""
 
     def fn(batches):
+        from .engine import worker_setup
+
+        worker_setup()
         for b in batches:
             for f in b.column("file").to_pylist():
                 rows = lister(f, ranges)
@@ -403,8 +406,6 @@ def guard_export_plan(out_path: str, plan: dict) -> None:
     parse error, never a silent pass)."""
     import hashlib
     import json
-
-    import pyarrow.fs as pafs
 
     # the packing algorithm determines task split sets and therefore
     # part names: changing it must invalidate old markers too

@@ -593,10 +593,10 @@ def read_warc(spark, path: str, num_partitions: int | None = None,
     ddl = WARC_DDL + (", text string" if extract else "")
 
     def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from orc_haskell_spark.engine import clamp_worker_threads
+        from orc_haskell_spark.engine import worker_setup
         from orc_haskell_spark.pipeline import extract as xm
 
-        clamp_worker_threads()
+        worker_setup()
         rows: list[tuple] = []
         nbytes = 0
 
@@ -657,10 +657,10 @@ def write_warc(df, out_dir: str, gzip_members: bool = True):
     ext = ".warc.gz" if gzip_members else ".warc"
 
     def write_part(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from orc_haskell_spark.engine import clamp_worker_threads
+        from orc_haskell_spark.engine import worker_setup
         from orc_haskell_spark.sources import commit_part, task_output
 
-        clamp_worker_threads()
+        worker_setup()
         pid = TaskContext.get().partitionId()
         fs, staging, final = task_output(out_dir, None, f"{pid:05d}", ext)
         n = 0
@@ -750,11 +750,11 @@ def write_pages_parquet(spark, warc_path: str, out_dir: str,
     def write_part(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.parquet as pq
 
-        from orc_haskell_spark.engine import clamp_worker_threads
+        from orc_haskell_spark.engine import worker_setup
         from orc_haskell_spark.pipeline import extract as xm
         from orc_haskell_spark.sources import commit_part, task_output
 
-        clamp_worker_threads()
+        worker_setup()
         pid = TaskContext.get().partitionId()
         fs, staging, final = task_output(out_dir, None, f"{pid:05d}")
         writer = None

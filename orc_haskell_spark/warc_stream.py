@@ -169,11 +169,11 @@ class WarcStreamReader(DataSourceStreamReader):
                 for (f, s, e), _w in chunks]
 
     def read(self, partition):
-        from .engine import clamp_worker_threads
+        from .engine import worker_setup
         from .pipeline import extract as xm
         from .warc import _rows_batch, iter_warc_file
 
-        clamp_worker_threads()
+        worker_setup()
         rows: list[tuple] = []
         nbytes = 0
         end = None if partition.end < 0 else partition.end

@@ -19,6 +19,8 @@ import pytest
 
 from orc_haskell_spark import gen, stripe
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _ours_vs_orc(table: pa.Table) -> tuple[int, int]:
     batch = table.combine_chunks().to_batches()[0]
@@ -82,7 +84,7 @@ def test_constant_memory_encode():
             total += len(payload)
         peak_mb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
         print(f"{total} {peak_mb:.0f}")
-    """) % ("/root/repo",)
+    """) % (REPO,)
     out = subprocess.run([sys.executable, "-c", code], capture_output=True,
                          text=True, check=True)
     total, peak_mb = out.stdout.split()
@@ -184,7 +186,7 @@ print(f"rss_growth_mb={grew_mb:.0f} stripes={info['stripes']}")
     with tempfile.TemporaryDirectory() as d:
         r = subprocess.run(
             [sys.executable, "-c", code, f"{d}/big.orc"],
-            capture_output=True, text=True, cwd="/root/repo", timeout=300)
+            capture_output=True, text=True, cwd=REPO, timeout=300)
     assert r.returncode == 0, r.stderr[-2000:]
     assert "rss_growth_mb=" in r.stdout
 
@@ -227,11 +229,11 @@ def test_native_kernels_build_from_zip_artifact(tmp_path):
     import sys
 
     subprocess.run(["bash", "scripts/build_artifact.sh"], check=True,
-                   cwd="/root/repo", capture_output=True)
+                   cwd=REPO, capture_output=True)
     code = r"""
 import sys, os
 os.environ["ORC_HS_NATIVE_DIR"] = sys.argv[1]
-sys.path.insert(0, "/root/repo/dist/orc_haskell_spark.zip")
+sys.path.insert(0, sys.argv[2])
 import numpy as np
 from orc_haskell_spark.codecs import native, rle2
 assert "orc_haskell_spark.zip" in native.__file__
@@ -243,7 +245,8 @@ print("OK")
 """
     env = {k: v for k, v in os.environ.items()
            if k != "ORC_HS_NO_NATIVE"}  # this test IS the compile path
-    r = subprocess.run([sys.executable, "-c", code, str(tmp_path)],
+    r = subprocess.run([sys.executable, "-c", code, str(tmp_path),
+                        os.path.join(REPO, "dist", "orc_haskell_spark.zip")],
                        capture_output=True, text=True, cwd="/tmp",
                        timeout=240, env=env)
     assert r.returncode == 0 and "OK" in r.stdout, r.stderr[-1500:]

@@ -18,6 +18,44 @@ import time
 from orc_haskell_spark import engine, gen, manifest
 
 
+def _live_session_pids(sid: int) -> list[int]:
+    """Pids of the live (not zombie) processes of session ``sid``. The
+    PySpark daemon moves itself and its workers into their own process
+    group, so a session, not a group, holds a driver's whole tree."""
+    pids = []
+    for d in os.listdir("/proc"):
+        if not d.isdigit():
+            continue
+        try:
+            with open(f"/proc/{d}/stat") as f:
+                stat = f.read()
+        except OSError:
+            continue
+        # after "(comm)": state ppid pgrp session ...
+        state, _ppid, _pgrp, session = stat[stat.rindex(")") + 2:].split()[:4]
+        if int(session) == sid and state != "Z":
+            pids.append(int(d))
+    return pids
+
+
+def _sigkill_session(proc: subprocess.Popen, timeout: float = 60) -> None:
+    """SIGKILL every process of ``proc``'s session (it was started with
+    ``start_new_session=True``): the driver, its JVM and its Python
+    workers. Returns once none of them is alive, so nothing of the
+    killed run (a JVM aborting its job, a worker finishing a task) can
+    touch the output after this."""
+    deadline = time.time() + timeout
+    while pids := _live_session_pids(proc.pid):
+        assert time.time() < deadline, f"session survived SIGKILL: {pids}"
+        for pid in pids:
+            try:
+                os.kill(pid, signal.SIGKILL)
+            except ProcessLookupError:
+                pass
+        time.sleep(0.1)
+    proc.wait()
+
+
 def test_sigkill_mid_encode_then_resume(spark, tmp_path):
     src = str(tmp_path / "pages")
     out = str(tmp_path / "enc")
@@ -118,15 +156,16 @@ def test_sigkill_mid_fused_sink_then_resume(spark, tmp_path):
     """)
     proc = subprocess.Popen([sys.executable, "-c", code],
                             stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
-                            text=True)
+                            text=True, start_new_session=True)
     t0 = time.time()
     while time.time() - t0 < 120:
         line = proc.stdout.readline()
         if "READY" in line:
             break
     time.sleep(7)  # mid-encode
-    proc.send_signal(signal.SIGKILL)
-    proc.wait()
+    # the whole tree, as a machine loss would: a JVM left alive would
+    # abort its job and delete manifest/_temporary under the resume
+    _sigkill_session(proc)
 
     r = manifest.encode_parquet_to_dir(spark, src, out, stripe_rows=500,
                                        num_partitions=6,

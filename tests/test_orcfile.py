@@ -24,6 +24,8 @@ import pytest
 from orc_haskell_spark.orcfile import ORCFile, read_orc
 from orc_haskell_spark.orcfile.writer import write_orc
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 D = decimal.Decimal
 
 
@@ -620,7 +622,7 @@ def test_corrupted_files_never_crash(tmp_path):
     write_orc(t, p, compression="ZLIB", stripe_rows=1000)
     code = r"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[2])
 import numpy as np
 from orc_haskell_spark.orcfile.reader import ORCFile
 raw = bytearray(open(sys.argv[1], "rb").read())
@@ -641,7 +643,7 @@ for trial in range(300):
         bad += 1
 print(f"OK raised_or_read=300 exceptions={bad}")
 """
-    r = subprocess.run([sys.executable, "-c", code, p],
+    r = subprocess.run([sys.executable, "-c", code, p, REPO],
                        capture_output=True, text=True, timeout=300)
     assert r.returncode == 0, (r.returncode, r.stderr[-2000:])
     assert "OK" in r.stdout
