@@ -6,8 +6,8 @@ full distributed pipeline (mapInArrow encode → encoded-stripes DataFrame
 → mapInArrow decode) and must return exactly the rows DuckDB reads from
 the raw parquet — the reference's own correctness bar (bit-identical
 roundtrip, test/Test/Orc/Logical.hs:103-138) expressed as an oracle
-comparison. Additional entries pin each codec path (dict / fsst / rle1 /
-rle2) and the manifest metrics.
+comparison. Additional entries pin each string codec path (dict /
+fsst) and the manifest metrics.
 """
 
 from __future__ import annotations
@@ -559,9 +559,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["warc_extract_pages"] = _warc_extract_pages
     # pin each codec path explicitly (operator coverage, SURVEY.md §2.1)
     # (round 5, session 6) roundtrip_rle1_lineitem gave its 50-cap slot
-    # to decontam_documents (RLE1 stays pinned by the spec goldens, the
-    # C<->numpy roundtrip properties, and tests/test_entry_queries.py
-    # against this same oracle)
+    # to decontam_documents; stripes no longer write RLEv1, and reading
+    # it stays pinned by the spec goldens, the C<->numpy roundtrip
+    # properties and a hand-built stripe in tests/test_floats_bss.py
     q["decontam_documents"] = _decontam_documents
     q["roundtrip_fsst_documents"] = _mk_roundtrip(
         "documents", {"string_codec": "fsst"})

@@ -24,9 +24,9 @@ Deviation from the paper: the pair is chosen once per stripe from a
 strided sample (the paper re-picks per 1024-value vector); column-
 uniform scales — the common case this codec targets — lose nothing,
 and mixed-scale columns simply measure poorly in the selector and fall
-back to raw/BSS. The reference stores floats raw-LE only
+back to raw. The reference stores floats raw-LE only
 (src/Orc/Serial/Binary/Striped.hs float path); ALP is an engine
-addition like FSST and byte-stream-split.
+addition like FSST.
 """
 
 from __future__ import annotations

@@ -5,11 +5,12 @@ our raw mode is that exact layout).
 BSS transposes the column's byte matrix: all 0th bytes of every value,
 then all 1st bytes, ... (the Parquet BYTE_STREAM_SPLIT layout). It is
 size-neutral alone but groups the nearly-constant sign/exponent bytes
-into long runs, so the OUTER block codec (zstd/zlib) compresses it far
-better on real-valued data like embeddings. The stripe encoder picks
-raw vs bss by measuring both under the configured outer compression on
-a sample (codecs/selector.py::choose_float_codec); decode reverses the
-transpose exactly, so roundtrips stay bit-identical.
+into long runs for the outer block codec.
+
+Read only: stripes no longer write BSS (it won one column-stripe of a
+census while its trial cost a third of every float sample; ROADMAP
+D12). ``bss_decode`` reads stored v3 stripes; ``bss_encode``, its exact
+inverse, builds such stripes in tests.
 """
 
 from __future__ import annotations

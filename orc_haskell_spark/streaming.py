@@ -38,13 +38,10 @@ def stream_encode(stream_df: DataFrame, path: str,
     ledger = os.path.join(path, "ledger")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        done = set()
-        try:
-            done = {r.batch_id for r in
-                    spark.read.parquet(ledger).select("batch_id").collect()}
-        except Exception:
-            pass
-        if batch_id in done:  # replayed micro-batch: already encoded
+        done = _read_ledger(spark, ledger)
+        if done is not None and batch_id in {
+                r.batch_id for r in done.select("batch_id").collect()}:
+            # replayed micro-batch: already encoded
             return
         enc = engine.encode_table(batch_df, stripe_rows=stripe_rows,
                                   config=config)
@@ -86,6 +83,17 @@ def windowed_event_counts(stream_df: DataFrame, ts_col: str = "ts",
                     "events", "approx_users"))
 
 
+def _read_ledger(spark, path: str) -> DataFrame | None:
+    """The batch ledger, or None when it does not exist yet: only a
+    MISSING ledger means "nothing committed", an unreadable one raises."""
+    try:
+        return spark.read.parquet(path)
+    except Exception:
+        if os.path.exists(path):
+            raise
+        return None
+
+
 def read_stream_encoded(spark, path: str):
     """Committed stripes only: the ledger is the source of truth, so
     stripes whose batch_id never reached the ledger (crash between the
@@ -96,15 +104,8 @@ def read_stream_encoded(spark, path: str):
     reader racing the first micro-batch) means NOTHING is committed:
     return an empty DataFrame with the stripes schema, not an error."""
     stripes = spark.read.parquet(os.path.join(path, "stripes"))
-    ledger_path = os.path.join(path, "ledger")
-    try:
-        ledger = spark.read.parquet(ledger_path)
-    except Exception:
-        # only the MISSING-ledger case means "nothing committed" —
-        # a ledger that exists but fails to read (permissions, corrupt
-        # footer) must surface, not silently read as empty
-        if os.path.exists(ledger_path):
-            raise
+    ledger = _read_ledger(spark, os.path.join(path, "ledger"))
+    if ledger is None:
         return stripes.filter(F.lit(False))
     return stripes.join(
         F.broadcast(ledger.select("batch_id").distinct()),

@@ -10,8 +10,9 @@ out by type exactly as the reference reader/writer does
 | type               | streams                                              |
 |--------------------|------------------------------------------------------|
 | boolean            | DATA = bit-packed + byte-RLE                          |
-| int8..64 / date    | DATA = int RLE (v1 or v2, selector-chosen)            |
-| float / double     | DATA = raw IEEE754 LE                                 |
+| int8..64 / date    | DATA = RLEv2 (RLEv1 still read)                       |
+| float / double     | DATA = raw IEEE754 LE, or ALP / ALP-RD streams        |
+|                    | (selector-measured; stored BSS planes still read)     |
 | string/binary      | direct: DATA concat + LENGTH RLE; dict: DATA indices  |
 |                    | + LENGTH dict lens + DICTIONARY_DATA; fsst: DATA      |
 |                    | compressed + LENGTH RLE + FSST_TABLE                  |
@@ -27,6 +28,10 @@ take on decode (S4 in SURVEY.md §2.2).
 
 Each stream may carry an outer block-compression layer (block.py) chosen
 by actual benefit — the store-if-smaller escape generalized per stream.
+
+Codec trials run in codecs/selector.py; this module applies their
+verdicts, caches them per (column, task), and re-checks a sampled
+front-coding verdict once against a full stripe.
 """
 
 from __future__ import annotations
@@ -52,19 +57,19 @@ from .codecs.strings import (
 # bump on any incompatible change to the stripe payload layout (v2 =
 # FSST piece framing); decode_stripe rejects other versions loudly
 STRIPE_FORMAT_VERSION = 2
-BSS_FORMAT_VERSION = 3      # v2 + byte-stream-split float payloads
+BSS_FORMAT_VERSION = 3      # v2 + byte-stream-split floats (read only)
 ALP_FORMAT_VERSION = 4      # v3 + ALP float payloads (codecs/alp.py)
 
 DEFAULT_CONFIG: dict[str, Any] = {
-    "int_codec": "rle2",          # "rle1" for reference-writer parity
     "string_codec": "auto",       # "direct" | "dict" | "fsst" | "auto"
-    "float_codec": None,          # None=measured | "raw" | "bss" | "alp"
+    "float_codec": None,    # None=measured | "raw" | "alp" | "alp_rd"
     "compression": "zstd",        # outer block layer; "none" to disable
     "compression_level": 3,
     "bloom_columns": [],          # per-stripe blooms for point lookups
     "sort_within": [],            # stripe-local clustering sort (engine.py)
-    "string_fc": True,            # front-code trial on DIRECT value streams
 }
+STRING_CODECS = ("auto", "direct", "dict", "fsst")
+FLOAT_CODECS = (None, "raw", "alp", "alp_rd")
 
 COMPRESSION_MIN_BYTES = 256  # don't frame tiny streams
 
@@ -83,32 +88,29 @@ def _buf(b: bytes) -> np.ndarray:
 # ------------------------------------------------------------------ ints
 
 
-def _encode_int_stream(vals: np.ndarray, cfg: dict) -> tuple[str, bytes]:
-    codec = cfg.get("int_codec", "rle2")
-    if codec == "rle1":
-        return "rle1", rle1.encode(vals, True)
+# written RLEv2; RLEv1 (the reference writer's layout) is still read
+_INT_DECODERS = {"rle1": rle1.decode, "rle2": rle2.decode}
+
+
+def _encode_int_stream(vals: np.ndarray) -> tuple[str, bytes]:
     return "rle2", rle2.encode(vals, True)
 
 
-def _decode_int_stream(buf: np.ndarray, codec: str, n: int) -> np.ndarray:
-    """The first ``n`` values (the footer's count): the C kernel then
-    fills a buffer of that size instead of guessing and re-decoding."""
-    if codec == "rle1":
-        return rle1.decode(buf, True, n)
-    return rle2.decode(buf, True, n)
-
-
-def _encode_uint_stream(vals: np.ndarray, cfg: dict) -> tuple[str, bytes]:
-    codec = cfg.get("int_codec", "rle2")
-    if codec == "rle1":
-        return "rle1", rle1.encode(vals, False)
+def _encode_uint_stream(vals: np.ndarray) -> tuple[str, bytes]:
     return "rle2", rle2.encode(vals, False)
 
 
+def _decode_int_stream(buf: np.ndarray, codec: str, n: int,
+                       signed: bool = True) -> np.ndarray:
+    """The first ``n`` values (the footer's count): the C kernel then
+    fills a buffer of that size instead of guessing and re-decoding."""
+    if codec not in _INT_DECODERS:
+        raise ValueError(f"unknown integer stream codec {codec!r}")
+    return _INT_DECODERS[codec](buf, signed, n)
+
+
 def _decode_uint_stream(buf: np.ndarray, codec: str, n: int) -> np.ndarray:
-    if codec == "rle1":
-        return rle1.decode(buf, False, n)
-    return rle2.decode(buf, False, n)
+    return _decode_int_stream(buf, codec, n, False)
 
 
 # ------------------------------------------------------------------ column encode
@@ -148,7 +150,7 @@ def _encode_values(arr: pa.Array, cfg: dict, cache: dict | None = None,
         vals = np.asarray(
             arr.cast(pa.int64()) if arr.type != pa.int64() else arr
         ).astype(np.int64, copy=False)
-        codec, data = _encode_int_stream(vals, cfg)
+        codec, data = _encode_int_stream(vals)
         return {"kind": "int", "codec": codec}, {"DATA": data}
 
     if pa.types.is_floating(typ):
@@ -158,8 +160,8 @@ def _encode_values(arr: pa.Array, cfg: dict, cache: dict | None = None,
             raise NotImplementedError(f"float type {typ} not supported (f4/f8 only)")
         vals = np.asarray(arr).astype(
             np.asarray(arr).dtype.newbyteorder("<"), copy=False)
-        # raw LE (the reference layout) vs byte-stream-split vs ALP,
-        # measured under the configured outer compression (selector.py).
+        # raw LE (the reference layout) vs ALP vs ALP-RD, measured
+        # under the configured outer compression (selector.py).
         # The choice is cached per (column, task) like the string codec,
         # and when the trial's sample covered the whole column its
         # alp/alp_rd transform is reused — the trial IS the encode then
@@ -168,6 +170,8 @@ def _encode_values(arr: pa.Array, cfg: dict, cache: dict | None = None,
         arts: dict = {}
         fkey = ("floatchoice", name)
         fcodec = cfg.get("float_codec")
+        if fcodec not in FLOAT_CODECS:
+            raise ValueError(f"unknown float_codec {fcodec!r}")
         if fcodec is None and cache is not None:
             fcodec = cache.get(fkey)
         if fcodec is None:
@@ -177,7 +181,7 @@ def _encode_values(arr: pa.Array, cfg: dict, cache: dict | None = None,
             # a stripe below the trial floor gets "raw" unmeasured:
             # caching that would pin raw for the rest of the task
             if (cache is not None
-                    and vals.nbytes >= selector.FLOAT_BSS_MIN_BYTES):
+                    and vals.nbytes >= selector.FLOAT_TRIAL_MIN_BYTES):
                 cache[fkey] = fcodec
         if fcodec == "alp_rd":
             enc = arts.get("alp_rd") or alp.rd_encode(vals)
@@ -185,7 +189,7 @@ def _encode_values(arr: pa.Array, cfg: dict, cache: dict | None = None,
                 fcodec = "raw"
             else:
                 r, dl, codes, right, pos, excl = enc
-                pcodec, pstream = _encode_uint_stream(pos, cfg)
+                pcodec, pstream = _encode_uint_stream(pos)
                 return ({"kind": "float", "codec": "alp_rd", "r": r,
                          "dict": [int(x) for x in dl], "pcodec": pcodec,
                          "n_exc": len(pos)},
@@ -200,23 +204,21 @@ def _encode_values(arr: pa.Array, cfg: dict, cache: dict | None = None,
                 fcodec = "raw"
             else:
                 e, f, ints, pos, exc = enc
-                icodec, data = _encode_int_stream(ints, cfg)
-                pcodec, pstream = _encode_uint_stream(pos, cfg)
+                icodec, data = _encode_int_stream(ints)
+                pcodec, pstream = _encode_uint_stream(pos)
                 return ({"kind": "float", "codec": "alp", "e": e, "f": f,
                          "icodec": icodec, "pcodec": pcodec,
                          "n_exc": len(pos)},
                         {"DATA": data, "ALP_POS": pstream,
                          "ALP_EXC": exc.tobytes()})
-        data = floats.bss_encode(vals) if fcodec == "bss" \
-            else vals.tobytes()
-        return {"kind": "float", "codec": fcodec}, {"DATA": data}
+        return {"kind": "float", "codec": "raw"}, {"DATA": vals.tobytes()}
 
     if pa.types.is_timestamp(typ):
         us = np.asarray(arr.cast(pa.int64())).astype(np.int64, copy=False)
         secs, nanos = timestamps.split_micros(us)
-        codec, data = _encode_int_stream(secs, cfg)
+        codec, data = _encode_int_stream(secs)
         packed = timestamps.encode_nanos(nanos)
-        ncodec, sec_stream = _encode_uint_stream(packed, cfg)
+        ncodec, sec_stream = _encode_uint_stream(packed)
         return (
             {"kind": "timestamp", "codec": codec, "ncodec": ncodec},
             {"DATA": data, "SECONDARY": sec_stream},
@@ -234,7 +236,7 @@ def _encode_values(arr: pa.Array, cfg: dict, cache: dict | None = None,
                             offset=arr.offset * np.dtype(odt).itemsize).astype(np.int64)
         lengths = np.diff(off)
         child = arr.values[off[0]: off[-1]] if n else arr.values[:0]
-        lcodec, lstream = _encode_uint_stream(lengths.view(np.uint64), cfg)
+        lcodec, lstream = _encode_uint_stream(lengths.view(np.uint64))
         cmeta, cstreams = encode_column(f"{name}.item", child, cfg, cache)
         streams = {"LENGTH": lstream}
         for k, v in cstreams.items():
@@ -251,7 +253,7 @@ def _encode_values(arr: pa.Array, cfg: dict, cache: dict | None = None,
         lengths = np.diff(off)
         keys = arr.keys[off[0]: off[-1]] if n else arr.keys[:0]
         items = arr.items[off[0]: off[-1]] if n else arr.items[:0]
-        lcodec, lstream = _encode_uint_stream(lengths.view(np.uint64), cfg)
+        lcodec, lstream = _encode_uint_stream(lengths.view(np.uint64))
         kmeta, kstreams = encode_column(f"{name}.key", keys, cfg, cache)
         vmeta, vstreams = encode_column(f"{name}.value", items, cfg, cache)
         streams = {"LENGTH": lstream}
@@ -319,8 +321,8 @@ def _encode_values(arr: pa.Array, cfg: dict, cache: dict | None = None,
         ).reshape(n, 2)
         lo = np.ascontiguousarray(limbs[:, 0])
         hi = np.ascontiguousarray(limbs[:, 1]).view(np.int64)
-        lcodec, lstream = _encode_uint_stream(lo, cfg)
-        hcodec, hstream = _encode_int_stream(hi, cfg)
+        lcodec, lstream = _encode_uint_stream(lo)
+        hcodec, hstream = _encode_int_stream(hi)
         return (
             {"kind": "decimal", "locodec": lcodec, "hicodec": hcodec},
             {"DATA": lstream, "SECONDARY": hstream},
@@ -335,16 +337,20 @@ def _encode_values(arr: pa.Array, cfg: dict, cache: dict | None = None,
 def _encode_string(arr: pa.Array, cfg: dict, cache: dict | None = None,
                    name: str = "") -> tuple[dict, dict[str, bytes]]:
     data, lengths = string_parts(arr)
+    comp = cfg.get("compression", "none")
+    lvl = cfg.get("compression_level")
     choice = cfg.get("string_codec", "auto")
+    if choice not in STRING_CODECS:
+        raise ValueError(f"unknown string_codec {choice!r}")
+    trial_fc = None  # the selector's front-coding verdict, when it ran
     if choice == "auto":
         # decide once per column per task (sampled measurement is stable
         # across stripes of the same partition)
         ckey = ("strchoice", name)
         choice = cache.get(ckey) if cache is not None else None
         if choice is None:
-            choice, trial_table = selector.choose_string_codec(
-                arr, data, ("dict", "fsst", "direct"),
-                cfg.get("compression", "none"), cfg.get("compression_level"))
+            choice, trial_table, trial_fc = selector.choose_string_codec(
+                arr, data, ("dict", "fsst", "direct"), comp, lvl)
             # FSST is no candidate below its floor: caching that
             # verdict would lock FSST out for the rest of the task
             if cache is not None and data.nbytes >= selector.FSST_MIN_BYTES:
@@ -355,8 +361,8 @@ def _encode_string(arr: pa.Array, cfg: dict, cache: dict | None = None,
                     cache[("fsst", name)] = trial_table
     if choice == "dict":
         idx, dlens, ddata = dictionary_encode_sorted(arr)
-        icodec, istream = _encode_uint_stream(idx, cfg)
-        lcodec, lstream = _encode_uint_stream(dlens.view(np.uint64), cfg)
+        icodec, istream = _encode_uint_stream(idx)
+        lcodec, lstream = _encode_uint_stream(dlens.view(np.uint64))
         meta = {"kind": "str", "enc": "dict", "icodec": icodec,
                 "lcodec": lcodec, "card": int(dlens.size)}
         streams = {"DATA": istream, "LENGTH": lstream,
@@ -365,16 +371,8 @@ def _encode_string(arr: pa.Array, cfg: dict, cache: dict | None = None,
         # codec (sorted URL/path dictionaries: measured 64% smaller
         # post-zstd; random-bytes dictionaries: refused here)
         plens, sdata = front_code(dlens, ddata)
-        pcodec, pstream = _encode_uint_stream(plens, cfg)
-        comp = cfg.get("compression", "none")
-        lvl = cfg.get("compression_level")
-
-        def outer(b: bytes) -> int:
-            return len(block.compress(b, comp, lvl)) if comp != "none" \
-                and b else len(b)
-
-        if outer(sdata.tobytes()) + len(pstream) \
-                < 0.95 * outer(ddata.tobytes()):
+        pcodec, pstream = _encode_uint_stream(plens)
+        if selector.front_code_wins(ddata, sdata, pstream, comp, lvl):
             meta.update(fc=True, pcodec=pcodec)
             streams["DICTIONARY_DATA"] = sdata.tobytes()
             streams["PREFIX"] = pstream
@@ -388,66 +386,39 @@ def _encode_string(arr: pa.Array, cfg: dict, cache: dict | None = None,
             cache[("fsst", name)] = table_obj
         table, payload = fsst_codec.compress(data, table_obj)
         if len(payload) + len(table) < data.nbytes * 0.95:
-            lcodec, lstream = _encode_uint_stream(lengths.view(np.uint64), cfg)
+            lcodec, lstream = _encode_uint_stream(lengths.view(np.uint64))
             return (
                 {"kind": "str", "enc": "fsst", "lcodec": lcodec},
                 {"DATA": payload, "LENGTH": lstream, "FSST_TABLE": table},
             )
         choice = "direct"  # incompressible escape
-    lcodec, lstream = _encode_uint_stream(lengths.view(np.uint64), cfg)
+    lcodec, lstream = _encode_uint_stream(lengths.view(np.uint64))
     meta = {"kind": "str", "enc": "direct", "lcodec": lcodec}
     streams = {"DATA": data.tobytes(), "LENGTH": lstream}
-    # front-code the VALUE stream when it wins under the outer codec —
-    # the payoff case is a stripe-locally sorted key column
-    # (config["sort_within"] layouts): consecutive urls share long
-    # prefixes that zstd's match finder only partially recovers. The
-    # trial is SAMPLE-BOUNDED (first ~512 KiB of values, like the
-    # selector's estimates): a full-stream trial cost ~35% of the whole
-    # encode kernel when every task sees one stripe (fresh cache per
-    # task — exactly the bench / wide-cluster layout), and a prefix of
-    # a sorted run is the same distribution as the run. The verdict is
-    # still cached per (column, task) like the string-codec choice.
+    # front-code the VALUE stream when selector.direct_trial says so:
+    # its verdict is cached per (column, task), and the trial runs here
+    # only when the selector did not run on this stripe
     fckey = ("directfc", name)
     fc = cache.get(fckey) if cache is not None else None
-    if not cfg.get("string_fc", True):
-        fc = False
     if len(lengths) < 2:
-        fc = False  # a single string cannot front-code (and k-clamping
-        #             below assumes >= 2 sampled values)
-    # ONE measuring rule for both the trial and the verification below
-    # — two drifting copies would reintroduce inconsistent verdicts
-    comp = cfg.get("compression", "none")
-    lvl = cfg.get("compression_level")
-
-    def outer(b: bytes) -> int:
-        return len(block.compress(b, comp, lvl)) if comp != "none" \
-            and b else len(b)
-
-    if fc is None and data.nbytes >= COMPRESSION_MIN_BYTES:
-        lens64 = lengths.astype(np.int64)
-        csum = np.cumsum(lens64)
-        cap = 1 << 19
-        k = int(np.searchsorted(csum, cap, side="right")) + 1
-        k = min(len(lens64), max(2, k))
-        nb = int(csum[k - 1])
-        plens_s, sdata_s = front_code(lens64[:k], data[:nb])
-        _, pstream_s = _encode_uint_stream(plens_s, cfg)
-        fc = (outer(sdata_s.tobytes()) + len(pstream_s)
-              < 0.95 * outer(data[:nb].tobytes()))
+        fc = False  # a single string cannot front-code
+    if fc is None and data.nbytes >= selector.FC_MIN_BYTES:
+        fc = trial_fc if trial_fc is not None else \
+            selector.direct_trial(data, lengths, comp, lvl)[0]
         if cache is not None:
             cache[fckey] = fc
     if fc:
         plens, sdata = front_code(lengths.astype(np.int64), data)
-        pcodec, pstream = _encode_uint_stream(plens, cfg)
+        pcodec, pstream = _encode_uint_stream(plens)
         vkey = ("directfc_verified", name)
         if cache is not None and not cache.get(vkey):
-            # the trial above measured only a ~512 KiB prefix; verify
-            # the verdict ONCE per (column, task) against this full
-            # stripe and drop fc when the real streams are not smaller
-            # — a prefix-sorted / tail-shuffled column could otherwise
-            # lock in an inflating fc=True for the whole task
-            if outer(sdata.tobytes()) + len(pstream) \
-                    >= 0.95 * outer(data.tobytes()):
+            # the trial measured only a ~512 KiB prefix; verify the
+            # verdict ONCE per (column, task) against this full stripe
+            # and drop fc when the real streams are not smaller — a
+            # prefix-sorted / tail-shuffled column could otherwise lock
+            # in an inflating fc=True for the whole task
+            if not selector.front_code_wins(data, sdata, pstream,
+                                            comp, lvl):
                 cache[fckey] = fc = False
             else:
                 cache[vkey] = True
@@ -489,6 +460,8 @@ def _decode_values(meta: dict, streams: dict[str, bytes], n: int,
     if kind == "float":
         dt = np.dtype("<f4") if pa.types.is_float32(typ) else np.dtype("<f8")
         fcodec = meta.get("codec", "raw")       # pre-BSS stripes: raw
+        if fcodec not in ("raw", "bss", "alp", "alp_rd"):
+            raise ValueError(f"unknown float codec {fcodec!r}")
         if fcodec == "alp_rd":
             right = bitpack.unpack_width(_buf(streams["DATA"]), n,
                                          meta["r"])
@@ -506,7 +479,7 @@ def _decode_values(meta: dict, streams: dict[str, bytes], n: int,
                                       meta["pcodec"], meta["n_exc"])
             vals = alp.decode(ints, meta["e"], meta["f"], pos,
                               streams["ALP_EXC"], dt)
-        elif fcodec == "bss":
+        elif fcodec == "bss":  # stored v3 stripes
             vals = floats.bss_decode(streams["DATA"], n, dt.itemsize)
         else:
             vals = np.frombuffer(streams["DATA"], dtype=dt, count=n)
@@ -697,11 +670,9 @@ def encode_stripe(batch: pa.RecordBatch, cfg: dict | None = None,
     # stripe FORMAT version: bump on any incompatible payload-layout
     # change so resumed runs over persisted stripe dirs fail loudly
     # instead of mis-decoding. v2 = FSST piece framing (u32 piece count
-    # + per-piece lengths). v3 = byte-stream-split float payloads —
-    # written ONLY when a column actually uses BSS, so BSS-free stripes
-    # stay v2 and remain readable by pre-BSS readers (a pre-BSS reader
-    # would otherwise frombuffer the transposed planes as raw floats
-    # and return garbage silently).
+    # + per-piece lengths). v3 = byte-stream-split float payloads, no
+    # longer written but still read. v4 is written ONLY when a column
+    # needs it, so other stripes stay readable by older readers.
     def _needs_v4(m) -> bool:
         # ALP / ALP-RD float payloads and front-coded dictionaries are
         # all round-5 layouts a v2/v3 reader would mis-decode silently
@@ -713,20 +684,9 @@ def encode_stripe(batch: pa.RecordBatch, cfg: dict | None = None,
             return any(_needs_v4(v) for v in m)
         return False
 
-    def _has_codec(m, want: str) -> bool:
-        if isinstance(m, dict):
-            return m.get("codec") == want or any(
-                _has_codec(v, want) for v in m.values())
-        if isinstance(m, (list, tuple)):
-            return any(_has_codec(v, want) for v in m)
-        return False
-
-    if any(_needs_v4(c["meta"]) for c in columns):
-        fmt_version = ALP_FORMAT_VERSION
-    elif any(_has_codec(c["meta"], "bss") for c in columns):
-        fmt_version = BSS_FORMAT_VERSION
-    else:
-        fmt_version = STRIPE_FORMAT_VERSION
+    fmt_version = (ALP_FORMAT_VERSION
+                   if any(_needs_v4(c["meta"]) for c in columns)
+                   else STRIPE_FORMAT_VERSION)
     footer = {
         "v": fmt_version,
         "n_rows": batch.num_rows,

@@ -106,8 +106,9 @@ def main() -> None:
                          "BENCH/BASELINE.md)")
     ap.add_argument("--string-codec", default="auto")
     ap.add_argument("--float-codec", default="auto",
-                    choices=["auto", "raw", "bss", "alp"],
-                    help="auto = measured raw/BSS/ALP argmin per column")
+                    choices=["auto", "raw", "alp"],
+                    help="auto = measured raw/ALP/ALP-RD argmin per "
+                         "column; raw or alp forces that codec")
     ap.add_argument("--sort-within", default=None, metavar="COLS",
                     help="comma-separated key(s): cluster rows inside "
                          "each stripe before encoding (codec-friendly "

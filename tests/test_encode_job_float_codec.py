@@ -1,5 +1,5 @@
 """scripts/encode_job.py --float-codec: the ship path reaches the ALP/
-BSS/raw knob, the choice lands in persisted stripe footers, and the
+raw knob, the choice lands in persisted stripe footers, and the
 resume config-guard treats a codec change as a different job."""
 
 import glob

@@ -85,17 +85,6 @@ def test_orcfile_roundtrip_documents_still_oracle_exact(spark, oracle):
     assert n > 0
 
 
-def test_roundtrip_rle1_lineitem_still_oracle_exact(spark, oracle):
-    """Swapped out of the gate (round 5 session 6, for
-    decontam_documents); pinned here — RLE1 also stays covered by the
-    ORC-spec goldens and the C<->numpy roundtrip properties."""
-    n = _compare(spark, oracle, "roundtrip_rle1_lineitem",
-                 query_fn=e._mk_roundtrip("lineitem",
-                                          {"int_codec": "rle1"}),
-                 oracle_sql=e._select_sql("lineitem"))
-    assert n > 0
-
-
 def test_orcfile_cpp_read_documents_still_oracle_exact(spark, oracle):
     """Swapped out of the gate (round 5 session 6, for
     pack_plan_documents); pinned here — the C++-written string/dict ORC

@@ -1,16 +1,42 @@
-"""Byte-stream-split float codec (codecs/floats.py + selector wiring):
-bit-exact roundtrips, measured selection, stripe integration, and
-backward compatibility with pre-BSS stripes."""
+"""Layouts the stripe encoder no longer writes but still reads:
+byte-stream-split float planes (codecs/floats.py, format v3) and RLEv1
+integer streams. Stored stripes of both kinds are built here by hand
+and must decode bit-exactly; the encoder must never produce them."""
 
 from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from orc_haskell_spark import stripe
-from orc_haskell_spark.codecs import floats, selector
+from orc_haskell_spark.codecs import floats, rle1, selector
+
+
+def _bits(a) -> np.ndarray:
+    return np.asarray(a).view(np.uint8)
+
+
+def _rebuild(footer: dict, payload: bytes, col: str, meta: dict,
+             streams: dict[str, bytes], version: int):
+    """The stripe with column ``col``'s meta and the given streams
+    replaced, laid out again. ``footer`` must come from an uncompressed
+    encode."""
+    out = bytearray()
+    for c in footer["columns"]:
+        old = {e["k"]: payload[e["o"]: e["o"] + e["l"]]
+               for e in c["streams"]}
+        if c["name"] == col:
+            c["meta"], old = meta, {**old, **streams}
+        c["streams"] = []
+        for k, data in old.items():
+            c["streams"].append({"k": k, "o": len(out), "l": len(data),
+                                 "c": "none"})
+            out += data
+    footer["v"] = version
+    return footer, bytes(out)
 
 
 @given(st.lists(st.floats(allow_nan=True, allow_infinity=True,
@@ -33,11 +59,15 @@ def test_choose_raw_without_outer_compression():
     assert selector.choose_float_codec(vals[:10], "zlib") == "raw"  # tiny
 
 
-def test_choose_bss_when_it_wins():
-    # normal-distributed f4 under zlib: BSS groups the skewed
-    # sign/exponent bytes into compressible planes (measured ~7% win)
+def test_selector_never_picks_bss():
+    # normal-distributed f4 under zlib: the data on which BSS used to
+    # win (~7%); it is no candidate now, and cannot be forced either
     vals = np.random.default_rng(1).normal(size=100000).astype("<f4")
-    assert selector.choose_float_codec(vals, "zlib", 6) == "bss"
+    for comp, lvl in (("zlib", 6), ("zstd", 3), ("none", None)):
+        assert selector.choose_float_codec(vals, comp, lvl) != "bss"
+    with pytest.raises(ValueError, match="float_codec"):
+        stripe.encode_column("x", pa.array(vals), dict(
+            stripe.DEFAULT_CONFIG, float_codec="bss"))
 
 
 def test_stripe_roundtrip_records_codec_and_is_bit_exact():
@@ -46,18 +76,10 @@ def test_stripe_roundtrip_records_codec_and_is_bit_exact():
     arr = pa.array(vals, type=pa.float32())
     cfg = dict(stripe.DEFAULT_CONFIG, compression="zlib")
     meta, streams = stripe.encode_column("x", arr, cfg)
-    assert meta["codec"] == "bss"
+    assert meta["codec"] == selector.choose_float_codec(
+        vals, "zlib", cfg["compression_level"])
     dec = stripe.decode_column(meta, streams, pa.float32())
-    assert np.array_equal(np.asarray(dec).view(np.uint8),
-                          vals.view(np.uint8))
-    # BSS stream must be smaller once the outer block layer compresses
-    raw_meta, raw_streams = stripe.encode_column(
-        "x", arr, dict(stripe.DEFAULT_CONFIG, compression="none",
-                       float_codec="raw"))
-    assert raw_meta["codec"] == "raw"
-    import zlib
-    assert len(zlib.compress(streams["DATA"], 6)) < \
-        len(zlib.compress(raw_streams["DATA"], 6)) * 0.97
+    assert np.array_equal(_bits(dec), _bits(vals))
 
 
 def test_pre_bss_stripes_still_decode():
@@ -72,20 +94,60 @@ def test_pre_bss_stripes_still_decode():
 
 
 def test_bss_stripes_carry_format_v3():
-    """Stripes containing BSS float payloads must be versioned so a
-    pre-BSS reader (exact v2 check) rejects them loudly instead of
-    frombuffer-ing transposed planes as raw floats."""
+    """A stored v3 stripe of BSS planes (nulls and NaN payloads
+    included) decodes bit-exactly; encoding the same rows writes no
+    BSS and no v3."""
     rng = np.random.default_rng(3)
-    fl = pa.record_batch({"x": pa.array(
-        rng.normal(size=60000).astype("<f4"), type=pa.float32())})
-    footer, payload = stripe.encode_stripe(
-        fl, dict(stripe.DEFAULT_CONFIG, compression="zlib"))
-    assert footer["v"] == stripe.BSS_FORMAT_VERSION
+    for dt in ("<f4", "<f8"):
+        vals = rng.normal(size=5000).astype(dt)
+        vals.view(f"<u{vals.itemsize}")[7] = (  # a NaN with a payload
+            0x7FC00123 if vals.itemsize == 4 else 0x7FF8DEADBEEF0001)
+        mask = rng.random(5000) < 0.1
+        batch = pa.record_batch({"x": pa.array(vals, mask=mask),
+                                 "y": pa.array(np.arange(5000))})
+        footer, payload = stripe.encode_stripe(
+            batch, dict(stripe.DEFAULT_CONFIG, compression="none",
+                        float_codec="raw"))
+        meta = dict(footer["columns"][0]["meta"], codec="bss")
+        footer, payload = _rebuild(
+            footer, payload, "x", meta,
+            {"DATA": floats.bss_encode(vals[~mask])},
+            stripe.BSS_FORMAT_VERSION)
+        got = stripe.decode_stripe(footer, payload)
+        assert got.column("x").is_null().to_pylist() == mask.tolist()
+        assert np.array_equal(_bits(got.column("x").drop_null()),
+                              _bits(vals[~mask]))
+        assert got.column("y").equals(batch.column("y"))
+
+        enc, _ = stripe.encode_stripe(batch, dict(stripe.DEFAULT_CONFIG,
+                                                  compression="zlib"))
+        assert enc["columns"][0]["meta"]["codec"] != "bss"
+        assert enc["v"] != stripe.BSS_FORMAT_VERSION
+
+
+def test_legacy_rle1_stripe_decodes():
+    """Stored stripes whose integer and length streams are RLEv1 (the
+    reference writer's layout) decode bit-exactly; new stripes write
+    RLEv2 only."""
+    rng = np.random.default_rng(4)
+    ints = rng.integers(-10**12, 10**12, 3000)
+    ints[:500] = 42  # a run
+    strs = [f"s{int(v) % 97}" * (int(v) % 5) for v in ints]
+    batch = pa.record_batch({"i": pa.array(ints), "s": pa.array(strs)})
+    cfg = dict(stripe.DEFAULT_CONFIG, compression="none",
+               string_codec="direct")
+    footer, payload = stripe.encode_stripe(batch, cfg)
+    metas = [c["meta"] for c in footer["columns"]]
+    assert metas[0]["codec"] == "rle2" and metas[1]["lcodec"] == "rle2"
+    lengths = np.array([len(s.encode()) for s in strs], np.uint64)
+    footer, payload = _rebuild(
+        footer, payload, "i", dict(metas[0], codec="rle1"),
+        {"DATA": rle1.encode(ints, True)}, stripe.STRIPE_FORMAT_VERSION)
+    footer, payload = _rebuild(
+        footer, payload, "s",
+        {"n": len(strs), "kind": "str", "enc": "direct", "lcodec": "rle1"},
+        {"DATA": "".join(strs).encode(),
+         "LENGTH": rle1.encode(lengths, False)},
+        stripe.STRIPE_FORMAT_VERSION)
     got = stripe.decode_stripe(footer, payload)
-    assert np.array_equal(np.asarray(got.column("x")).view(np.uint8),
-                          np.asarray(fl.column("x")).view(np.uint8))
-    # BSS-free stripes stay v2 (readable by pre-BSS readers)
-    ints = pa.record_batch({"y": pa.array([1, 2, 3], pa.int64())})
-    footer2, _ = stripe.encode_stripe(
-        ints, dict(stripe.DEFAULT_CONFIG, compression="zlib"))
-    assert footer2["v"] == stripe.STRIPE_FORMAT_VERSION
+    assert got.equals(batch)

@@ -165,18 +165,18 @@ def test_direct_fc_wire_win_on_sorted_urls():
     urls = sorted(f"https://www.host-{i % 37:03d}.example.org/c/"
                   f"{i:06d}/page.html" for i in range(8000))
     tbl = pa.table({"url": urls})
-    import json as _json
 
     from orc_haskell_spark import stripe as stripe_mod
-    _, p_fc = stripe_mod.encode_stripe(
+    from orc_haskell_spark.codecs import block
+    footer, p_fc = stripe_mod.encode_stripe(
         tbl.to_batches()[0], {"compression": "zstd",
                               "string_codec": "direct"}, cache={})
-    # control: same codec + same outer compression, fc trial disabled
-    _, p_plain = stripe_mod.encode_stripe(
-        tbl.to_batches()[0], {"compression": "zstd",
-                              "string_codec": "direct",
-                              "string_fc": False}, cache={})
-    assert len(p_fc) < len(p_plain), (len(p_fc), len(p_plain))
+    col = footer["columns"][0]
+    assert col["meta"].get("fc") is True
+    sizes = {e["k"]: e["l"] for e in col["streams"]}
+    # control: the plain value stream under the same outer compression
+    plain = len(block.compress("".join(urls).encode(), "zstd", 3))
+    assert sizes["DATA"] + sizes["PREFIX"] < plain, (sizes, plain)
 
 
 def test_nullable_direct_fc_roundtrip():

@@ -183,6 +183,39 @@ def test_read_stream_encoded_missing_ledger(spark, tmp_path):
     assert out.columns == df.columns
 
 
+def test_corrupt_ledger_part_fails_the_sink(spark, tmp_path):
+    """A ledger that exists but cannot be read is not "nothing done":
+    the next micro-batch must fail instead of re-encoding batches the
+    ledger may already hold."""
+    import os
+
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    src, out = str(tmp_path / "landing"), str(tmp_path / "encoded")
+    ckpt = str(tmp_path / "ckpt")
+    gen.pages_df(spark, 200, 1).write.parquet(src)
+    schema = spark.read.parquet(src).schema
+
+    def run():
+        q = streaming.stream_encode(
+            spark.readStream.schema(schema).parquet(src), out,
+            checkpoint=ckpt, stripe_rows=100)
+        q.awaitTermination(120)
+        return q
+
+    assert run().exception() is None
+    with open(os.path.join(out, "ledger", "part-corrupt.parquet"),
+              "wb") as f:
+        f.write(b"PAR1 this is not a parquet footer PAR1")
+    gen.pages_df(spark, 200, 1).write.mode("append").parquet(src)
+    time.sleep(0.2)
+    with pytest.raises(StreamingQueryException):
+        run()
+    stripes = spark.read.parquet(os.path.join(out, "stripes"))
+    assert stripes.select("batch_id").distinct().count() == 1
+
+
 def test_sessionize_stream_buffers_until_watermark(spark, tmp_path):
     """A session closed by a gap WITHIN a batch must stay buffered until
     the watermark passes its close time: an out-of-order event arriving

@@ -74,9 +74,51 @@ def test_compression_kinds(comp):
     roundtrip(_mixed_batch(500, nulls=True), {"compression": comp})
 
 
+def _meta_values(m, key):
+    """Every value of ``key`` in a (nested) column meta."""
+    if isinstance(m, dict):
+        return ([m[key]] if key in m else []) + [
+            v for x in m.values() for v in _meta_values(x, key)]
+    if isinstance(m, list):
+        return [v for x in m for v in _meta_values(x, key)]
+    return []
+
+
 @pytest.mark.parametrize("int_codec", ["rle1", "rle2"])
 def test_int_codecs(int_codec):
-    roundtrip(_mixed_batch(500), {"int_codec": int_codec})
+    """``int_codec`` is no longer a config key: whatever it asks for,
+    every integer stream is written RLEv2 (RLEv1 is read only)."""
+    batch = _mixed_batch(500)
+    footer, _ = stripe.encode_stripe(batch, {"int_codec": int_codec})
+    codecs = {v for c in footer["columns"]
+              for key in ("codec", "ncodec", "lcodec", "icodec", "pcodec")
+              for v in _meta_values(c["meta"], key)}
+    assert "rle1" not in codecs and "rle2" in codecs
+    roundtrip(batch, {"int_codec": int_codec})
+
+
+def test_decoder_rejects_unknown_codecs():
+    for col in (np.arange(100), np.linspace(0, 1, 100)):
+        footer, payload = stripe.encode_stripe(
+            pa.record_batch({"c": pa.array(col)}), {"float_codec": "raw"})
+        footer["columns"][0]["meta"]["codec"] = "rle3"
+        with pytest.raises(ValueError, match="rle3"):
+            stripe.decode_stripe(footer, payload)
+    meta, streams = stripe.encode_column("s", pa.array(["a", "b"] * 50),
+                                         stripe.DEFAULT_CONFIG)
+    meta[next(k for k in meta if k.endswith("codec"))] = "zz"
+    with pytest.raises(ValueError, match="zz"):
+        stripe.decode_column(meta, streams, pa.string())
+
+
+@pytest.mark.parametrize("cfg", [{"float_codec": "bss"},
+                                 {"float_codec": "alp2"},
+                                 {"string_codec": "front"}])
+def test_encoder_rejects_unknown_forced_codecs(cfg):
+    batch = pa.record_batch({"f": pa.array([1.5, 2.5]),
+                             "s": pa.array(["a", "b"])})
+    with pytest.raises(ValueError, match=next(iter(cfg))):
+        stripe.encode_stripe(batch, cfg)
 
 
 @pytest.mark.parametrize("string_codec", ["direct", "dict", "fsst", "auto"])

@@ -55,14 +55,14 @@ def test_worker_setup_drops_zip_finders(tmp_path, monkeypatch):
         pa.set_io_thread_count(threads[1])
 
 
-def test_reused_workers_hold_no_zip_finders(spark, tmp_path, monkeypatch):
-    """A fused encode, then fused decodes: each task records its worker's
-    pid and zip finder count before the package's worker loop (and so
-    ``worker_setup``) runs. A worker that already ran a task of this test
-    must start the next one with no zip finder left to re-read."""
+def _probe_reuse(spark, tmp_path, monkeypatch, first_job, next_job):
+    """Run ``first_job`` once, then ``next_job`` until some worker runs
+    a second task, with a probe around ``sources._bucket_fn`` (every
+    fused scan's task entry) that records the worker's pid and zip
+    finder count before the package's worker loop, and so
+    ``worker_setup``, runs. A worker that already ran a task of this
+    test must start the next one with no zip finder left to re-read."""
     log = str(tmp_path / "probe.log")
-    src, enc_dir = str(tmp_path / "pages"), str(tmp_path / "enc")
-    gen.pages_df(spark, 2000, 4).write.parquet(src)
     bucket_fn = sources._bucket_fn
 
     def probed(fn, buckets, schema):
@@ -84,19 +84,16 @@ def test_reused_workers_hold_no_zip_finders(spark, tmp_path, monkeypatch):
         return probe
 
     monkeypatch.setattr(sources, "_bucket_fn", probed)
-    engine.encode_parquet(spark, src, stripe_rows=500,
-                          num_partitions=4).write.parquet(enc_dir)
 
     def records():
         with open(log) as f:
             return [tuple(map(int, line.split())) for line in f]
 
+    first_job()
     if not any(zipped for _pid, _n, zipped in records()):
         pytest.skip("the workers do not import PySpark from a zip")
-    schema = spark.read.parquet(src).schema
     for _ in range(6):  # idle workers are handed out in turn
-        engine.decode_table(spark.read.parquet(enc_dir), schema) \
-            .write.format("noop").mode("overwrite").save()
+        next_job()
         seen, reused = set(), []
         for pid, n, _zipped in records():
             if pid in seen:
@@ -106,3 +103,46 @@ def test_reused_workers_hold_no_zip_finders(spark, tmp_path, monkeypatch):
             break
     assert reused, "no worker ran two tasks"
     assert all(n == 0 for _pid, n in reused), reused
+
+
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def test_reused_workers_hold_no_zip_finders(spark, tmp_path, monkeypatch):
+    """A fused encode, then fused decodes."""
+    src, enc_dir = str(tmp_path / "pages"), str(tmp_path / "enc")
+    gen.pages_df(spark, 2000, 4).write.parquet(src)
+    schema = spark.read.parquet(src).schema
+    _probe_reuse(
+        spark, tmp_path, monkeypatch,
+        lambda: engine.encode_parquet(spark, src, stripe_rows=500,
+                                      num_partitions=4)
+        .write.parquet(enc_dir),
+        lambda: _noop(engine.decode_table(spark.read.parquet(enc_dir),
+                                          schema)))
+
+
+def test_reused_orc_workers_hold_no_zip_finders(spark, tmp_path,
+                                                monkeypatch):
+    """Stripe-parallel ORC reads (``read_orc_distributed``)."""
+    from orc_haskell_spark.orcfile.spark_source import (
+        read_orc_distributed, write_orc_distributed)
+
+    d = str(tmp_path / "orc")
+    write_orc_distributed(gen.pages_df(spark, 2000, 4), d,
+                          compression="ZSTD", stripe_rows=250).collect()
+    job = lambda: _noop(read_orc_distributed(spark, d))  # noqa: E731
+    _probe_reuse(spark, tmp_path, monkeypatch, job, job)
+
+
+def test_reused_warc_workers_hold_no_zip_finders(spark, tmp_path,
+                                                 monkeypatch):
+    """WARC chunk scans (``read_warc``), with main-content extraction."""
+    from orc_haskell_spark import warc
+
+    d = str(tmp_path / "warc")
+    warc.write_warc(gen.pages_df(spark, 400, 4), d).collect()
+    job = lambda: _noop(warc.read_warc(spark, d, num_partitions=4,  # noqa
+                                       extract="main"))
+    _probe_reuse(spark, tmp_path, monkeypatch, job, job)
