@@ -264,7 +264,7 @@ def simhash_pairs(df: DataFrame, id_col: str, text_col: str,
     mask = (1 << band_bits) - 1
     # no cache: the band self-join's two shuffle subtrees are identical,
     # so Spark's exchange reuse computes the signatures ONCE and reads
-    # the shuffle twice (asserted in tests/test_pipeline.py). The old
+    # the shuffle twice (asserted in tests/test_plans.py). The old
     # .cache() was never unpersisted and leaked executor memory in
     # long-lived sessions.
     s = simhash(_spread(df), id_col, text_col)
@@ -285,18 +285,20 @@ def simhash_pairs(df: DataFrame, id_col: str, text_col: str,
             .distinct())
     hamming = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
     cand = cand.withColumn("hamming", hamming).filter(
-        F.col("hamming") <= max_hamming).localCheckpoint(eager=False)
-    # tokenize only documents appearing in a surviving candidate
-    cand_ids = (cand.select(F.col("id_a").alias(id_col))
-                .union(cand.select(F.col("id_b").alias(id_col)))
-                .distinct())
-    tok = (df.join(cand_ids, id_col, "leftsemi")
-           .select(F.col(id_col),
-                   F.array_distinct(F.split(F.col(text_col), TOKEN_SPLIT))
-                   .alias("tk")))
-    return (cand
-            .join(tok.selectExpr(f"{id_col} as id_a", "tk as tk_a"), "id_a")
-            .join(tok.selectExpr(f"{id_col} as id_b", "tk as tk_b"), "id_b")
+        F.col("hamming") <= max_hamming)
+    # tokenize after the pair joins, so only documents in a surviving
+    # candidate are tokenized and cand is computed once without being
+    # persisted
+    def side(ab: str) -> DataFrame:
+        return df.select(F.col(id_col).alias(f"id_{ab}"),
+                         F.col(text_col).alias(f"text_{ab}"))
+
+    def tokens(ab: str):
+        return (F.array_distinct(F.split(F.col(f"text_{ab}"), TOKEN_SPLIT))
+                .alias(f"tk_{ab}"))
+
+    return (cand.join(side("a"), "id_a").join(side("b"), "id_b")
+            .select("id_a", "id_b", "hamming", tokens("a"), tokens("b"))
             .withColumn("jacc", F.size(F.array_intersect("tk_a", "tk_b")) / (
                 F.size("tk_a") + F.size("tk_b")
                 - F.size(F.array_intersect("tk_a", "tk_b"))))

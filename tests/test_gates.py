@@ -125,9 +125,16 @@ def test_concurrent_kernel_scaling():
     big = (txt * (12_000_000 // len(txt) + 1))[:12_000_000].encode()
     mb = len(big) / 1e6
 
+    # Worker counts follow the cores this process may use (16 and 4 on a
+    # host with 16 or more): workers past the core count only time-slice,
+    # and the per-worker throughput sum then measures the scheduler, not
+    # the kernel's working set.
+    hi = min(16, len(os.sched_getaffinity(0)))
+    lo = max(1, hi // 4)
+
     def measure() -> dict:
         agg = {}
-        for nproc in (4, 16):
+        for nproc in (lo, hi):
             barrier = ctx.Barrier(nproc)
             out = ctx.Array("d", nproc)
             ps = [ctx.Process(target=_fsst_barrier_worker,
@@ -142,9 +149,9 @@ def test_concurrent_kernel_scaling():
     # One re-measure on failure: a co-tenant burst during either leg
     # skews the ratio both ways; a REAL collapse fails twice in a row.
     agg = measure()
-    if not agg[16] > 1.5 * agg[4]:
+    if not agg[hi] > 1.5 * agg[lo]:
         agg = measure()
-    assert agg[16] > 1.5 * agg[4], agg
+    assert agg[hi] > 1.5 * agg[lo], agg
 
 
 def test_constant_memory_orc_write():
